@@ -862,14 +862,13 @@ object SparkEntry {
       .read(spark, bpeMergesRoot(spark, dir))
       .orderBy("round").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    // ONE persisted encode pass feeds both the budget scalar and the
-    // allocation plan (it previously ran separately for each — plus
-    // twice more inside the running sum's sampler; 4 corpus encodes
-    // total, now 1). Zero-token docs contribute 0 to the sum and are
-    // filtered inside the allocation, so the budget is unchanged.
-    val lens = graft.CacheScope.persisted(
-      graft.text.Bpe.encode(docs, "doc_id", "text", merges)
-        .select(col("doc_id"), col("n_bpe_tokens").as("n_tokens")))
+    // the budget scalar reads its own (cheap, native-kernel) encode
+    // pass; the allocation persists its filtered length table once,
+    // so the running sum's sampler never re-encodes. Zero-token docs
+    // contribute 0 to the sum and are filtered inside the
+    // allocation, so the budget is unchanged.
+    val lens = graft.text.Bpe.encode(docs, "doc_id", "text", merges)
+      .select(col("doc_id"), col("n_bpe_tokens").as("n_tokens"))
     val corpusTokens = lens.agg(sum("n_tokens")).head.getLong(0)
     graft.text.Curriculum.repeatAllocationFromLengths(lens, "doc_id",
       budget = corpusTokens * 3L + corpusTokens / 2L, maxRepeats = 4L,
@@ -3331,11 +3330,10 @@ object SparkEntry {
     * characters. The 8-round merge list trains ONCE and publishes
     * under the commit protocol (the q178/q179 storage posture —
     * encode jobs vastly outnumber train jobs); every encode run
-    * reads the stored list, and encoding is ONE narrow codegen'd
-    * map pass — the merge list is
-    * driver-bounded (≤ rounds rows), each word char-splits and the
-    * replaces apply in merge order inside a transform/aggregate fold,
-    * word boundaries structurally hard. No shuffle, no explode, no
+    * reads the stored list, and encoding is ONE narrow map pass
+    * through the native merge kernel (`graft_bpe_tokens`) — each
+    * word char-splits and the replaces apply in merge order, word
+    * boundaries structurally hard. No shuffle, no explode, no
     * join at any scale. Oracle: the generated q183 CTE chain learns
     * the same merges, applies the same replace chain at the (doc,
     * word) grain, and LEFT JOINs for totality — the hash covers

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -101,4 +102,155 @@ object GramBuckets {
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
       (out ++ bis).toArray)
   }
+}
+
+/** An ordered BPE merge list compiled to its literal replace pairs —
+  * the tokenizer [[BpeKernel]] applies. Prints as its size so a plan
+  * carrying a 64-merge list stays readable. */
+final case class BpeMerges(pairs: Seq[(String, String)]) {
+  private val find = pairs.map { case (l, r) => s" $l $r " }.toArray
+  private val fused = pairs.map { case (l, r) => s" $l$r " }.toArray
+
+  /** One word's post-merge symbols, by the merge chain's own string
+    * operations: pad every code point Java-regex `.` matches with a
+    * trailing space (line terminators stay glued to the next symbol,
+    * a surrogate pair is one code point), apply each merge as ONE
+    * leftmost non-overlapping literal replace in list order, strip
+    * ASCII spaces at both ends, split on single spaces keeping empty
+    * pieces. */
+  def symbolsOf(word: String): Array[UTF8String] = {
+    val sb = new java.lang.StringBuilder(2 * word.length + 1).append(' ')
+    var i = 0
+    while (i < word.length) {
+      val cp = word.codePointAt(i)
+      sb.appendCodePoint(cp)
+      if (!BpeMerges.isLineTerminator(cp)) sb.append(' ')
+      i += Character.charCount(cp)
+    }
+    var s = sb.toString
+    var m = 0
+    while (m < find.length) {
+      s = s.replace(find(m), fused(m))
+      m += 1
+    }
+    var a = 0
+    var b = s.length
+    while (a < b && s.charAt(a) == ' ') a += 1
+    while (b > a && s.charAt(b - 1) == ' ') b -= 1
+    s.substring(a, b).split(" ", -1).map(UTF8String.fromString)
+  }
+
+  override def toString: String = s"${pairs.length} merges"
+}
+
+object BpeMerges {
+  /** The code points Java-regex `.` does not match (no DOTALL, no
+    * UNIX_LINES). */
+  private def isLineTerminator(cp: Int): Boolean =
+    cp == '\n' || cp == '\r' || cp == 0x85 || cp == 0x2028 || cp == 0x2029
+}
+
+/** The BPE encode kernel: a document's words (maximal runs of
+  * non-space bytes — `split(text, ' ')` with the empties dropped) each
+  * map through [[BpeMerges.symbolsOf]], memoized per word. A word's
+  * symbols depend on nothing but the word once the merges are fixed,
+  * and corpora repeat words heavily, so the hot path is one hash
+  * lookup per word. One kernel lives per generated-code instance
+  * (one task's partition), so the memo is thread-confined; it is
+  * dropped whole when it reaches [[BpeKernel.MemoWords]] entries. */
+final class BpeKernel(merges: BpeMerges) {
+  private val memo = new java.util.HashMap[UTF8String, Array[UTF8String]]()
+
+  private def word(text: UTF8String, from: Int, until: Int): Array[UTF8String] = {
+    // look up through a view of the row's bytes; only a miss copies
+    val view = UTF8String.fromAddress(
+      text.getBaseObject, text.getBaseOffset + from, until - from)
+    val hit = memo.get(view)
+    if (hit != null) hit
+    else {
+      val syms = merges.symbolsOf(view.toString)
+      if (memo.size >= BpeKernel.MemoWords) memo.clear()
+      memo.put(view.copy(), syms)
+      syms
+    }
+  }
+
+  private def foreachWord(text: UTF8String)(f: Array[UTF8String] => Unit): Unit = {
+    val n = text.numBytes
+    var i = 0
+    while (i < n) {
+      if (text.getByte(i) == ' ') i += 1
+      else {
+        var j = i + 1
+        while (j < n && text.getByte(j) != ' ') j += 1
+        f(word(text, i, j))
+        i = j
+      }
+    }
+  }
+
+  /** Σ post-merge symbols over the document's words. */
+  def tokenCount(text: UTF8String): Long = {
+    var total = 0L
+    foreachWord(text)(syms => total += syms.length)
+    total
+  }
+
+  /** The document's post-merge symbols, word by word in order. */
+  def symbols(text: UTF8String): ArrayData = {
+    val out = new scala.collection.mutable.ArrayBuffer[Any](16)
+    foreachWord(text)(syms => out ++= syms)
+    new GenericArrayData(out.toArray)
+  }
+}
+
+object BpeKernel {
+  val MemoWords: Int = 1 << 14
+}
+
+/** The two native faces of [[BpeKernel]], replacing the
+  * `transform(filter(split(text)), w -> … replace(…) …)` merge chain,
+  * whose higher-order functions Spark only interprets (CodegenFallback).
+  * The generated code holds one kernel per partition and calls it
+  * inline; interpreted evaluation keeps one per expression instance.
+  * Null text gives null. */
+abstract class BpeExpression extends UnaryExpression {
+  def merges: BpeMerges
+  protected def method: String
+  protected def run(kernel: BpeKernel, text: UTF8String): Any
+
+  @transient private lazy val kernel = new BpeKernel(merges)
+
+  override protected def nullSafeEval(input: Any): Any =
+    run(kernel, input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[BpeKernel].getName
+    val ref = ctx.addReferenceObj("bpeMerges", merges, classOf[BpeMerges].getName)
+    val k = ctx.addMutableState(cls, "bpeKernel", v => s"$v = new $cls($ref);")
+    defineCodeGen(ctx, ev, c => s"$k.$method($c)")
+  }
+}
+
+/** `n_bpe_tokens`: a document's post-merge token count. */
+case class BpeTokenCount(child: Expression, merges: BpeMerges) extends BpeExpression {
+  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def prettyName: String = "graft_bpe_tokens"
+  override protected def method: String = "tokenCount"
+  override protected def run(kernel: BpeKernel, text: UTF8String): Any =
+    kernel.tokenCount(text)
+  override protected def withNewChildInternal(newChild: Expression): BpeTokenCount =
+    copy(child = newChild)
+}
+
+/** A document's post-merge symbols, flattened in (word, symbol) order. */
+case class BpeSymbols(child: Expression, merges: BpeMerges) extends BpeExpression {
+  override def dataType: DataType =
+    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "graft_bpe_symbols"
+  override protected def method: String = "symbols"
+  override protected def run(kernel: BpeKernel, text: UTF8String): Any =
+    kernel.symbols(text)
+  override protected def withNewChildInternal(newChild: Expression): BpeSymbols =
+    copy(child = newChild)
 }

@@ -1,7 +1,11 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftBridge
+
+import graft.functions.{BpeMerges, BpeSymbols, BpeTokenCount}
 
 /** Byte-pair-encoding merge training — the tokenizer-construction
   * step of an LLM data pipeline (Sennrich et al.'s algorithm, the
@@ -145,7 +149,7 @@ object Bpe {
 
   /** [[vocabulary]] derived from an ALREADY-TRAINED merge list — the
     * stored-posture form: no iterative argmax, just the corpus's
-    * word grain with the merge chain applied in order (identical to
+    * word grain with the merge kernel applied in order (identical to
     * the training loop's final state by construction: the loop's
     * state IS the word table with each round's replace applied) and
     * one bounded aggregate. What a pipeline reading the published
@@ -155,18 +159,11 @@ object Bpe {
       idCol: String,
       textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    merges.foreach { case (l, r) =>
-      require(!l.contains("'") && !r.contains("'"), "quote-free symbols required")
-    }
-    val applied = merges.foldLeft(
-      "concat(' ', regexp_replace(word, '(.)', '$1 '))") { case (acc, (l, r)) =>
-      s"replace($acc, ' $l $r ', ' $l$r ')"
-    }
     val counts = docs
       .select(explode(split(col(textCol), " ")).as("word"))
       .where(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("c"))
-      .select(explode(split(trim(expr(applied)), " ")).as("symbol"), col("c"))
+      .select(explode(bpeSymbols("word", merges)).as("symbol"), col("c"))
       .groupBy("symbol").agg(sum("c").as("n_occurrences"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n_occurrences").desc, col("symbol").asc)
@@ -197,16 +194,20 @@ object Bpe {
     * data pipeline actually bills by: context-window budgeting, token
     * accounting, packing all consume ENCODED lengths, not characters).
     *
-    * The merge list is driver-bounded by construction (≤ `rounds`
-    * rows), so application is ONE narrow codegen'd expression per
-    * document: the word array is transformed with the merge chain —
-    * each word char-splits to its padded symbol string and the
-    * `rounds` literal replaces apply IN MERGE ORDER (order is the
-    * tokenizer: applying p+ar before a+r would never fire) — and the
-    * per-word symbol counts fold to the doc total. No shuffle, no
-    * explode, no join: encode cost is a single corpus map pass at any
-    * scale. Word boundaries are hard (symbols never merge across
-    * words — the padded per-word string makes that structural).
+    * `n_bpe_tokens` comes from the native merge kernel
+    * ([[graft.functions.BpeKernel]], the `graft_bpe_tokens`
+    * expression, inlined into the scan's generated code): each
+    * non-empty space-split word char-splits to its padded symbol
+    * string, the merges apply as literal replaces IN MERGE ORDER
+    * (order is the tokenizer: applying p+ar before a+r would never
+    * fire), and the per-word symbol counts sum to the doc total. A
+    * word's symbols depend only on the word, so the kernel memoizes
+    * them per task and a repeated word costs one hash lookup. No
+    * shuffle, no explode, no join: encode cost is a single corpus map
+    * pass at any scale. Word boundaries are hard (symbols never merge
+    * across words — the padded per-word string makes that
+    * structural). `n_words` and `n_chars_sym` stay higher-order
+    * functions. Null text gives null counts.
     * Output: (id, n_words, n_chars_sym, n_bpe_tokens) — n_chars_sym
     * is the pre-merge symbol count, so the compression the merges
     * bought is n_chars_sym − n_bpe_tokens, exactly. */
@@ -216,13 +217,6 @@ object Bpe {
       textCol: String,
       merges: Seq[(String, String)],
       carryCols: Seq[String] = Nil): DataFrame = {
-    merges.foreach { case (l, r) =>
-      require(!l.contains("'") && !r.contains("'"), "quote-free symbols required")
-    }
-    val applied = merges.foldLeft(
-      "concat(' ', regexp_replace(w, '(.)', '$1 '))") { case (acc, (l, r)) =>
-      s"replace($acc, ' $l $r ', ' $l$r ')"
-    }
     // carryCols ride the narrow map (guide §2.4): a caller that needs
     // a per-doc attribute next to the counts (fertility's language
     // label) keeps the single corpus pass instead of re-joining the
@@ -234,10 +228,16 @@ object Bpe {
           .cast("long").as("n_words"),
         expr(s"aggregate(filter(split($textCol, ' '), w -> w <> ''), " +
           "0, (a, w) -> a + length(w))").cast("long").as("n_chars_sym"),
-        expr(s"aggregate(transform(filter(split($textCol, ' '), w -> w <> ''), " +
-          s"w -> size(split(trim($applied), ' '))), 0, (a, x) -> a + x)")
-          .cast("long").as("n_bpe_tokens")): _*)
+        GraftBridge.column(BpeTokenCount(text(textCol), BpeMerges(merges)))
+          .as("n_bpe_tokens")): _*)
   }
+
+  /** Each document's post-merge symbols, flattened in (word, symbol)
+    * order — [[graft.functions.BpeKernel]] over `textCol`. */
+  private def bpeSymbols(textCol: String, merges: Seq[(String, String)]): Column =
+    GraftBridge.column(BpeSymbols(text(textCol), BpeMerges(merges)))
+
+  private def text(textCol: String) = UnresolvedAttribute.quotedString(textCol)
 
   /** [[encode]] with the merges trained on the same corpus — the
     * standard self-tokenization posture (train the tokenizer on the
@@ -257,20 +257,24 @@ object Bpe {
     * actually consumes: every document becomes its in-order sequence
     * of vocabulary ids (the rows sequence packing / context-window
     * assembly take as input; [[encode]]'s counts are this stream's
-    * lengths). Same driver-bounded merge chain as [[encode]] applied
-    * per word; symbols join the vocabulary for their ids; position is
-    * a PER-DOC row_number over (word_pos, sym_pos) — partitioned by
-    * document, never a global sort. Empty documents have no tokens
-    * (a stream, not a stats row — totality is [[encode]]'s job).
-    * `vocab` must cover the corpus's post-merge symbols (true by
-    * construction under self-tokenization: [[vocabulary]] from the
-    * same corpus and rounds) UNLESS `oovId` is set: a streaming
-    * encoder applies a FIXED reference tokenizer to arbitrary crawl
-    * batches, where unseen symbols are a fact of life — with
-    * `oovId = Some(v)` an out-of-vocabulary symbol keeps its place in
-    * the stream carrying token id `v` (the UNK id; reference
-    * vocabularies start ids at 1, so 0 is free) instead of silently
-    * dropping, which would corrupt every later position.
+    * lengths). The same merge kernel as [[encode]] emits each doc's
+    * post-merge symbols flattened in (word, symbol) order; symbols
+    * join the vocabulary for their ids. `pos` is the 1-based index
+    * into that flattened array, fixed BEFORE the join — per doc,
+    * narrow, never a sort or a window. Empty documents have no
+    * tokens (a stream, not a stats row — totality is [[encode]]'s
+    * job). `vocab` is expected to cover the corpus's post-merge
+    * symbols (true by construction under self-tokenization:
+    * [[vocabulary]] from the same corpus and rounds). With
+    * `oovId = None` and a vocabulary that does NOT cover the corpus,
+    * the inner join drops each unknown symbol's row and the stream
+    * is GAPPED — the survivors keep their pre-join positions and are
+    * not renumbered. With `oovId = Some(v)` an out-of-vocabulary
+    * symbol keeps its row carrying token id `v` (the UNK id;
+    * reference vocabularies start ids at 1, so 0 is free) — what a
+    * streaming encoder applying a FIXED reference tokenizer to
+    * arbitrary crawl batches uses, where unseen symbols are a fact of
+    * life.
     * Output: (id, pos, token_id, symbol), pos 1-based per doc. */
   def encodeIds(
       docs: DataFrame,
@@ -279,28 +283,15 @@ object Bpe {
       merges: Seq[(String, String)],
       vocab: DataFrame,
       oovId: Option[Long] = None): DataFrame = {
-    merges.foreach { case (l, r) =>
-      require(!l.contains("'") && !r.contains("'"), "quote-free symbols required")
-    }
-    val applied = merges.foldLeft(
-      "concat(' ', regexp_replace(w, '(.)', '$1 '))") { case (acc, (l, r)) =>
-      s"replace($acc, ' $l $r ', ' $l$r ')"
-    }
-    // `pos` is computed NARROWLY: each doc's per-word symbol lists
-    // flatten in (word_pos, sym_pos) order inside one expression, so
-    // the 1-based index of the flattened array IS the old
-    // row_number() over (id) ordered by (word_pos, sym_pos) — the
-    // token-grain sort exchange that window forced is gone outright
-    // (guide §2.4). The vocab join stays, but the vocabulary is
+    // `pos` is computed NARROWLY from the flattened symbol array —
+    // no token-grain sort exchange (guide §2.4). The vocab join stays, but the vocabulary is
     // k-row-bounded by construction (|alphabet| + ≤64 merges), so it
     // is broadcast explicitly (guide §3.1) — size ESTIMATES after the
     // vocabulary's aggregate/window chain are way above reality, so
     // left to the planner this was a full sort-merge exchange of the
     // token stream on the symbol key.
     val syms = docs.select(col(idCol),
-      posexplode(expr(
-        s"flatten(transform(filter(split($textCol, ' '), w -> w <> ''), " +
-        s"w -> split(trim($applied), ' ')))")).as(Seq("__p0", "symbol")))
+      posexplode(bpeSymbols(textCol, merges)).as(Seq("__p0", "symbol")))
       .select(col(idCol), (col("__p0") + 1).cast("long").as("pos"), col("symbol"))
     val joined = oovId match {
       case None => syms.join(

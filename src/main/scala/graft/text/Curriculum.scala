@@ -134,8 +134,7 @@ object Curriculum {
   /** [[repeatAllocation]] over an ALREADY-ENCODED (id, n_tokens)
     * length table — what lets a caller that needs the corpus total
     * BEFORE choosing the budget (q204 sizes its budget at 3.5× the
-    * corpus) share ONE encode pass between the budget scalar and the
-    * plan, instead of re-running the merge chain per consumer. The
+    * corpus) compute it from its own encode pass. The filtered
     * length table is persisted here because three jobs consume it:
     * the range exchange's sampler, the running sum's pass structure,
     * and the total aggregate (guide §1.2 — don't compute things

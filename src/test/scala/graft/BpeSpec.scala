@@ -66,6 +66,73 @@ class BpeSpec extends SparkSpec {
     assert(enc(Seq("abc"), merges.reverse) == Seq((1L, 3L, 2L)))
   }
 
+  /** The merge chain the native kernel replaced, verbatim: per
+    * non-empty word, char-split to the padded symbol string, one
+    * literal replace per merge in order, trim, split. The reference
+    * the kernel must equal. */
+  private def hofChain(merges: Seq[(String, String)]) = {
+    val applied = merges.foldLeft(
+      "concat(' ', regexp_replace(w, '(.)', '$1 '))") { case (acc, (l, r)) =>
+      s"replace($acc, ' $l $r ', ' $l$r ')"
+    }
+    (expr("aggregate(transform(filter(split(text, ' '), w -> w <> ''), " +
+      s"w -> size(split(trim($applied), ' '))), 0, (a, x) -> a + x)").cast("long"),
+      expr("flatten(transform(filter(split(text, ' '), w -> w <> ''), " +
+        s"w -> split(trim($applied), ' ')))"))
+  }
+
+  test("native BPE kernel ≡ the HOF merge chain on hostile text") {
+    val texts: Seq[String] = Seq(
+      // every Java line terminator: regex '.' skips it, so it glues to
+      // the next symbol, and a trailing one keeps no trailing space
+      "a\nb x\ny", "a\r\nb", "\n", "\u0085a", "a\u2028", "\u2029\u2029 a\n",
+      "q\rz \rz", "ab\n ab\u0085",
+      // supplementary-plane code points are one symbol each
+      "\ud83d\ude00\ud83d\ude00 \ud83d\ude00a \ud834\udd1ex é中",
+      // leftmost non-overlapping runs: the boundary pair defers
+      "abab", "aaaa", "ababab", "aaaaa", "abababa",
+      // space runs, empty and blank text, null
+      "  ab   aa  ", "", "   ", null,
+      // one word repeated: memo hits as well as misses
+      ("abab " * 300) + ("aaaa " * 100) + "ab",
+      // more distinct words than the memo holds: it refills
+      (0 until 20000).map(i => s"ab$i").mkString(" "))
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val mergeLists = Seq(
+      Seq.empty[(String, String)],
+      // later sides are earlier merged symbols; ('a', '\n') can only
+      // fire mid-word; terminator-led and supplementary symbols merge
+      Seq(("a", "b"), ("ab", "ab"), ("a", "a"), ("aa", "aa"), ("abab", "a"),
+        ("x", "\ny"), ("q", "\rz"), ("a", "\n"), ("ab", "\u0085"),
+        ("\ud83d\ude00", "\ud83d\ude00"), ("é", "中"), ("1", "2")))
+    val noVocab = Seq.empty[(Long, String)].toDF("token_id", "symbol")
+    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+    for (merges <- mergeLists; (factory, wholeStage) <- modes) {
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val (hofCount, hofSyms) = hofChain(merges)
+        val counts = Bpe.encode(docs, "doc_id", "text", merges)
+          .select("doc_id", "n_bpe_tokens").collect()
+          .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+        val refCounts = docs.select(col("doc_id"), hofCount).collect()
+          .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+        assert(counts == refCounts, s"$factory ${merges.size} merges: counts")
+        assert(counts(texts.indexOf(null).toLong).isEmpty, "null text gives null")
+        val syms = Bpe.encodeIds(docs, "doc_id", "text", merges, noVocab, oovId = Some(0L))
+          .select("doc_id", "pos", "symbol").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+        val refSyms = docs.select(col("doc_id"), posexplode(hofSyms)).collect()
+          .map(r => (r.getLong(0), r.getInt(1) + 1L, r.getString(2))).toSet
+        assert(syms == refSyms, s"$factory ${merges.size} merges: " +
+          s"native-only=${syms.diff(refSyms).take(5)} hof-only=${refSyms.diff(syms).take(5)}")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
   test("trainAndEncode: the corpus billed in its own learned tokens") {
     // q183's planted corpus trains [(a,b), (ab,c), (b,c)]; every word
     // then encodes to ONE token
@@ -154,12 +221,17 @@ class BpeSpec extends SparkSpec {
     val docs = Seq((1L, "ab b")).toDF("doc_id", "text")
     val vocab = Seq((1L, "ab", 5L)).toDF("token_id", "symbol", "n_occurrences")
     val merges = Seq(("a", "b"))
-    // default (self-tokenization contract): the uncovered symbol drops
-    // — and takes every later position with it, which is exactly why
-    // a FIXED-reference encoder must not use this mode
+    // default (self-tokenization contract): the uncovered symbol's
+    // row drops
     val strict = Bpe.encodeIds(docs, "doc_id", "text", merges, vocab)
       .orderBy("pos").collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
     assert(strict == Seq((1L, 1L)), strict.toString)
+    // ... and the stream is GAPPED, not renumbered: in 'b ab' the
+    // surviving 'ab' keeps its pre-join position 2
+    val gapped = Bpe.encodeIds(Seq((1L, "b ab")).toDF("doc_id", "text"),
+      "doc_id", "text", merges, vocab)
+      .collect().map(r => (r.getLong(1), r.getLong(2), r.getString(3))).toSeq
+    assert(gapped == Seq((2L, 1L, "ab")), gapped.toString)
     // oovId: 'b' holds position 2 with the UNK id
     val unk = Bpe.encodeIds(docs, "doc_id", "text", merges, vocab, oovId = Some(0L))
       .orderBy("pos").collect()
