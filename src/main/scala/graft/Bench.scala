@@ -127,7 +127,7 @@ object Bench {
       // warmup pass is gone
       val a = timeOnce(fn)
       // release BETWEEN runs: queries that persist an intermediate
-      // (q10/q17/q32) would otherwise serve run b from run a's cache
+      // (q17/q32) would otherwise serve run b from run a's cache
       CacheScope.releaseAll(spark): Unit
       val b = timeOnce(fn)
       CacheScope.releaseAll(spark): Unit

@@ -6,13 +6,13 @@ import org.apache.spark.storage.StorageLevel
 /** Session-scoped lifecycle for operator-internal persisted
   * intermediates.
   *
-  * Several operators persist a shared subtree (Profits' merged
-  * transfers, Dedup's shingle tables, Ann's signature tables, q37's
-  * daily aggregate) because multiple branches of ONE returned plan
-  * consume it — but a lazily-returned DataFrame cannot unpersist
-  * itself: the operator never learns when its caller's last action
-  * ran. Raw `.persist` therefore leaks cache entries into long-lived
-  * sessions unless every embedding application knows to call
+  * Several operators persist a shared subtree (Dedup's shingle
+  * tables, Ann's signature tables, q37's daily aggregate) because
+  * multiple branches of ONE returned plan consume it — but a
+  * lazily-returned DataFrame cannot unpersist itself: the operator
+  * never learns when its caller's last action ran. Raw `.persist`
+  * therefore leaks cache entries into long-lived sessions unless
+  * every embedding application knows to call
   * `spark.catalog.clearCache()` (which also evicts the APPLICATION's
   * own caches — too blunt a tool).
   *

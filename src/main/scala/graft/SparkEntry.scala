@@ -1367,7 +1367,7 @@ object SparkEntry {
   /** q44: the flagship rerun over a bucketed layout — materialize
     * transfers+balances bucketed on (asset, wallet), then run the
     * profits pipeline reading the bucketed table: the fact side's
-    * window chain needs ZERO Exchange (SinksSpec proves it), which is
+    * per-pair pass needs ZERO Exchange (SinksSpec proves it), which is
     * how the daily 100 TB profits rebuild avoids re-shuffling the
     * fact table every run. Result is identical to q10 (same oracle). */
   def q44WalletProfitsBucketed(spark: SparkSession, dir: String): DataFrame = {

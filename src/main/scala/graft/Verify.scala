@@ -32,7 +32,7 @@ object Verify {
         deleteRec(target)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that persist intermediates (q10/q17/q32) must not hold
+      // queries that persist intermediates (q17/q32) must not hold
       // executor storage under the remaining queries — release through
       // the library's lifecycle API (clearCache would work too, but
       // would also evict an embedding application's own caches)

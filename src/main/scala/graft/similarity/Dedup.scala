@@ -766,7 +766,11 @@ object Dedup {
     // persisted: BOTH the recurrence aggregate and the span join
     // consume this — unpersisted, the tokenize + window-slice + md5
     // corpus pass (the query's dominant compute) ran twice per action
-    // (guide §1.2: don't compute things twice)
+    // (guide §1.2: don't compute things twice). Scale caveat: the cache
+    // is (doc, shingle)-grain — corpus-sized, growing linearly with the
+    // corpus — so at large scale it pressures executor memory and
+    // spills; the trade was measured at sf0.1 only. If it evicts, a
+    // DISK_ONLY level or recomputing the pass is the fallback.
     val shingled = graft.CacheScope.persisted(toks
       .select(col("doc_id"), col("total_tokens"),
         posexplode(expr(

@@ -11,8 +11,9 @@ class CacheScopeSpec extends SparkSpec {
     spark.catalog.clearCache()
     CacheScope.releaseAll(spark)
 
-    // the three heaviest persisting query families: Profits (q10),
-    // the Jaccard capped path (q17), the bucketed pair join (q37)
+    // the persisting query families — the Jaccard capped path (q17),
+    // the bucketed pair join (q37) — plus the flagship (q10), which
+    // persists nothing and must leave nothing behind either
     Seq("q10_wallet_profits", "q17_dedup_ngram_jaccard", "q37_price_correlation")
       .foreach(q => SparkEntry.queries(q)(spark, SfDir).count(): Unit)
     assert(CacheScope.pending(spark) > 0,

@@ -68,6 +68,41 @@ class SinksSpec extends SparkSpec {
     }
   }
 
+  test("Profits.walletProfits over the bucketed transfers table: no Exchange on the fact side") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    try {
+      // the q44 layout, read by the real flagship operator
+      Sinks.writeBucketed(
+        Tables.transfersWithBalance(spark, SfDir).drop("transfer_sequence"),
+        "graft_twb_profits_spec", bucketCols = Seq("asset", "wallet"), numBuckets = 8,
+        sortCols = Seq("asset", "wallet", "date"))
+      val profits = graft.operators.Profits.walletProfits(
+        spark.table("graft_twb_profits_spec"), Tables.prices(spark, SfDir))
+      profits.collect()
+      def children(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case _ => p.children
+      }
+      // root-to-scan path of the bucketed table: the fact side (the
+      // price side's exchanges sit behind broadcasts, off this path)
+      def factPath(p: SparkPlan): Option[List[SparkPlan]] = p match {
+        case s: FileSourceScanExec
+            if s.tableIdentifier.exists(_.table == "graft_twb_profits_spec") => Some(List(s))
+        case _ => children(p).iterator.map(factPath).collectFirst { case Some(path) => p :: path }
+      }
+      val plan = profits.queryExecution.executedPlan
+      val path = factPath(plan).getOrElse(fail(s"bucketed scan not found:\n$plan"))
+      assert(!path.exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"the bucketed fact side should not shuffle:\n$plan")
+    } finally {
+      Sinks.dropTable(spark, "graft_twb_profits_spec")
+    }
+  }
+
   test("writeShards lands one sorted file per shard and loses no rows") {
     val assigned = SparkEntry.q59ShardAssign(spark, SfDir)
     val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
