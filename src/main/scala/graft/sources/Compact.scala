@@ -141,10 +141,10 @@ object Compact {
     * fragments below the threshold are read, re-binned, and
     * rewritten. On a 100 TB table where daily increments fragment
     * 0.1% of the bytes, the full rewrite scans 1000× more than this
-    * does. Rides [[Publish.publishStaged]], so validation (footer
-    * read-back of the ASSEMBLED version, carried files included),
-    * the manifest, and the atomic pointer flip are exactly
-    * [[compactPublished]]'s. Returns (newVersion, carried,
+    * does. Rides [[Publish.publishStaged]], so validation (every
+    * footer of the ASSEMBLED version, carried files included, parsed
+    * on the driver), the manifest, and the atomic pointer flip are
+    * exactly [[compactPublished]]'s. Returns (newVersion, carried,
     * rewritten). */
   def compactPublishedIncremental(
       spark: SparkSession,

@@ -4,6 +4,7 @@ import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlInternals
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Generic per-file statistics manifest — the skipping layer as a
@@ -95,8 +96,12 @@ object FileStats {
       fpp: Double): org.apache.spark.sql.DataFrame = {
     if (keyCols.nonEmpty || kmvCols.nonEmpty)
       graft.functions.GraftFunctions.register(data.sparkSession)
-    val nRows = data.count()
-    val nFiles = math.max(1L, data.select(input_file_name()).distinct().count())
+    // bloom sizing from the footers on the driver, no Spark job: the
+    // files that hold rows are those `input_file_name()` would name
+    val (counts, _) = SqlInternals.parquetFooters(
+      data.sparkSession, data.inputFiles.toSeq, mergeSchema = false)
+    val nRows = counts.sum
+    val nFiles = math.max(1L, counts.count(_ > 0).toLong)
     val aggs = statAggs(cols, keyCols, kmvCols, kmvK,
       math.max(64L, 2L * nRows / nFiles), fpp)
     data.groupBy(input_file_name().as("file")).agg(aggs.head, aggs.tail: _*)

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SqlInternals
 
 /** Atomic dataset publication: staging → validate → promote.
   *
@@ -20,9 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - each publish writes a fresh immutable version directory
   *     `root/v=N/` (data + `manifest.json`), never touching the live
   *     one;
-  *   - the staged files are VALIDATED (read back through parquet
-  *     footers, counted) before promotion — a torn write can never
-  *     become visible;
+  *   - the staged files are VALIDATED before promotion: the driver
+  *     opens the parquet footer of every file a reader would read
+  *     (no Spark job), and the footers' row counts and schemas become
+  *     the manifest's — a torn write can never become visible;
   *   - the commit point is one atomic replace of the `_CURRENT`
   *     pointer file. Readers resolve the pointer first, so they see
   *     the old version or the new one, never a mix; a crash anywhere
@@ -91,15 +93,16 @@ object Publish {
     * [[Compact.compactPublishedIncremental]] byte-copies well-sized
     * files and rewrites only fragments into the same version). The
     * caller's `stage(dir)` must leave ONLY the version's parquet data
-    * files under `dir`; validation (a full footer-checked read-back
-    * count), the manifest, and the atomic promotion are unchanged.
+    * files directly under `dir` (hidden `_`/`.` entries aside);
+    * validation (every staged footer opened and parsed on the driver),
+    * the manifest, and the atomic promotion are unchanged.
     *
-    * @param mergeSchema union the staged files' schemas by name for
-    *   the validation read and the manifest's recorded schema —
-    *   REQUIRED when the staged files legitimately differ (a
-    *   schema-evolving [[Merge]] carries old-schema files next to
-    *   widened rewrites); without it the manifest records whichever
-    *   footer the reader sampled */
+    * @param mergeSchema union the staged files' footer schemas by name
+    *   for the manifest's recorded schema — REQUIRED when the staged
+    *   files legitimately differ (a schema-evolving [[Merge]] carries
+    *   old-schema files next to widened rewrites); without it the
+    *   manifest records the first file's (in name order) footer
+    *   schema, as a non-merging parquet reader would */
   def publishStaged(spark: SparkSession, root: String,
       meta: Map[String, String] = Map.empty,
       mergeSchema: Boolean = false)(stage: String => Unit): Long = {
@@ -230,20 +233,22 @@ object Publish {
     val staging = rootPath.resolve(s".staging-v$version")
     stage(staging.toString)
 
-    // validate before promoting: re-read through the parquet footers;
-    // a truncated or corrupt file fails HERE, with the live version
-    // still untouched
-    val staged = spark.read
-      .option("mergeSchema", mergeSchema.toString)
-      .parquet(staging.toString)
-    val rows = staged.count()
-    val files = dataFiles(staging)
+    // validate before promoting: open the footer of every file a
+    // parquet reader would read, on the driver; a truncated, empty or
+    // foreign file fails HERE, with the live version still untouched.
+    // The footers also hold the manifest's row count and schema
+    val visible = readerVisibleFiles(staging)
+    val (counts, schema) = SqlInternals.parquetFooters(spark,
+      visible.map(_.toUri.toString), mergeSchema)
+    val rows = counts.sum
+    val files = visible.map(p => (p.getFileName.toString, Files.size(p)))
+      .filter(_._1.endsWith(".parquet"))
     val metaJson = meta.toSeq.sorted
       .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }.mkString("{", ",", "}")
     val manifest =
       s"""{"version":$version,"rows":$rows,""" +
         s""""committed_at":${System.currentTimeMillis()},""" +
-        s""""schema":${jsonStr(staged.schema.toDDL)},""" +
+        s""""schema":${jsonStr(schema.toDDL)},""" +
         s""""total_bytes":${files.map(_._2).sum},""" +
         s""""meta":$metaJson,""" +
         s""""files":[${files.map { case (n, s) => s"""{"name":${jsonStr(n)},"bytes":$s}""" }.mkString(",")}]}"""
@@ -472,13 +477,30 @@ object Publish {
     finally s.close()
   }
 
-  private def dataFiles(dir: Path): Seq[(String, Long)] = {
+  /** The files of a staged version that a parquet reader would read,
+    * name-sorted: every regular file whose name Spark's listing does
+    * not skip (`_`/`.` prefixes other than `k=v`, in-flight
+    * `._COPYING_` copies). The stage contract is flat, so a visible
+    * subdirectory fails the commit: a reader would take a `k=v` one
+    * as a partition and skip any other, while the manifest's file list
+    * and every carry (AppendStream, Compact) see only the top level.
+    * A stage with no file to read fails too (no schema to record). */
+  private def readerVisibleFiles(dir: Path): Seq[Path] = {
     val s = Files.list(dir)
-    try s.iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .map(p => (p.getFileName.toString, Files.size(p)))
-      .toSeq.sortBy(_._1)
-    finally s.close()
+    val visible =
+      try s.iterator().asScala.filterNot { p =>
+        val n = p.getFileName.toString
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+      }.toSeq.sortBy(_.getFileName.toString)
+      finally s.close()
+    visible.find(Files.isDirectory(_)).foreach { d =>
+      throw new IllegalStateException(
+        s"staged version holds a reader-visible subdirectory: $d")
+    }
+    if (visible.isEmpty)
+      throw new IllegalStateException(s"staged version at $dir holds no data file")
+    visible
   }
 
   // full JSON string escape incl. control chars (Verify.oracleJson's

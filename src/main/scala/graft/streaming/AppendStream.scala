@@ -19,7 +19,11 @@ import graft.sources.{Compact, Publish}
   * identity by construction — the local-FS stand-in for a manifest
   * re-referencing the same objects) and writes ONLY the batch's rows
   * as new files. Readers still resolve one atomic, footer-validated
-  * snapshot per version.
+  * snapshot per version. Scale note: the bytes moved are O(batch),
+  * but validation still opens one footer per file of the version
+  * (carried files included) on the driver, so commit cost grows with
+  * the live file count between compactions; carried files could
+  * reuse their manifest rows instead, which this sink does not do.
   *
   * Appending one file-set per batch is exactly how small-file
   * fragmentation accretes, so the MAINTENANCE loop rides the same

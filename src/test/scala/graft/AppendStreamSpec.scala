@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -140,6 +141,65 @@ class AppendStreamSpec extends SparkSpec {
       assert(graft.sources.FileStats.candidateFiles(spark, liveDir,
         Seq(graft.sources.FileStats.Between("k", 2001L, 3200L))).size < onDisk.size,
         "clustered-by-batch key ranges should prune some files")
+    } finally {
+      graft.sources.Sinks.deleteRecursively(Paths.get(root))
+    }
+  }
+
+  /** The Spark jobs started while `body` runs, whatever their thread or
+    * job group. A marker job brackets each side: the listener bus
+    * delivers events in order, so every job `body` posted arrives
+    * between the first marker's end and the second marker's start. */
+  private def jobsFiredBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val markerGroup = "graft-job-count-marker"
+    val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val markerEnds = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var counting = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == markerGroup))
+          markerIds.add(e.jobId): Unit
+        else if (counting) jobs.incrementAndGet(): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerIds.remove(e.jobId)) { counting = !counting; markerEnds.put(e.jobId) }
+    }
+    def marker(): Unit = {
+      sc.setJobGroup(markerGroup, markerGroup)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerEnds.poll(60, java.util.concurrent.TimeUnit.SECONDS) != null,
+        "listener bus did not deliver the marker job")
+    }
+    sc.addSparkListener(listener)
+    try { marker(); body; marker(); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("commit path job count: a plain append is one job; the cadence batch is pinned") {
+    val sess = spark
+    import sess.implicits._
+    val root = Files.createTempDirectory("graft_s20_jobs").toString
+    try {
+      def batch(i: Long) =
+        ((i * 1000L + 1) to (i * 1000L + 500)).map(j => (j, j % 7)).toDF("k", "x")
+      def apply(i: Long): Int = jobsFiredBy {
+        assert(AppendStream.applyBatch(batch(i), i, root, compactEvery = 2,
+          targetBytes = 8L * 1024, statsCols = Seq("k"), statsKeyCols = Seq("k")))
+      }
+      // batches 0 and 2 are plain appends: the batch write is the only
+      // job, since validation and the manifest come from the footers on
+      // the driver. Batches 1 and 3 ride the compaction cadence: the
+      // append write, four jobs for the compaction rewrite, and the
+      // stats build's schema-inference read plus its two-stage
+      // aggregate; batch 3's incremental refresh also infers the prior
+      // manifest's schema and collects its file names. Bloom sizing
+      // runs no job
+      val jobs = (0L to 3L).map(apply)
+      assert(jobs == Seq(1, 8, 1, 10), "Spark jobs per applyBatch")
+      assert(jobsFiredBy(assert(!AppendStream.applyBatch(batch(3L), 3L, root))) == 0,
+        "a refused replay runs no job")
+      assert(Publish.read(spark, root).count() == 2000L)
     } finally {
       graft.sources.Sinks.deleteRecursively(Paths.get(root))
     }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.sources.FileStats
 import graft.sources.FileStats.{Between, IsNull, KeyIn}
@@ -324,6 +325,42 @@ class FileStatsSpec extends SparkSpec {
       }
     } finally {
       graft.sources.Sinks.deleteRecursively(java.nio.file.Paths.get(root))
+    }
+  }
+
+  test("bloom sizing from footers equals the count / distinct-file values it replaced") {
+    val root = Files.createTempDirectory("graft_fstats_sizing").toString
+    val data = spark.range(3000L).select(col("id").as("k"), (col("id") % 3).as("p"))
+    val partitioned = root + "/partitioned"
+    val withEmpty = root + "/with_empty"
+    try {
+      // files only below k=v directories: a top-level listing sees none
+      data.repartition(2).write.partitionBy("p").parquet(partitioned)
+      // a zero-row file next to two non-empty ones: it holds no rows,
+      // so `input_file_name()` never names it
+      data.repartition(2).write.parquet(withEmpty)
+      data.limit(0).write.mode("append").parquet(withEmpty)
+      assert(spark.read.parquet(withEmpty).inputFiles.length == 3)
+      Seq(partitioned -> 6L, withEmpty -> 2L).foreach { case (path, filesWithRows) =>
+        val read = spark.read.parquet(path)
+        val nRows = read.count()
+        val nFiles = math.max(1L, read.select(input_file_name()).distinct().count())
+        assert(nFiles == filesWithRows, s"$path: fixture has $nFiles files with rows")
+        val bits = (n: Long) => BloomFilter.create(math.max(64L, 2L * nRows / n), 0.01).bitSize()
+        // the fixture tells the right file count from the plausible wrong ones
+        Seq(1L, read.inputFiles.length.toLong).filter(_ != nFiles).foreach { wrong =>
+          assert(bits(wrong) != bits(nFiles), s"$path: fixture cannot detect nFiles=$wrong")
+        }
+        FileStats.build(spark, path, cols = Seq("k"), keyCols = Seq("k"))
+        val blooms = spark.read.parquet(FileStats.statsPath(path))
+          .select("bloom_k").collect().map(r => BloomFilter.readFrom(
+            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](0))).bitSize())
+        assert(blooms.length == filesWithRows)
+        assert(blooms.forall(_ == bits(nFiles)),
+          s"$path: bloom sizes ${blooms.toSeq} != ${bits(nFiles)} for $nRows rows over $nFiles files")
+      }
+    } finally {
+      graft.sources.Sinks.deleteRecursively(Paths.get(root))
     }
   }
 }

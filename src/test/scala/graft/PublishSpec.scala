@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.sources.Publish
@@ -193,6 +195,130 @@ class PublishSpec extends SparkSpec {
         "lock left behind after all holders exited")
     } finally {
       sys.props.remove("graft.publish.lockStaleMs"): Unit
+    }
+  }
+
+  /** Every file and its bytes under `root`, staging orphans aside —
+    * what a failed commit must leave exactly as it was. */
+  private def committedState(root: String): Map[String, Seq[Byte]] = {
+    val rootPath = Paths.get(root)
+    val s = Files.walk(rootPath)
+    try s.iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .map(rootPath.relativize(_).toString)
+      .filterNot(_.startsWith(".staging-"))
+      .map(rel => rel -> Files.readAllBytes(rootPath.resolve(rel)).toSeq)
+      .toMap
+    finally s.close()
+  }
+
+  test("a torn stage fails the commit, leaves every version untouched, and is reaped") {
+    import spark.implicits._
+    val root = freshRoot()
+    val rootPath = Paths.get(root)
+    Publish.publish(Seq((1L, "live")).toDF("id", "s"), root)
+    val src = Files.createTempDirectory("graft_publish_torn").resolve("ok")
+    Seq((2L, "x"), (3L, "y")).toDF("id", "s").coalesce(1).write.parquet(src.toString)
+    val good = {
+      val s = Files.list(src)
+      try s.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+      finally s.close()
+    }
+    val bytes = Files.readAllBytes(good)
+    // each torn file sorts BEFORE the good one, so even a reader that
+    // samples only the first footer for its schema would open it
+    val tears: Seq[(String, java.nio.file.Path => Unit)] = Seq(
+      "a truncated parquet file" -> { d =>
+        Files.write(d.resolve("0-torn.parquet"), bytes.take(bytes.length / 2)): Unit },
+      "a zero-length parquet file" -> { d =>
+        Files.write(d.resolve("0-torn.parquet"), Array.emptyByteArray): Unit },
+      "a non-parquet file" -> { d =>
+        Files.write(d.resolve("0-notes.txt"), "not parquet\n".getBytes("UTF-8")): Unit },
+      // the stage contract is flat: the reader skips this directory,
+      // and neither the manifest nor any carry lists it, yet it would
+      // be promoted with the version
+      "a reader-visible subdirectory" -> { d =>
+        Files.createDirectories(d.resolve("sub"))
+        Files.copy(good, d.resolve("sub").resolve(good.getFileName)): Unit })
+    for ((what, tear) <- tears; mergeSchema <- Seq(false, true)) {
+      val before = committedState(root)
+      intercept[Exception] {
+        Publish.publishStaged(spark, root, mergeSchema = mergeSchema) { staging =>
+          val d = Paths.get(staging)
+          Files.createDirectories(d)
+          Files.copy(good, d.resolve(good.getFileName))
+          tear(d)
+        }
+      }
+      assert(committedState(root) == before,
+        s"$what (mergeSchema=$mergeSchema) changed the committed table")
+      assert(Publish.currentVersion(root).contains(1L))
+      assert(Publish.read(spark, root).select("s").as[String].collect().toSeq == Seq("live"))
+    }
+    assert(Publish.publish(Seq((4L, "next")).toDF("id", "s"), root) == 2L)
+    assert(Publish.read(spark, root).select("s").as[String].collect().toSeq == Seq("next"))
+    val leftovers = {
+      val s = Files.list(rootPath)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(".staging-")).toSeq
+      finally s.close()
+    }
+    assert(leftovers.isEmpty, s"torn staging survived the next publish: $leftovers")
+  }
+
+  test("the manifest's rows and schema equal a parquet read-back of the stage") {
+    import spark.implicits._
+    val narrow = Seq((1L, "a"), (2L, null)).toDF("id", "s")
+    val wide = Seq((3L, "c", 1.5, (7, Seq("p", null)), Seq(1L, 2L)),
+        (4L, null, Double.NaN, null, null))
+      .toDF("id", "s", "w", "nested", "arr")
+      .withColumn("nested", col("nested").cast("struct<a:int,b:array<string>>"))
+    val typed = Seq(
+        ("12.345678", "2024-03-01 10:00:00", "2024-03-01 10:00:00", Map("k" -> 1L)),
+        (null, null, null, Map.empty[String, Long]))
+      .toDF("d", "ts", "ntz", "m")
+      .select(col("d").cast("decimal(18,6)"), col("ts").cast("timestamp"),
+        col("ntz").cast("timestamp_ntz"), col("m"))
+    // (label, mergeSchema, stage)
+    val stages: Seq[(String, Boolean, String => Unit)] = Seq(
+      ("widened files plus a nested struct/array", true, { d =>
+        narrow.repartition(2).write.mode("append").parquet(d)
+        wide.write.mode("append").parquet(d)
+        wide.select("arr", "id", "nested").write.mode("append").parquet(d)
+      }),
+      ("widened files, first footer only", false, { d =>
+        narrow.write.mode("append").parquet(d)
+        wide.write.mode("append").parquet(d)
+      }),
+      ("decimal, timestamp, timestamp_ntz and map columns", true, { d =>
+        typed.repartition(2).write.mode("append").parquet(d)
+      }),
+      ("an empty frame", true, { d =>
+        narrow.limit(0).write.mode("append").parquet(d)
+      }),
+      ("an empty frame, no merge", false, { d =>
+        wide.limit(0).write.mode("append").parquet(d)
+      }),
+      ("a uniform-width stage", false, { d =>
+        wide.union(wide).repartition(3).write.mode("append").parquet(d)
+      }),
+      ("a non-Spark writer's footers", true, { d =>
+        Files.copy(Paths.get(SfDir, "events.parquet"),
+          Paths.get(d, "events.parquet")): Unit
+      }))
+    stages.foreach { case (label, mergeSchema, write) =>
+      val root = freshRoot()
+      var readBack: (Long, String) = null
+      val v = Publish.publishStaged(spark, root, mergeSchema = mergeSchema) { staging =>
+        Files.createDirectories(Paths.get(staging))
+        write(staging)
+        val staged = spark.read.option("mergeSchema", mergeSchema.toString).parquet(staging)
+        readBack = (staged.count(), staged.schema.toDDL)
+      }
+      val manifest = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Publish.currentManifest(root).get)
+      assert(manifest.get("rows").asLong == readBack._1, s"$label: rows")
+      assert(Publish.manifestSchemaDdl(root, v).contains(readBack._2), s"$label: schema")
     }
   }
 }
