@@ -585,8 +585,7 @@ object SparkEntry {
     * one-shot corpus aggregate exactly (the S41 additive identity)
     * and q198 hash-shares q194's oracle. */
   private def evalStatsRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_evstat", dir, s"$dir/documents.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_evstat", dir) { root =>
       val docs = Tables.documents(spark, dir)
       graft.streaming.TokenizerStream.publish(
         docs, "doc_id", "text", rounds = 8, s"$root/tok")
@@ -837,8 +836,7 @@ object SparkEntry {
     * once, plans re-rank the stored table (the q178 stored-score
     * posture applied to the curriculum family). */
   private def qualityScoreTable(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_qscore", dir, s"$dir/documents.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_qscore", dir) { tableDir =>
       graft.text.TextOps.qualityScore(
           Tables.documents(spark, dir), "doc_id", "text")
         .select(col("doc_id"), col("quality_score_ppm"))
@@ -920,8 +918,7 @@ object SparkEntry {
     * tokenize/pack/place chain — the export must be LOSSLESS for the
     * hash to close. */
   private def windowExportRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_winexp", dir, s"$dir/documents.parquet") { (outDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_winexp", dir) { outDir =>
       val merges = graft.sources.Publish
         .read(spark, bpeMergesRoot(spark, dir))
         .orderBy("round").collect()
@@ -1251,11 +1248,10 @@ object SparkEntry {
     * coingecko_market_data.py:317-380). IngestSpec proves untouched
     * partition files are byte-identical after the refresh. */
   def q42IncrementalRefresh(spark: SparkSession, dir: String): DataFrame = {
-    // build-once per (SF, testdata fingerprint): tools.Scratch owns the
-    // scratch lifecycle (done-marker, stale-fingerprint reaping) so the
-    // refresh side effect runs once and repeat calls read the table
-    val tableDir = graft.tools.Scratch.cachedArtifact(
-      "graft_q42", dir, s"$dir/events.parquet") { (tableDir, stagingDir) =>
+    // built once per (run, SF) by tools.Scratch, so the refresh side
+    // effect runs once and repeat calls read the table; the staging
+    // sibling carries the table's run-scoped name and goes with it
+    val tableDir = graft.tools.Scratch.cachedArtifact("graft_q42", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       val keys = Seq("user_id", "event_type")
       val version = Seq(col("ts"), col("event_id"))
@@ -1267,7 +1263,7 @@ object SparkEntry {
         col("event_id") % 2 === 1 && length(col("event_type")) % 2 === 0)
       graft.sources.Sinks.writePartitioned(base, tableDir, Seq("event_type"))
       Ingest.incrementalRefresh(tableDir, updates,
-        keys, version, Seq("event_type"), stagingDir)
+        keys, version, Seq("event_type"), tableDir + "_stage")
     }
     spark.read.parquet(tableDir).select("user_id", "event_type", "event_id", "value")
   }
@@ -2014,20 +2010,19 @@ object SparkEntry {
     * the surviving rows, so the DuckDB oracle (same filter +
     * aggregate over the WHOLE table) hash-checks that skipping
     * dropped no needed file — a stats bug cannot pass the gate. The
-    * layout is built once per (session, SF) via the q42/q44 scratch
-    * lifecycle; a recurring 100 TB deployment pays the clustering
+    * layout is built once per (run, SF) by tools.Scratch (the q42
+    * lifecycle); a recurring 100 TB deployment pays the clustering
     * shuffle at write time and every box query thereafter reads
     * O(selectivity) files instead of the table. Sums accumulate as
     * decimal (exact, order-independent) and present as double (the
     * q97 posture — a decimal OUTPUT column trips the gate's
     * asymmetric decimal stringification, r7's only hash misses). */
   // z-ordered + bloom-indexed copy of events, built once per
-  // (session, SF) — shared by q100 (box pruning) and q101 (point
+  // (run, SF) — shared by q100 (box pruning) and q101 (point
   // lookup); the curve dims and the bloom key index DIFFERENT
   // columns on one layout, which is the point of the stats manifest
   private def zIndexedEvents(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_zidx", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_zidx", dir) { tableDir =>
       graft.sources.ZOrder.writeZOrdered(
         Tables.events(spark, dir), tableDir,
         colA = "user_id", colB = "value", bits = 8, numFiles = 32,
@@ -2076,8 +2071,7 @@ object SparkEntry {
     * layout drops nothing (ZOrderSpec carries the balance proof on a
     * planted 90%-skew column, where the affine layout degenerates). */
   private def zqIndexedEvents(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_zqidx", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_zqidx", dir) { tableDir =>
       graft.sources.ZOrder.writeZOrderedQuantile(
         Tables.events(spark, dir), tableDir,
         colA = "user_id", colB = "value", tieBreaker = "event_id",
@@ -2105,10 +2099,9 @@ object SparkEntry {
     * (compacted) table; the DuckDB oracle aggregates the ORIGINAL
     * events — the hash match proves layout maintenance changed not
     * one row (the q100 posture: maintenance must be invisible to the
-    * gate). Built once per (session, SF) via the scratch lifecycle. */
+    * gate). Built once per (run, SF) by tools.Scratch. */
   private def compactedEventsRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_compact", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_compact", dir) { tableDir =>
       graft.sources.Publish.publish(
         Tables.events(spark, dir).repartition(64), tableDir): Unit
       graft.sources.Compact.compactPublished(
@@ -2139,8 +2132,7 @@ object SparkEntry {
     * events (the q104 posture). CompactSpec carries the
     * byte-identity (SHA-256) and carried/rewritten-count proofs. */
   private def incCompactRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_icompact", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_icompact", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       graft.sources.Publish.publishStaged(spark, tableDir) { staging =>
         java.nio.file.Files.createDirectories(
@@ -2177,8 +2169,7 @@ object SparkEntry {
     * dropped nothing. FileStatsSpec carries the stat-correctness,
     * all-null-file, bloom, and conjunction proofs. */
   private def statsIndexedEvents(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_fstats", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_fstats", dir) { tableDir =>
       Tables.events(spark, dir)
         .repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
         .write.parquet(tableDir)
@@ -2339,8 +2330,7 @@ object SparkEntry {
     * refresh → vacuum → a value-range pruned aggregate over the
     * refreshed manifest, hash-checked against a full-scan oracle. */
   private def statsMaintRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_smaint", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_smaint", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       graft.sources.Publish.publishStaged(spark, tableDir) { staging =>
         java.nio.file.Files.createDirectories(
@@ -2427,8 +2417,7 @@ object SparkEntry {
     * no single dimension selective ENOUGH — the curve bounds all
     * three per file where any linear layout bounds one. */
   private def z3IndexedEvents(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_z3idx", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_z3idx", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       val bounds = ev.agg(
         min("user_id").as("lu"), max("user_id").as("hu"),
@@ -2739,26 +2728,25 @@ object SparkEntry {
       .collect()(0).getString(0)
 
     val table = graft.tools.Scratch.cachedArtifact(
-      s"graft_q123_${best.replace("+", "_")}", dir, s"$dir/events.parquet") {
-      (tableDir, _) =>
-        val ev = Tables.events(spark, dir)
-        val dimCols = advisorDims.toMap.view.mapValues(_.cast("double")).toMap
-        val chosen = best.split('+').toSeq
-        val aggs = chosen.flatMap(d =>
-          Seq(min(dimCols(d)).as(s"lo_$d"), max(dimCols(d)).as(s"hi_$d")))
-        val b = ev.agg(aggs.head, aggs.tail: _*).collect()(0)
-        import graft.sources.ZOrder.{affineBucket, zValueN}
-        val bits = if (chosen.length == 1) 12 else 9
-        val zcols = chosen.zipWithIndex.map { case (d, i) =>
-          affineBucket(dimCols(d), lit(b.get(2 * i)), lit(b.get(2 * i + 1)), bits)
-        }
-        ev.withColumn("__z", zValueN(zcols, bits))
-          .repartitionByRange(32, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
-          .write.parquet(tableDir)
-        graft.sources.FileStats.build(spark, tableDir,
-          cols = Seq("user_id", "value", "ts"))
+      s"graft_q123_${best.replace("+", "_")}", dir) { tableDir =>
+      val ev = Tables.events(spark, dir)
+      val dimCols = advisorDims.toMap.view.mapValues(_.cast("double")).toMap
+      val chosen = best.split('+').toSeq
+      val aggs = chosen.flatMap(d =>
+        Seq(min(dimCols(d)).as(s"lo_$d"), max(dimCols(d)).as(s"hi_$d")))
+      val b = ev.agg(aggs.head, aggs.tail: _*).collect()(0)
+      import graft.sources.ZOrder.{affineBucket, zValueN}
+      val bits = if (chosen.length == 1) 12 else 9
+      val zcols = chosen.zipWithIndex.map { case (d, i) =>
+        affineBucket(dimCols(d), lit(b.get(2 * i)), lit(b.get(2 * i + 1)), bits)
+      }
+      ev.withColumn("__z", zValueN(zcols, bits))
+        .repartitionByRange(32, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.parquet(tableDir)
+      graft.sources.FileStats.build(spark, tableDir,
+        cols = Seq("user_id", "value", "ts"))
     }
 
     val lo = java.sql.Timestamp.valueOf("2024-01-08 00:00:00")
@@ -2862,8 +2850,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("n_events"), sum("v").as("t"))
     def byWallet(f: DataFrame): DataFrame = f.groupBy("wallet")
       .agg(count(lit(1)).as("n_events"), sum("v").as("t"))
-    val root = graft.tools.Scratch.cachedArtifact(
-      "graft_q121", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    val root = graft.tools.Scratch.cachedArtifact("graft_q121", dir) { tableDir =>
       val part = facts().where(col("wallet") % 2 === 0)
       graft.sources.Catalog.publishAll(spark, tableDir,
         Map("by_asset" -> byAsset(part), "by_wallet" -> byWallet(part))): Unit
@@ -2924,8 +2911,7 @@ object SparkEntry {
   def q125ViewMatch(spark: SparkSession, dir: String): DataFrame = {
     val src = s"$dir/events.parquet"
     val sumExpr = round(col("value"), 6).cast("decimal(18,6)")
-    val mvPath = graft.tools.Scratch.cachedArtifact(
-      "graft_q125_mv", dir, src) { (tableDir, _) =>
+    val mvPath = graft.tools.Scratch.cachedArtifact("graft_q125_mv", dir) { tableDir =>
       graft.sources.MatViews.build(spark, src, tableDir,
         groupCols = Seq("event_type", "user_id"),
         sums = Map("sum_v" -> sumExpr),
@@ -2970,8 +2956,7 @@ object SparkEntry {
     val ordersPath = s"$dir/orders.parquet"
     val custPath = s"$dir/customer.parquet"
     val priceExpr = round(col("o_totalprice"), 2).cast("decimal(18,2)")
-    val mvPath = graft.tools.Scratch.cachedArtifact(
-      "graft_q126_mv", dir, ordersPath) { (tableDir, _) =>
+    val mvPath = graft.tools.Scratch.cachedArtifact("graft_q126_mv", dir) { tableDir =>
       graft.sources.MatViews.buildJoin(spark, ordersPath, custPath,
         leftKeys = Seq("o_custkey"), rightKeys = Seq("c_custkey"),
         mvPath = tableDir,
@@ -3015,8 +3000,7 @@ object SparkEntry {
     * predicates negated — a position off by one, a file carried
     * wrong, or a delete leaking across versions breaks the hash. */
   private def deletedEventsRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_dvevents", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_dvevents", dir) { tableDir =>
       graft.sources.Publish.publish(
         Tables.events(spark, dir).repartition(8), tableDir): Unit
       graft.sources.Deletes.deleteFromPublished(spark, tableDir,
@@ -3050,8 +3034,7 @@ object SparkEntry {
     * relationally (left join + CASE + anti-union) — a wrong match, a
     * resurrected delete, or a dropped carried file breaks the hash. */
   private def mergedEventsRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_mergeevents", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_mergeevents", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       val v1 = graft.sources.Publish.publish(ev.repartition(8), tableDir)
       graft.sources.FileStats.build(spark,
@@ -3267,8 +3250,7 @@ object SparkEntry {
     * append-maintained index ≡ full re-fingerprint, so the registry
     * gate is rows>0 while the semantics are spec-exact. */
   private def mediaNearDupIndex(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_mndidx", dir, s"$dir/documents.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_mndidx", dir) { root =>
       val corpus = Multimodal.asVideoTable(
         Tables.documents(spark, dir).where(col("doc_id") % 3 =!= 0),
         "doc_id", "text")
@@ -3340,8 +3322,7 @@ object SparkEntry {
     * every document's exact post-merge token count (compression =
     * n_chars_sym − n_bpe_tokens, integer-exact). */
   private def bpeMergesRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_bpemrg", dir, s"$dir/documents.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_bpemrg", dir) { root =>
       graft.sources.Publish.publish(
         graft.text.Bpe.trainMerges(Tables.documents(spark, dir),
           "doc_id", "text", rounds = 8), root): Unit
@@ -3449,8 +3430,7 @@ object SparkEntry {
     * write each side — no shuffle beyond the final fold at any
     * scale. */
   private def wapEventsRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_wapevents", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_wapevents", dir) { tableDir =>
       val planted = Tables.events(spark, dir)
         .withColumn("value",
           when(col("event_id") % 41 === 0, lit(-1.0)).otherwise(col("value")))
@@ -3484,8 +3464,7 @@ object SparkEntry {
     * no stop-the-world rewrite before the new layout can be
     * queried. */
   private def evoEventsTable(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_evoevents", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_evoevents", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       ev.where(col("event_id") % 2 === 0)
         .repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
@@ -3535,8 +3514,7 @@ object SparkEntry {
     * At 100 TB: expiration is pointer/manifest work — the only data
     * I/O is deleting unreferenced version dirs. */
   private def retentionRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_retention", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_retention", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       def cut(ts: String): DataFrame =
         ev.where(col("ts") < lit(java.sql.Timestamp.valueOf(ts)))
@@ -3585,8 +3563,7 @@ object SparkEntry {
     * MergeSpec carries the byte-identity-at-old-width, manifest
     * schema, and conformed-read proofs. */
   private def mergeEvoRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_mergeevo", dir, s"$dir/orders.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_mergeevo", dir) { tableDir =>
       val o = Tables.orders(spark, dir)
       val price = round(col("o_totalprice"), 2).cast("decimal(18,2)")
       val target = o.where(col("o_orderkey") % 3 =!= 0)
@@ -3636,8 +3613,7 @@ object SparkEntry {
     * workload over string dims costs a |files|·k-row manifest read,
     * never a table scan. */
   private def catStatsRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_catstats", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_catstats", dir) { tableDir =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("event_type").as("etype"),
           col("user_id"), (col("user_id") % 4).as("part"))
@@ -3682,8 +3658,7 @@ object SparkEntry {
     * boundary semantics (before-first throws, between-commits picks
     * the earlier, expiration shrinks the answerable horizon). */
   private def asOfCatalogRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_asofcat", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_asofcat", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       val cut = ev.where(
         col("ts") < lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00")))
@@ -3733,8 +3708,7 @@ object SparkEntry {
     * present as double (the q97 decimal-output lesson). Oracle
     * re-derives all three states and both diffs relationally. */
   private def changeFeedRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_cdfeed", dir, s"$dir/orders.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_cdfeed", dir) { tableDir =>
       val o = Tables.orders(spark, dir)
       val price = round(col("o_totalprice"), 2).cast("decimal(18,2)")
       graft.sources.Publish.publish(
@@ -3786,8 +3760,7 @@ object SparkEntry {
     * UNCHECKED path, proving the hazard is real), and stale-lock
     * breaking. */
   private def txnRaceRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_txnrace", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_txnrace", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       def slice(r: Int): DataFrame = ev
         .where(col("event_id") % 4 === r)
@@ -3907,8 +3880,8 @@ object SparkEntry {
     val parent = java.nio.file.Paths.get(root).getParent.toString
     val tname = java.nio.file.Paths.get(root).getFileName.toString
     // catalog instances cache their root at first reference — key the
-    // name on the artifact identity so a regenerated fingerprint gets
-    // a fresh catalog
+    // name on the artifact's run-scoped directory name so each artifact
+    // gets its own catalog (the q143 lesson)
     val cat = "gtt" + (tname.hashCode.toLong & 0xffffffffL)
     spark.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.sources.GraftCatalog].getName)
@@ -3948,8 +3921,8 @@ object SparkEntry {
     val parent = java.nio.file.Paths.get(tableDir).getParent.toString
     val tname = java.nio.file.Paths.get(tableDir).getFileName.toString
     // catalog instances cache their root at first reference — key the
-    // name on the artifact identity so a regenerated fingerprint gets
-    // a fresh catalog (the q143 lesson)
+    // name on the artifact's run-scoped directory name so each artifact
+    // gets its own catalog (the q143 lesson)
     val cat = tag + (tname.hashCode.toLong & 0xffffffffL)
     spark.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.sources.GraftCatalog].getName)
@@ -3958,8 +3931,7 @@ object SparkEntry {
   }
 
   private def sqlMergedEventsRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_sqlmerge", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_sqlmerge", dir) { tableDir =>
       graft.sources.Publish.publish(
         Tables.events(spark, dir).repartition(8), tableDir): Unit
       val (cat, tname) = sqlCatalogFor(spark, tableDir, "gsm")
@@ -4012,8 +3984,7 @@ object SparkEntry {
     * oracle re-derives the final state with the predicate negated and
     * the SET expression as a CASE — decimal-exact on both engines. */
   private def sqlRowWritesRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_sqlrow", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_sqlrow", dir) { tableDir =>
       graft.sources.Publish.publish(
         Tables.events(spark, dir).repartition(8), tableDir): Unit
       val (cat, tname) = sqlCatalogFor(spark, tableDir, "gsr")
@@ -4197,8 +4168,7 @@ object SparkEntry {
     * same full-scan aggregate hash-checks that skipping over the new
     * layout dropped no needed file. */
   private def hilbertIndexedEvents(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_hidx", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_hidx", dir) { tableDir =>
       graft.sources.ZOrder.writeHilbert(
         Tables.events(spark, dir), tableDir,
         colA = "user_id", colB = "value", bits = 8, numFiles = 32)
@@ -4248,8 +4218,7 @@ object SparkEntry {
     * contribution; top-k is a per-query keyed window, never a global
     * sort. */
   private def bm25IndexRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_bm25idx", dir, s"$dir/documents.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_bm25idx", dir) { root =>
       graft.sources.Publish.publish(
         TextOps.bm25Index(Tables.documents(spark, dir), "doc_id", "text"),
         root): Unit
@@ -4325,8 +4294,7 @@ object SparkEntry {
     * many versions it flipped, so the hash IS the loop's correctness
     * proof (q104's posture, now at the SQL surface). */
   private def sqlMaintRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_sqlmaint", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_sqlmaint", dir) { tableDir =>
       val ev = Tables.events(spark, dir)
       graft.sources.Publish.publish(
         ev.where(col("event_id") % 4 === 0).repartition(5), tableDir): Unit
@@ -4363,8 +4331,7 @@ object SparkEntry {
     * covers exactly the NULL-conformance story: DuckDB re-derives the
     * CTAS slice (src NULL) ∪ the wide inserts (src 'late'). */
   private def sqlDdlRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_sqlddl", dir, s"$dir/events.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_sqlddl", dir) { tableDir =>
       val (cat, tname) = sqlCatalogFor(spark, tableDir, "gdd")
       Tables.events(spark, dir).createOrReplaceTempView("graft_q155_events")
       spark.sql(
@@ -4404,8 +4371,7 @@ object SparkEntry {
     * pins the size cap (ceil(n/25) per shard). The oracle re-derives
     * everything from the source table: the export must be LOSSLESS. */
   private def exportShardsRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_export", dir, s"$dir/documents.parquet") { (outDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_export", dir) { outDir =>
       val scramble = pmod(
         pmod(col("doc_id"), lit(1000003L)) * lit(2654435761L), lit(1000000007L))
       graft.sources.Export.writeJsonlShards(
@@ -4419,8 +4385,7 @@ object SparkEntry {
     }
 
   private def splitExportRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_split_export", dir, s"$dir/documents.parquet") { (outDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_split_export", dir) { outDir =>
       val scramble = pmod(
         pmod(col("doc_id"), lit(1000003L)) * lit(2654435761L), lit(1000000007L))
       graft.sources.Export.writeSplitShards(
@@ -4575,8 +4540,7 @@ object SparkEntry {
     * which is what lets DuckDB reconstruct per-file stats
     * relationally. */
   private def reclusterRoots(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_reclust", dir, s"$dir/events.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_reclust", dir) { root =>
       val ev = Tables.events(spark, dir).select(col("user_id"),
         datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
           .cast("long").as("day_i"))
@@ -4677,8 +4641,7 @@ object SparkEntry {
     * fingerprint) duplicates a corpus document — the planted-dup
     * population the incremental gate exists to catch. */
   private def incDedupCorpus(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_incdedup", dir, s"$dir/documents.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_incdedup", dir) { root =>
       Tables.documents(spark, dir)
         .where(col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), TextOps.fingerprintCol(col("text")).as("fp"))
@@ -4714,8 +4677,7 @@ object SparkEntry {
     * registry entry's gate is rows>0 while the semantics are
     * spec-exact. */
   private def nearDupIndex(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_ndidx", dir, s"$dir/documents.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_ndidx", dir) { root =>
       val corpus = Tables.documents(spark, dir).where(col("doc_id") % 3 =!= 0)
       graft.sources.Publish.publish(
         graft.similarity.Dedup.bandSignatures(corpus, "doc_id", "text"), root): Unit
@@ -4797,8 +4759,7 @@ object SparkEntry {
   }
 
   private def sqlAdmitRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_sqladmit", dir, s"$dir/documents.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_sqladmit", dir) { root =>
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), TextOps.fingerprintCol(col("text")).as("fp"))
       graft.sources.Publish.publish(
@@ -4907,15 +4868,14 @@ object SparkEntry {
     * [[graft.text.Perplexity.terciles]] run the way a production
     * pipeline would (the PLANS.md r12 posture): the LM scoring pass
     * writes its `(id, n_bigrams, __ce)` table to parquet ONCE (an
-    * AQE-planned Dataset write — built per (session, SF) via the
-    * q42/q100 scratch lifecycle), and the distributed rank's .rdd
+    * AQE-planned Dataset write — built once per (run, SF) by
+    * tools.Scratch, the q42/q100 lifecycle), and the distributed rank's .rdd
     * passes read that plain scan instead of re-running the model
     * joins without AQE. Same rows as q172 bit-for-bit, so the SAME
     * oracle hash-gates both — the pair proves the rank stage is
     * storage-agnostic and prices the two postures side by side. */
   private def perplexityScoreTable(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_pplx", dir, s"$dir/documents.parquet") { (tableDir, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_pplx", dir) { tableDir =>
       val docs = Tables.documents(spark, dir)
       val (rb, vc) = graft.text.Perplexity.trainBigramModel(
         docs.where(col("lang") === "en"), "doc_id", "text")
@@ -4990,8 +4950,7 @@ object SparkEntry {
     * that over- or under-drops any row on any member breaks the
     * hash. */
   private def wapSnapshotRoot(spark: SparkSession, dir: String): String =
-    graft.tools.Scratch.cachedArtifact(
-      "graft_wapsnap", dir, s"$dir/orders.parquet") { (root, _) =>
+    graft.tools.Scratch.cachedArtifact("graft_wapsnap", dir) { root =>
       import graft.sources.Wap
       import graft.streaming.CatalogWapStream
       val cust = Tables.customer(spark, dir)
@@ -5572,8 +5531,7 @@ object SparkEntry {
     * the decoy's halved counts, and a lossy manifest/validation step
     * would fail before promotion ever happened. */
   def q80PublishRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.tools.Scratch.cachedArtifact(
-      "graft_q80", dir, s"$dir/documents.parquet") { (tableDir, _) =>
+    val root = graft.tools.Scratch.cachedArtifact("graft_q80", dir) { tableDir =>
       val docs = Tables.documents(spark, dir).select("doc_id", "source", "n_chars")
       graft.sources.Publish.publish(docs.where(col("doc_id") % 2 === 0), tableDir)
       graft.sources.Publish.publish(docs, tableDir)

@@ -26,7 +26,7 @@ import graft.operators.RangeJoin
   * The rewrite is EXACT, not best-effort. The bin path requires valid
   * short intervals, so rows are split three ways and recombined:
   *
-  *   - valid intervals spanning ≤ maxBins bins → the bin equi-join
+  *   - valid intervals spanning ≤ MaxBinsPerInterval bins → the bin equi-join
   *     (structural dedupe: each qualifying pair emitted exactly once);
   *   - everything else (empty `lo > hi`, null-bound, or mega-span
   *     intervals) → a compensation theta join of ONLY those rows
@@ -54,22 +54,20 @@ import graft.operators.RangeJoin
   * the tuned path; this rule is the transparent floor for declared
   * SQL.
   *
-  * Session confs: `spark.graft.rangeJoin.auto` (default true),
-  * `spark.graft.rangeJoin.binWidth` (default 64),
-  * `spark.graft.rangeJoin.maxBinsPerInterval` (default 4096).
+  * Session conf: `spark.graft.rangeJoin.auto` (default true). The bin
+  * width and the per-interval bin ceiling are the constants
+  * [[IntervalOverlapRewrite.BinWidth]] (64) and
+  * [[IntervalOverlapRewrite.MaxBinsPerInterval]] (4096).
   *
-  * Degeneracy bound: binWidth must suit the axis (64 fits epoch-day
-  * and epoch-second data; a microsecond axis wants a conf bump). If
-  * EVERY interval overflows maxBins, the split routes both sides to
-  * the compensation join — i.e., the plan degenerates to the
-  * ORIGINAL nested loop plus empty bin/filter branches, never
-  * asymptotically worse than not rewriting.
+  * Degeneracy bound: the bin width must suit the axis (64 fits
+  * epoch-day and epoch-second data; a microsecond axis would want a
+  * wider bin). If EVERY interval overflows the ceiling, the split
+  * routes both sides to the compensation join — i.e., the plan
+  * degenerates to the ORIGINAL nested loop plus empty bin/filter
+  * branches, never asymptotically worse than not rewriting.
   */
 case class IntervalOverlapRewrite(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
-
-  private def confStr(k: String, d: String): String =
-    spark.sessionState.conf.getConfString(k, d)
 
   private def integral(e: Expression): Boolean = e.dataType match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -77,7 +75,7 @@ case class IntervalOverlapRewrite(spark: SparkSession)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!confStr("spark.graft.rangeJoin.auto", "true").toBoolean) plan
+    if (!spark.sessionState.conf.getConfString("spark.graft.rangeJoin.auto", "true").toBoolean) plan
     else plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), _) =>
         rewrite(j, left, right, cond).getOrElse(j)
@@ -129,8 +127,7 @@ case class IntervalOverlapRewrite(spark: SparkSession)
       (rLo, lHi, c2) <- rl.find(_._3 ne c1)
       if namesOk
     } yield {
-      val binWidth = confStr("spark.graft.rangeJoin.binWidth", "64").toLong
-      val maxBins = confStr("spark.graft.rangeJoin.maxBinsPerInterval", "4096").toLong
+      import IntervalOverlapRewrite.{BinWidth, MaxBinsPerInterval}
       val rest = conjuncts.filterNot(c => (c eq c1) || (c eq c2))
       val lDf = org.apache.spark.sql.graftglue.GraftBridge.ofRows(spark, left)
       val rDf = org.apache.spark.sql.graftglue.GraftBridge.ofRows(spark, right)
@@ -141,12 +138,12 @@ case class IntervalOverlapRewrite(spark: SparkSession)
         // bounds and silently mis-route a mega interval)
         def b(c: Column) = {
           val cl = c.cast("long")
-          org.apache.spark.sql.functions.call_function("div", cl, lit(binWidth)) -
-            org.apache.spark.sql.functions.when(cl % binWidth < 0, lit(1L)).otherwise(lit(0L))
+          org.apache.spark.sql.functions.call_function("div", cl, lit(BinWidth)) -
+            org.apache.spark.sql.functions.when(cl % BinWidth < 0, lit(1L)).otherwise(lit(0L))
         }
         col(lo.name) <= col(hi.name) &&
           (b(col(hi.name)).cast(org.apache.spark.sql.types.DataTypes
-            .createDecimalType(38, 0)) - b(col(lo.name))) < lit(maxBins)
+            .createDecimalType(38, 0)) - b(col(lo.name))) < lit(MaxBinsPerInterval)
       }
       val lFit = binnable(lLo, lHi)
       val rFit = binnable(rLo, rHi)
@@ -158,7 +155,7 @@ case class IntervalOverlapRewrite(spark: SparkSession)
       val condCol = org.apache.spark.sql.graftglue.GraftBridge.column(cond)
       val main0 = RangeJoin.intervalOverlap(lv, rv,
         lLo.name, lHi.name, rLo.name, rHi.name,
-        binWidth = binWidth, maxBinsPerInterval = maxBins + 1)
+        binWidth = BinWidth, maxBinsPerInterval = MaxBinsPerInterval + 1)
       val main = rest.foldLeft(main0)((df, c) =>
         df.where(org.apache.spark.sql.graftglue.GraftBridge.column(c)))
       val comp1 = lRest.join(rDf, condCol, "inner")
@@ -168,4 +165,13 @@ case class IntervalOverlapRewrite(spark: SparkSession)
       Project(j.output, unioned.queryExecution.analyzed)
     }
   }
+}
+
+object IntervalOverlapRewrite {
+
+  /** Bin size on the shared axis. */
+  val BinWidth = 64L
+
+  /** Bins an interval may span before it takes the compensation join. */
+  val MaxBinsPerInterval = 4096L
 }

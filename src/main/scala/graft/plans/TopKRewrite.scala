@@ -52,7 +52,7 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * `kmvCols`), the rule estimates rows-per-group = N / min(Πndv, N)
   * from the merged per-file KMVs (the sidecar's own (k−1)·2^60/h_k
   * estimator) and SKIPS the heap rewrite below
-  * `spark.graft.topK.minRowsPerGroup` (default 16) — the measured
+  * [[TopKRewrite.MinRowsPerGroup]] (16) — the measured
   * groups≈rows loss regime keeps its codegen'd sort, the leaderboard
   * regime keeps the heap, and tables without stats keep the default-ON
   * posture. The sidecar read is driver-side, |files|-sized, and cached
@@ -85,8 +85,7 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   *
   * Session conf: `spark.graft.topK.auto` (default true),
   * `spark.graft.topK.maxK` (default 1024),
-  * `spark.graft.topK.statsGate` (default true),
-  * `spark.graft.topK.minRowsPerGroup` (default 16).
+  * `spark.graft.topK.statsGate` (default true).
   */
 case class TopKRewrite(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
@@ -233,8 +232,8 @@ case class TopKRewrite(spark: SparkSession)
   /** True when the heap rewrite should proceed. False ONLY when the
     * child scans exactly one parquet relation whose `_fstats` sidecar
     * carries KMV sketches for every partition key AND the estimated
-    * rows-per-group sits below the configured floor — absent or
-    * partial stats keep the default-ON posture. */
+    * rows-per-group sits below [[TopKRewrite.MinRowsPerGroup]] —
+    * absent or partial stats keep the default-ON posture. */
   private def statsGateAllows(
       child: LogicalPlan,
       partKeys: Seq[AttributeReference]): Boolean = {
@@ -242,8 +241,6 @@ case class TopKRewrite(spark: SparkSession)
     if (!conf.getConfString("spark.graft.topK.statsGate", "true").toBoolean)
       return true
     if (partKeys.isEmpty) return true
-    val minRpg =
-      conf.getConfString("spark.graft.topK.minRowsPerGroup", "16").toDouble
     // one scanned table, two serving paths: a direct parquet scan
     // (LogicalRelation over HadoopFsRelation) or a GraftCatalog DSv2
     // scan (ParquetTable at a version dir / a writable live table,
@@ -279,7 +276,7 @@ case class TopKRewrite(spark: SparkSession)
         val names = partKeys.flatMap(a => nameById.get(a.exprId))
         if (names.length != partKeys.length) return true
         TopKRewrite.rowsPerGroup(spark, path, names) match {
-          case Some(rpg) => rpg >= minRpg
+          case Some(rpg) => rpg >= TopKRewrite.MinRowsPerGroup
           case None => true
         }
       case _ => true
@@ -288,6 +285,10 @@ case class TopKRewrite(spark: SparkSession)
 }
 
 object TopKRewrite {
+
+  /** Estimated rows per group below which the stats gate keeps the
+    * window: the measured groups≈rows loss regime. */
+  val MinRowsPerGroup = 16.0
 
   // driver-side sidecar cache: statsDir -> (listing signature,
   // totalRows, ndvByCol). The signature is the sidecar's FILE LISTING

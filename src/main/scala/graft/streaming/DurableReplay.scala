@@ -22,6 +22,10 @@ import org.apache.spark.sql.functions._
   *     no-data micro-batch, hence the polling wait;
   *   - the parquet sink's transaction log makes a replayed batch
   *     idempotent — the restart cannot double-write a window.
+  *
+  * The staged input, sink and checkpoint directories come from
+  * [[graft.tools.Scratch.tempDir]]: the returned sink DataFrames stay
+  * readable until the JVM exits, which deletes them.
   */
 object DurableReplay {
 
@@ -60,9 +64,9 @@ object DurableReplay {
     *   before the mid-backlog stop) */
   def run(spark: SparkSession, events: DataFrame, expectRows: Long): (DataFrame, Int) = {
     import spark.implicits._
-    val inDir = java.nio.file.Files.createTempDirectory("graft_durable_in").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_durable_sink").toString + "/out"
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_durable_ckpt").toString
+    val inDir = graft.tools.Scratch.tempDir("graft_durable_in")
+    val sinkDir = graft.tools.Scratch.tempDir("graft_durable_sink") + "/out"
+    val ckptDir = graft.tools.Scratch.tempDir("graft_durable_ckpt")
 
     val w = org.apache.spark.sql.expressions.Window.orderBy("ts")
     val quartiled = events.withColumn("__q", ntile(4).over(w)).cache()
@@ -162,8 +166,8 @@ object DurableReplay {
       secondParts: Seq[DataFrame],
       mkQuery: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery,
       committedBatch: () => Option[Long]): Unit = {
-    val inDir = java.nio.file.Files.createTempDirectory("graft_febr_in").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_febr_ckpt").toString
+    val inDir = graft.tools.Scratch.tempDir("graft_febr_in")
+    val ckptDir = graft.tools.Scratch.tempDir("graft_febr_ckpt")
     val stamper = new Stamper(inDir)
     def stage(parts: Seq[DataFrame]): Unit = parts.foreach { p =>
       p.coalesce(1).write.mode("append").parquet(inDir)
@@ -202,9 +206,9 @@ object DurableReplay {
       orderCol: String,
       firstTransform: DataFrame => DataFrame,
       secondTransform: DataFrame => DataFrame): DataFrame = {
-    val inDir = java.nio.file.Files.createTempDirectory("graft_stateful_in").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_stateful_sink").toString + "/out"
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_stateful_ckpt").toString
+    val inDir = graft.tools.Scratch.tempDir("graft_stateful_in")
+    val sinkDir = graft.tools.Scratch.tempDir("graft_stateful_sink") + "/out"
+    val ckptDir = graft.tools.Scratch.tempDir("graft_stateful_ckpt")
 
     // one stamper across both stage() calls: the second incarnation's
     // files must sort strictly after the first's

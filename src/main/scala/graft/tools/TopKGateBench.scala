@@ -19,8 +19,7 @@ object TopKGateBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
 
-    val dir = Scratch.cachedArtifact("graft_topkgate", sfDir,
-      s"$sfDir/lineitem.parquet") { (tableDir, _) =>
+    val dir = Scratch.cachedArtifact("graft_topkgate", sfDir) { tableDir =>
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_linenumber")
       li.union(li.withColumn("l_orderkey", col("l_orderkey") + 10000000L))

@@ -222,12 +222,10 @@ class LayoutAdvisorSpec extends SparkSpec {
       .where(col("rank") === 1).collect()(0).getString(0)
     assert(layouts(0) == expected, s"materialized ${layouts(0)}, advisor says $expected")
 
-    // the materialized table prunes the box to a strict file subset...
-    val table = sys.props("java.io.tmpdir") +
-      java.io.File.separator + new java.io.File(sys.props("java.io.tmpdir"))
-        .listFiles().map(_.getName)
-        .filter(n => n.startsWith(s"graft_q123_${layouts(0).replace("+", "_")}_table_") &&
-          n.contains("sf0_001")).head
+    // the materialized table prunes the box to a strict file subset
+    // (the lookup resolves the artifact q123 built in this run)...
+    val table = graft.tools.Scratch.cachedArtifact(
+      s"graft_q123_${layouts(0).replace("+", "_")}", SfDir)(_ => fail("q123 built no artifact"))
     val lo = java.sql.Timestamp.valueOf("2024-01-08 00:00:00")
     val hi = java.sql.Timestamp.valueOf("2024-01-21 00:00:00")
     val all = new java.io.File(table).listFiles()
