@@ -2874,7 +2874,7 @@ object SparkEntry {
   }
 
   /** q124: DECLARED-SQL keep-one-per-group dedupe under the injected
-    * optimizer rule ([[graft.plans.TopRowRewrite]]) — q2's dedupe
+    * optimizer rule ([[graft.plans.TopKRewrite]], k = 1) — q2's dedupe
     * written the way every SQL user writes it: `row_number() OVER
     * (PARTITION BY … ORDER BY …)` in a subquery, `WHERE rn = 1`
     * outside. Vanilla Spark plans a full window sort — every event
@@ -9318,7 +9318,7 @@ object SparkEntry {
         |FROM agg, best""".stripMargin,
 
     // the SAME antipattern SQL the Spark side declares, run verbatim
-    // by DuckDB — Spark's side goes through the injected TopRowRewrite
+    // by DuckDB — Spark's side goes through the injected TopKRewrite
     // (window → min_by aggregation), DuckDB plans its own window;
     // (ts, event_id) is a unique tiebreak so both picks are
     // deterministic and must hash-match. CAST(ts AS TIMESTAMP)

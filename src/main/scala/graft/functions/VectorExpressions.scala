@@ -121,7 +121,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     ext.injectPostHocResolutionRule(session => graft.plans.RowLevelSqlBridge(session))
     ext.injectPreCBORule(session => graft.plans.IntervalOverlapRewrite(session))
     ext.injectPreCBORule(session => graft.plans.AsOfRewrite(session))
-    ext.injectPreCBORule(session => graft.plans.TopRowRewrite(session))
     ext.injectPreCBORule(session => graft.plans.TopKRewrite(session))
     ext.injectPreCBORule(session => graft.plans.ViewMatchRewrite(session))
   }

@@ -2,122 +2,126 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectTopK}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectTopK, Complete, MaxBy, MinBy}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.IntegerType
 
-/** Injected optimizer rule: the `row_number() <= k` top-k-per-group
-  * antipattern becomes a bounded-heap aggregation plus explode —
-  * [[TopRowRewrite]]'s k = 1 rewrite generalized to k ≥ 2 (Flink's
-  * Rank operator makes the same move; the reference keeps "top N
-  * wallets per coin" exactly this way — dreambot_whale_chart.py:
-  * 370-436 materializes per-coin leaderboards).
+/** Injected optimizer rule: the per-group top-N antipattern —
+  * `row_number()` over a window, filtered to `rn ≤ k` — becomes an
+  * aggregation, for every k ≥ 1.
   *
   * {{{
   * SELECT k, t, v, rn FROM (
   *   SELECT *, row_number() OVER (PARTITION BY k ORDER BY t) AS rn
   *   FROM events
-  * ) WHERE rn <= 3
+  * ) WHERE rn <= 3          -- or rn = 1: keep one row per group
   * }}}
   *
   * Spark 4 already thins the EXCHANGE for this shape (a Partial
   * `WindowGroupLimit` keeps ≤ k rows per group per task before the
   * shuffle) — but it gets there by FULLY SORTING every map task by
-  * (k, order…) and then sorting again on the reduce side. Those two
-  * sorts are what this rewrite removes: group by the partition keys
-  * and aggregate `CollectTopK(struct(orderKeys…, payload…), k)` — a
-  * bounded heap of k rows per group, map-side partial, O(n·log k)
-  * streaming inserts with no sort anywhere; the heap's sorted spill
-  * (best-first on both directions) restores `row_number` as
-  * posexplode position + 1.
+  * (k, order…) and then sorting again on the reduce side; at 100 TB
+  * those local sorts are the dominant cost and the spill risk. Both
+  * rewrites group by the partition keys with map-side PARTIAL
+  * aggregation instead — each mapper ships at most k candidates per
+  * group it has seen, and nothing sorts by the order keys:
   *
-  * Measured regimes (PLANS.md r11, 1.8M-row lineitem, local[8]): the
-  * heap wins where rows-per-group is large — the leaderboard shape
-  * this idiom exists for (top-3 per supplier: 1.5 s → 0.8 s; at
-  * cluster scale the avoided map sorts are also the spill risk) — and
-  * loses ~1.4× where groups ≈ rows (top-3 per order: 450k groups'
-  * heap-object churn beats codegen'd sort). The downside is bounded
-  * (ObjectHashAggregate falls back to sort-based aggregation under
-  * memory pressure — the window plan's cost shape); the upside grows
-  * with rows-per-group, so the rule defaults ON like Flink's Rank.
+  *   - k = 1, the keep-one-per-group dedupe (the reference dedupes
+  *     market-data rows exactly this way — core_coin_market_data.py:
+  *     54-58, the shape [[graft.operators.WindowOps.dedupeFirst]]
+  *     wraps; Flink's `Deduplicate` operator): `min_by`/`max_by` of
+  *     the payload struct over the order-key struct. The struct-typed
+  *     buffer keeps the aggregate off the fixed-width hash path, so
+  *     the physical op is a SortAggregate sorting by the GROUP KEY
+  *     only. A surviving `rn` output becomes the literal 1 it is
+  *     provably equal to.
+  *   - k ≥ 2, the leaderboard (the reference's top-N wallets per coin
+  *     — dreambot_whale_chart.py:370-436; Flink's Rank operator):
+  *     `CollectTopK(struct(orderKeys…, payload…), k)`, a bounded heap
+  *     of k rows per group, O(n·log k) streaming inserts; the heap's
+  *     best-first spill restores `row_number` as posexplode position
+  *     + 1. Only k ≤ [[TopKRewrite.MaxK]]: the heap is per-group
+  *     executor memory, and for huge k a window sort is the better plan.
   *
-  * STATS-GATED DISPATCH: when the window's child scans ONE parquet
-  * table — a direct scan, or a GraftCatalog-served DSv2 relation
-  * (the live table's sidecar sits in its current version dir) —
-  * carrying an `_fstats` sidecar with `kmv_<c>` sketches for
+  * Measured heap regimes (PLANS.md r11, 1.8M-row lineitem, local[8]):
+  * the heap wins where rows-per-group is large (top-3 per supplier:
+  * 1.5 s → 0.8 s) and loses ~1.4× where groups ≈ rows (top-3 per
+  * order: 450k groups' heap-object churn beats codegen'd sort). So
+  * the k ≥ 2 rewrite is STATS-GATED: when the window's child scans ONE
+  * parquet table — a direct scan, or a GraftCatalog-served DSv2
+  * relation (the live table's sidecar sits in its current version
+  * dir) — carrying an `_fstats` sidecar with `kmv_<c>` sketches for
   * every partition key ([[graft.sources.FileStats.build]]'s
   * `kmvCols`), the rule estimates rows-per-group = N / min(Πndv, N)
-  * from the merged per-file KMVs (the sidecar's own (k−1)·2^60/h_k
-  * estimator) and SKIPS the heap rewrite below
-  * [[TopKRewrite.MinRowsPerGroup]] (16) — the measured
-  * groups≈rows loss regime keeps its codegen'd sort, the leaderboard
-  * regime keeps the heap, and tables without stats keep the default-ON
-  * posture. The sidecar read is driver-side, |files|-sized, and cached
-  * by the sidecar directory's mtime.
+  * from the merged per-file KMVs and keeps the window below
+  * [[TopKRewrite.MinRowsPerGroup]]. Tables without stats get the
+  * heap unconditionally. The sidecar read is driver-side,
+  * |files|-sized, and cached by the sidecar's file listing. k = 1 has
+  * no loss regime to gate: one candidate per group is never more work
+  * than the window's sort.
   *
-  * Eligibility mirrors [[TopRowRewrite]] (conservative; anything else
-  * is untouched):
-  *   - `Filter` over a `Window` (possibly through an attribute-only
-  *     `Project`, and through an inferred `WindowGroupLimit`);
-  *   - exactly one window expression: `row_number()` on the default
-  *     running frame;
-  *   - filter conjuncts pin `rn ≤ k` (`rn <= k` / `rn < k+1` /
-  *     `k >= rn` / mirrored) for one literal 2 ≤ k ≤
-  *     `spark.graft.topK.maxK` (default 1024 — the heap is per-group
-  *     executor memory, a window sort is the better plan for huge k),
-  *     plus inferred `IsNotNull(rn)`;
+  * Eligibility (conservative — anything else is left untouched):
+  *   - `Filter` over a `Window` (or over an attribute-only `Project`
+  *     of one, and looking through an inferred `WindowGroupLimit`);
+  *   - the Window computes EXACTLY one expression: `row_number()`
+  *     over (partition, order) with the default running frame — more
+  *     window columns would be lost by grouping;
+  *   - filter conjuncts over the row-number attribute only: bounds
+  *     `rn <= k` / `rn < k+1` / `k >= rn` / `k+1 > rn`, the first-row
+  *     pins `rn = 1` / `1 = rn`, and inferred `IsNotNull(rn)`; at
+  *     least one bound, and the tightest one is k;
   *   - partition keys are plain attributes; order keys are attributes
-  *     in ONE direction with default null placement (ASC NULLS FIRST
-  *     or DESC NULLS LAST — the interpreted struct ordering's
-  *     null-smallest convention matches exactly those two);
-  *   - every carried type is orderable (the heap compares the whole
-  *     struct — a map-typed payload column disqualifies).
+  *     ordered in ONE direction with the default null placement
+  *     (all `ASC NULLS FIRST` or all `DESC NULLS LAST`) — exactly the
+  *     orderings a lexicographic struct comparison reproduces;
+  *   - for k ≥ 2, every carried type is orderable (the heap compares
+  *     the whole struct — a map-typed payload column disqualifies).
   *
-  * Tie semantics, [[TopRowRewrite]]'s posture verbatim: `row_number`
-  * breaks ORDER BY ties arbitrarily; the heap breaks them by the
-  * trailing payload comparison — one arbitrary-but-valid assignment
-  * replaces another, never a wrong row set. Queries with a unique
-  * tiebreaker (every graft registry query) are deterministic and
-  * exact, rank column included.
+  * Group universes match exactly: a window partition and a group-by
+  * group both exist iff a row exists, and both treat NULL keys as a
+  * regular value. Ties, [[AsOfRewrite]]'s posture verbatim:
+  * `row_number` breaks ORDER BY ties arbitrarily, and so do
+  * `min_by` and the heap's trailing payload comparison — one
+  * arbitrary-but-valid assignment replaces another, never a wrong row
+  * set. Queries with a unique tiebreaker (every graft registry query)
+  * are deterministic and exact, rank column included.
   *
-  * Session conf: `spark.graft.topK.auto` (default true),
-  * `spark.graft.topK.maxK` (default 1024),
-  * `spark.graft.topK.statsGate` (default true).
+  * Injected pre-CBO: after pushdown/pruning normalized the child, and
+  * the replacement Aggregate can never re-match the Filter-over-Window
+  * pattern.
+  *
+  * Session conf: `spark.graft.topK.auto` (default true).
   */
 case class TopKRewrite(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val conf = spark.sessionState.conf
-    val on = conf.getConfString("spark.graft.topK.auto", "true").toBoolean
+    val on = spark.sessionState.conf
+      .getConfString("spark.graft.topK.auto", "true").toBoolean
     if (!on) plan
-    else {
-      val maxK = conf.getConfString("spark.graft.topK.maxK", "1024").toInt
-      plan.transformUp {
-        case f @ Filter(cond, child) =>
-          unwrapWindow(child).flatMap(w => rewrite(cond, w, maxK)).getOrElse(f)
-      }
+    else plan.transformUp {
+      case f @ Filter(cond, child) => rewrite(cond, child).getOrElse(f)
     }
   }
 
-  private def unwrapWindow(plan: LogicalPlan): Option[(Window, Option[Seq[AttributeReference]])] =
-    plan match {
-      case w: Window => Some((w, None))
+  private def rewrite(cond: Expression, filterChild: LogicalPlan): Option[LogicalPlan] = {
+    // the Window under the filter, looking through a pruning-only
+    // projection; the filter's output is that projection's, or the
+    // Window's
+    val (w, outAttrs) = filterChild match {
+      case w: Window => (w, w.output)
       case Project(projectList, w: Window)
           if projectList.forall(_.isInstanceOf[AttributeReference]) =>
-        Some((w, Some(projectList.map(_.asInstanceOf[AttributeReference]))))
-      case _ => None
+        (w, projectList.map(_.toAttribute))
+      case _ => return None
     }
 
-  private def rewrite(
-      cond: Expression,
-      wp: (Window, Option[Seq[AttributeReference]]),
-      maxK: Int): Option[LogicalPlan] = {
-    val (w, proj) = wp
-
+    // exactly one window expression: row_number() over the default
+    // running frame (the analyzer pins row_number's frame to
+    // ROWS UNBOUNDED PRECEDING .. CURRENT ROW)
     val rnAttr = w.windowExpressions match {
       case Seq(a @ Alias(WindowExpression(RowNumber(),
           WindowSpecDefinition(_, _,
@@ -126,31 +130,10 @@ case class TopKRewrite(spark: SparkSession)
       case _ => return None
     }
 
-    // conjuncts: exactly one rn ≤ k bound (k ≥ 2 — k = 1 is
-    // TopRowRewrite's, which runs first), plus inferred IsNotNull(rn)
-    val conjuncts = splitConjunctivePredicates(cond)
-    if (conjuncts.isEmpty) return None
-    var bound: Option[Int] = None
-    def offer(k: Int): Boolean = bound match {
-      case None => bound = Some(k); true
-      case Some(b) => bound = Some(math.min(b, k)); true
-    }
-    val shapeOk = conjuncts.forall {
-      case LessThanOrEqual(a: AttributeReference, IntegerLiteral(k))
-          if a.semanticEquals(rnAttr) => offer(k)
-      case LessThan(a: AttributeReference, IntegerLiteral(k))
-          if a.semanticEquals(rnAttr) => offer(k - 1)
-      case GreaterThanOrEqual(IntegerLiteral(k), a: AttributeReference)
-          if a.semanticEquals(rnAttr) => offer(k)
-      case GreaterThan(IntegerLiteral(k), a: AttributeReference)
-          if a.semanticEquals(rnAttr) => offer(k - 1)
-      case IsNotNull(a: AttributeReference) => a.semanticEquals(rnAttr)
-      case _ => false
-    }
-    if (!shapeOk) return None
-    val k = bound.getOrElse(return None)
-    if (k < 2 || k > maxK) return None
+    val k = bound(cond, rnAttr).getOrElse(return None)
+    if (k < 1 || k > TopKRewrite.MaxK) return None
 
+    // partition: plain attributes (dedup — PARTITION BY k, k is legal)
     val partKeys = w.partitionSpec.map {
       case a: AttributeReference => a
       case _ => return None
@@ -158,6 +141,7 @@ case class TopKRewrite(spark: SparkSession)
       if (acc.exists(_.semanticEquals(a))) acc else acc :+ a
     }
 
+    // order: attributes, one direction, default null placement
     if (w.orderSpec.isEmpty) return None
     val orderAttrs = w.orderSpec.map {
       case SortOrder(a: AttributeReference, dir, nulls, _)
@@ -169,77 +153,110 @@ case class TopKRewrite(spark: SparkSession)
       return None
     val orderKeys = orderAttrs.map(_._1)
 
+    // strip the WindowGroupLimit InferWindowGroupLimit may have
+    // planted (it keeps a SUPERSET — rank ≤ limit — of what the
+    // aggregate recomputes exactly, so dropping it is sound)
     val child = w.child match {
       case WindowGroupLimit(_, _, _, _, gchild) => gchild
       case c => c
     }
-
-    // stats-gated dispatch: a scanned table whose sidecar says
-    // groups ≈ rows keeps the window plan (the measured loss regime)
-    if (!statsGateAllows(child, partKeys)) return None
     val partSet = AttributeSet(partKeys)
-    // order keys lead the struct (they ARE the comparison); the rest of
-    // the child's output follows once — not duplicated under both roles
-    val orderSet = AttributeSet(orderKeys)
-    val payload = child.output.filterNot(a => partSet.contains(a) || orderSet.contains(a))
 
-    // the heap compares the full carried struct — every field must
-    // be orderable or the aggregate cannot exist
-    val carried = CreateStruct((orderKeys ++ payload).toSeq)
-    if (!TypeUtils.checkForOrderingExpr(carried.dataType, "graft_topk").isSuccess)
-      return None
+    if (k == 1) {
+      // payload = child outputs that are not group keys (group keys
+      // pass through the grouping; everything else rides the struct)
+      val payload = child.output.filterNot(partSet.contains)
+      val pick =
+        if (ascending) MinBy(CreateStruct(payload), CreateStruct(orderKeys))
+        else MaxBy(CreateStruct(payload), CreateStruct(orderKeys))
+      val picked = Alias(
+        AggregateExpression(pick, Complete, isDistinct = false), "__graft_top_row")()
+      val agg = Aggregate(partKeys, partKeys :+ picked, child, None)
+      restore(outAttrs, rnAttr, Literal(1), partKeys, picked.toAttribute, payload, agg)
+    } else {
+      if (!statsGateAllows(child, partKeys)) return None
+      // order keys lead the struct (they ARE the comparison); the rest
+      // of the child's output follows once
+      val orderSet = AttributeSet(orderKeys)
+      val payload = child.output.filterNot(a => partSet.contains(a) || orderSet.contains(a))
+      val fields = orderKeys ++ payload
+      val carried = CreateStruct(fields)
+      if (!TypeUtils.checkForOrderingExpr(carried.dataType, "graft_topk").isSuccess)
+        return None
 
-    // ascending window order keeps the k SMALLEST → reverse = true
-    // (CollectTopK spills best-first on both settings)
-    val topk = AggregateExpression(
-      new CollectTopK(carried, k, ascending),
-      org.apache.spark.sql.catalyst.expressions.aggregate.Complete,
-      isDistinct = false)
-    val topkAlias = Alias(topk, "__graft_topk")()
-    val agg = Aggregate(partKeys, (partKeys :+ topkAlias).toSeq, child, None)
-
-    val structType = carried.dataType.asInstanceOf[StructType]
-    val posAttr = AttributeReference("__graft_pos", IntegerType, nullable = false)()
-    val rowAttr = AttributeReference("__graft_row", structType, nullable = false)()
-    val gen = Generate(
-      PosExplode(topkAlias.toAttribute),
-      unrequiredChildIndex = Nil,
-      outer = false,
-      qualifier = None,
-      generatorOutput = Seq(posAttr, rowAttr),
-      child = agg)
-
-    val outAttrs: Seq[Attribute] = proj.getOrElse(w.output)
-    val fieldIdx = (orderKeys ++ payload).map(_.exprId).zipWithIndex.toMap
-    val restored = outAttrs.map { a =>
-      if (a.semanticEquals(rnAttr))
-        Alias(Add(posAttr, Literal(1)), a.name)(exprId = a.exprId)
-      else if (partSet.contains(a))
-        partKeys.find(_.semanticEquals(a)) match {
-          case Some(pk) if pk.exprId == a.exprId => pk
-          case Some(pk) => Alias(pk, a.name)(exprId = a.exprId)
-          case None => return None
-        }
-      else fieldIdx.get(a.exprId) match {
-        case Some(i) =>
-          Alias(GetStructField(rowAttr, i, Some(a.name)), a.name)(exprId = a.exprId)
-        case None => return None
-      }
+      // ascending window order keeps the k SMALLEST → reverse = true
+      // (CollectTopK spills best-first on both settings)
+      val topk = Alias(AggregateExpression(
+        new CollectTopK(carried, k, ascending), Complete, isDistinct = false), "__graft_topk")()
+      val agg = Aggregate(partKeys, partKeys :+ topk, child, None)
+      val posAttr = AttributeReference("__graft_pos", IntegerType, nullable = false)()
+      val rowAttr = AttributeReference("__graft_row", carried.dataType, nullable = false)()
+      val gen = Generate(
+        PosExplode(topk.toAttribute),
+        unrequiredChildIndex = Nil,
+        outer = false,
+        qualifier = None,
+        generatorOutput = Seq(posAttr, rowAttr),
+        child = agg)
+      restore(outAttrs, rnAttr, Add(posAttr, Literal(1)), partKeys, rowAttr, fields, gen)
     }
-    Some(Project(restored, gen))
+  }
+
+  /** The k that the conjuncts of `cond` bound `rn` to — the tightest
+    * of its `rn ≤ k` forms and `rn = 1` pins — or None when a conjunct
+    * is anything else or no bound is present (a bare `IsNotNull(rn)`
+    * filters nothing). `rn = 2` is a slice, not a prefix: no bound. */
+  private def bound(cond: Expression, rn: Attribute): Option[Int] =
+    splitConjunctivePredicates(cond).map {
+      case LessThanOrEqual(a: AttributeReference, IntegerLiteral(k))
+          if a.semanticEquals(rn) => Some(k)
+      case LessThan(a: AttributeReference, IntegerLiteral(k))
+          if a.semanticEquals(rn) => Some(k - 1)
+      case GreaterThanOrEqual(IntegerLiteral(k), a: AttributeReference)
+          if a.semanticEquals(rn) => Some(k)
+      case GreaterThan(IntegerLiteral(k), a: AttributeReference)
+          if a.semanticEquals(rn) => Some(k - 1)
+      case EqualTo(a: AttributeReference, IntegerLiteral(1))
+          if a.semanticEquals(rn) => Some(1)
+      case EqualTo(IntegerLiteral(1), a: AttributeReference)
+          if a.semanticEquals(rn) => Some(1)
+      case IsNotNull(a: AttributeReference) if a.semanticEquals(rn) => None
+      case _ => return None
+    }.flatten.minOption
+
+  /** `plan` projected back onto the pre-rewrite output attributes,
+    * exprIds kept so parents resolve unchanged: `rn` becomes `rank`,
+    * partition keys pass through the grouping, and every other
+    * attribute is its field of the struct `row`, laid out as
+    * `fields`. */
+  private def restore(
+      outAttrs: Seq[Attribute],
+      rn: Attribute,
+      rank: Expression,
+      partKeys: Seq[AttributeReference],
+      row: Attribute,
+      fields: Seq[Attribute],
+      plan: LogicalPlan): Option[LogicalPlan] = {
+    val fieldIdx = fields.map(_.exprId).zipWithIndex.toMap
+    val restored = outAttrs.map { a =>
+      if (a.semanticEquals(rn)) Alias(rank, a.name)(exprId = a.exprId)
+      else partKeys.find(_.semanticEquals(a)).getOrElse(fieldIdx.get(a.exprId) match {
+        case Some(i) =>
+          Alias(GetStructField(row, i, Some(a.name)), a.name)(exprId = a.exprId)
+        case None => return None
+      })
+    }
+    Some(Project(restored, plan))
   }
 
   /** True when the heap rewrite should proceed. False ONLY when the
     * child scans exactly one parquet relation whose `_fstats` sidecar
     * carries KMV sketches for every partition key AND the estimated
     * rows-per-group sits below [[TopKRewrite.MinRowsPerGroup]] —
-    * absent or partial stats keep the default-ON posture. */
+    * absent or partial stats keep the rewrite. */
   private def statsGateAllows(
       child: LogicalPlan,
       partKeys: Seq[AttributeReference]): Boolean = {
-    val conf = spark.sessionState.conf
-    if (!conf.getConfString("spark.graft.topK.statsGate", "true").toBoolean)
-      return true
     if (partKeys.isEmpty) return true
     // one scanned table, two serving paths: a direct parquet scan
     // (LogicalRelation over HadoopFsRelation) or a GraftCatalog DSv2
@@ -285,6 +302,9 @@ case class TopKRewrite(spark: SparkSession)
 }
 
 object TopKRewrite {
+
+  /** Largest k the heap rewrite takes; beyond it the window stays. */
+  val MaxK = 1024
 
   /** Estimated rows per group below which the stats gate keeps the
     * window: the measured groups≈rows loss regime. */

@@ -35,13 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object Importance {
 
-  private val P = 1000000007L
-
-  /** Exact char-polynomial word hash: fold(chars)(acc·31 + ascii) mod p.
-    * Engine-parity twin of DuckDB list_reduce over string_split(w, ''). */
-  private def wordHash(w: Column): Column =
-    aggregate(split(w, ""), lit(7L), (acc, c) => (acc * 31L + ascii(c)) % P)
-
   /** (doc id, [carry...], bucket, n) hashed unigram+bigram counts per
     * document. Empty tokens (space runs) drop on both engines. `carry`
     * columns are functionally dependent on the doc id (a flag, a
@@ -58,31 +51,6 @@ object Importance {
           .as("bucket"): _*)
       .groupBy(col(idCol) +: carry.map(c => col(c._1)) :+ col("bucket"): _*)
       .agg(count(lit(1)).as("n"))
-
-  /** The declarative HOF form graft_grams replaced — kept as the
-    * equivalence witness ([[graft.functions.GramBuckets]] must emit
-    * the identical multiset; ImportanceSpec pins it) and as the
-    * reference for what the native loop computes. */
-  def hashedGramCountsHof(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      buckets: Int): DataFrame = {
-    val hs = filter(
-      transform(split(col(textCol), " "), w => when(length(w) > 0, wordHash(w))),
-      h => h.isNotNull)
-    val uni = hs
-    val bi = when(size(hs) > 1,
-      zip_with(slice(hs, lit(1), size(hs) - 1), slice(hs, lit(2), size(hs) - 1),
-        (a, b) => (a * 131L + b) % P))
-      .otherwise(array().cast("array<bigint>"))
-    docs
-      .select(col(idCol), explode(concat(uni, bi)).as("g"))
-      .withColumn("bucket", pmod(col("g"), lit(buckets.toLong)))
-      .drop("g")
-      .groupBy(col(idCol), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-  }
 
   /** The per-bucket Laplace-smoothed log-ratio, shared by the batch
     * selector and the streaming admission gate (S34) so the two

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.text.Importance
@@ -10,6 +11,37 @@ import graft.text.Importance
   * (target-like docs outrank raw-like docs; scores are reproducible). */
 class ImportanceSpec extends SparkSpec {
   import spark.implicits._
+
+  private val P = 1000000007L
+
+  /** Exact char-polynomial word hash: fold(chars)(acc·31 + ascii) mod p.
+    * Engine-parity twin of DuckDB list_reduce over string_split(w, ''). */
+  private def wordHash(w: Column): Column =
+    aggregate(split(w, ""), lit(7L), (acc, c) => (acc * 31L + ascii(c)) % P)
+
+  /** The declarative HOF form graft_grams replaced, kept as the
+    * reference for what the native loop computes:
+    * [[graft.functions.GramBuckets]] must emit the identical multiset. */
+  private def hashedGramCountsHof(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      buckets: Int): DataFrame = {
+    val hs = filter(
+      transform(split(col(textCol), " "), w => when(length(w) > 0, wordHash(w))),
+      h => h.isNotNull)
+    val uni = hs
+    val bi = when(size(hs) > 1,
+      zip_with(slice(hs, lit(1), size(hs) - 1), slice(hs, lit(2), size(hs) - 1),
+        (a, b) => (a * 131L + b) % P))
+      .otherwise(array().cast("array<bigint>"))
+    docs
+      .select(col(idCol), explode(concat(uni, bi)).as("g"))
+      .withColumn("bucket", pmod(col("g"), lit(buckets.toLong)))
+      .drop("g")
+      .groupBy(col(idCol), col("bucket"))
+      .agg(count(lit(1)).as("n"))
+  }
 
   test("hashedGramCounts: unigrams + adjacent bigrams, empty tokens drop") {
     val docs = Seq(
@@ -42,7 +74,7 @@ class ImportanceSpec extends SparkSpec {
     for (b <- Seq(7, 512, 1 << 20)) {
       val native = Importance.hashedGramCounts(docs, "doc_id", "text", b)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val hof = Importance.hashedGramCountsHof(docs, "doc_id", "text", b)
+      val hof = hashedGramCountsHof(docs, "doc_id", "text", b)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(native == hof,
         s"b=$b native-only=${native.diff(hof)} hof-only=${hof.diff(native)}")

@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The injected top-k-per-group rewrite (plans/TopKRewrite):
+/** The injected per-group top-N rule's k ≥ 2 branch (plans/TopKRewrite):
   * `row_number() <= k` over a window must produce IDENTICAL rows —
   * rank column included — with the rule on and off, while the
   * rewritten physical plan replaces the window sort with a bounded
-  * top-k aggregate plus explode. Guards: k beyond maxK, extra window
-  * columns, mixed sort directions, and non-rn filter conjuncts all
-  * keep their window. */
+  * top-k aggregate plus explode. Guards: k beyond `TopKRewrite.MaxK`,
+  * extra window columns, mixed sort directions, and non-rn filter
+  * conjuncts all keep their window; the KMV stats gate keeps it for
+  * tables whose sidecar says groups ≈ rows. */
 class TopKRewriteSpec extends SparkSpec {
 
   private def mkPanel(): Unit = {
@@ -134,14 +135,12 @@ class TopKRewriteSpec extends SparkSpec {
       """SELECT k, s FROM (
         |  SELECT *, rank() OVER (PARTITION BY k ORDER BY t) AS rn
         |  FROM topk_ev) WHERE rn <= 2""".stripMargin)
-    // k beyond the configured heap bound: the window sort is the
-    // better plan and the rule must stand aside
-    spark.conf.set("spark.graft.topK.maxK", "2")
-    try keepsWindow(
-      """SELECT k, s FROM (
+    // k beyond the heap bound: the window sort is the better plan and
+    // the rule must stand aside
+    keepsWindow(
+      s"""SELECT k, s FROM (
         |  SELECT *, row_number() OVER (PARTITION BY k ORDER BY t) AS rn
-        |  FROM topk_ev) WHERE rn <= 3""".stripMargin)
-    finally spark.conf.set("spark.graft.topK.maxK", "1024")
+        |  FROM topk_ev) WHERE rn <= ${graft.plans.TopKRewrite.MaxK + 1}""".stripMargin)
   }
 
   test("rn <= 1 belongs to TopRowRewrite: still no window, via min_by not a heap") {
@@ -191,11 +190,13 @@ class TopKRewriteSpec extends SparkSpec {
         (q(churn).collect().map(_.toSeq).toSet,
           q(lead).collect().map(_.toSeq).toSet))
       assert(churnRows == churnOff && leadRows == leadOff)
-      // gate disabled: the default-ON posture returns for churn too
-      spark.conf.set("spark.graft.topK.statsGate", "false")
-      try assert(!q(churn).queryExecution.executedPlan.toString.contains("Window"),
-        "statsGate=false must restore the unconditional rewrite")
-      finally spark.conf.set("spark.graft.topK.statsGate", "true")
+      // the same churn data without a sidecar: the unconditional
+      // rewrite returns
+      val churnBare = s"$root/churn_bare"
+      (0 until 4000).map(i => (i.toLong, i.toLong % 7, i.toDouble))
+        .toDF("g", "t", "v").repartition(4).write.parquet(churnBare)
+      assert(!q(churnBare).queryExecution.executedPlan.toString.contains("Window"),
+        "a churn table without a sidecar must get the unconditional rewrite")
       // a table WITHOUT a sidecar keeps default-ON (unknown ≠ gated)
       val bare = s"$root/bare"
       (0 until 100).map(i => (i.toLong, i.toLong, i.toDouble))
@@ -266,11 +267,13 @@ class TopKRewriteSpec extends SparkSpec {
       val plan = spark.sql(sql).queryExecution.executedPlan.toString
       assert(plan.contains("Window"),
         s"the catalog-served churn table must keep the window sort:\n$plan")
-      // …and the gate is the reason: disabled, the heap returns
-      spark.conf.set("spark.graft.topK.statsGate", "false")
-      try assert(!spark.sql(sql).queryExecution.executedPlan.toString
-        .contains("Window"))
-      finally spark.conf.set("spark.graft.topK.statsGate", "true")
+      // …and the gate is the reason: the same data published without
+      // a sidecar gets the heap
+      graft.sources.Publish.publish(
+        (0 until 4000).map(i => (i.toLong, i.toLong % 7, i.toDouble))
+          .toDF("g", "t", "v"), s"$root/churn_bare"): Unit
+      assert(!spark.sql(sql.replace(s"$cat.churn", s"$cat.churn_bare"))
+        .queryExecution.executedPlan.toString.contains("Window"))
     } finally graft.sources.Sinks.deleteRecursively(java.nio.file.Paths.get(root))
   }
 }

@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The injected keep-one-per-group rewrite (plans/TopRowRewrite):
+/** The injected per-group top-N rule's k = 1 branch (plans/TopKRewrite):
   * `row_number() = 1` over a window must produce IDENTICAL rows with
   * the rule on and off — null partition keys kept as their own group,
   * null order keys placed by the default null ordering, both ASC and
   * DESC directions — while the rewritten physical plan replaces the
-  * window sort with a hash aggregate. Guards: rn = 2, extra window
-  * columns, mixed sort directions, non-default null placement, and
-  * filters touching other columns all leave the plan untouched. */
+  * window sort with a `min_by`/`max_by` aggregate. Guards: rn = 2, extra
+  * window columns, mixed sort directions, non-default null placement,
+  * and filters touching other columns all leave the plan untouched. */
 class TopRowRewriteSpec extends SparkSpec {
 
   private def mkPanel(): Unit = {
@@ -41,8 +41,8 @@ class TopRowRewriteSpec extends SparkSpec {
     }.toSet
 
   private def withRuleOff[A](body: => A): A = {
-    spark.conf.set("spark.graft.topRow.auto", "false")
-    try body finally spark.conf.set("spark.graft.topRow.auto", "true")
+    spark.conf.set("spark.graft.topK.auto", "false")
+    try body finally spark.conf.set("spark.graft.topK.auto", "true")
   }
 
   private def planOf(sql: String): String =
@@ -96,6 +96,23 @@ class TopRowRewriteSpec extends SparkSpec {
     assert(vanilla == rewritten, s"vanilla=$vanilla rewritten=$rewritten")
     assert(rewritten.forall(_.getInt(2) == 1))
     assert(!planOf(sql).contains("Window"))
+  }
+
+  test("a k = 1 bound beside a looser one collapses to k = 1: rewritten, rule on ≡ rule off") {
+    mkPanel()
+    for (bound <- Seq("rn = 1 AND rn <= 5", "rn <= 1 AND rn < 4")) {
+      val sql =
+        s"""SELECT k, t, s, v FROM (
+           |  SELECT *, row_number() OVER (PARTITION BY k ORDER BY t) AS rn
+           |  FROM toprow_ev) WHERE $bound""".stripMargin
+      val vanilla = withRuleOff(rows(spark.sql(sql)))
+      val rewritten = rows(spark.sql(sql))
+      assert(vanilla == rewritten && rewritten.size == 4,
+        s"$bound: vanilla=$vanilla rewritten=$rewritten")
+      val plan = planOf(sql)
+      assert(!plan.contains("Window") && plan.contains("partial_min_by"),
+        s"$bound kept its window:\n$plan")
+    }
   }
 
   test("guards: ineligible shapes keep their window") {

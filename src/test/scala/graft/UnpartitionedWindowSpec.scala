@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LogicalWindow}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Plan-level guard that REPLACES WindowExec's "No Partition Defined"
   * log warning (suppressed in GraftSession — r13's driver bench tail
@@ -16,8 +19,13 @@ import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
   *
   * The walk happens AFTER optimization on purpose: Spark's
   * EliminateWindowPartitions strips foldable partition keys, so a
-  * constant-key "silencer" window would still be caught. */
-class UnpartitionedWindowSpec extends SparkSpec {
+  * constant-key "silencer" window would still be caught.
+  *
+  * The same walk pins where plans/TopKRewrite fires, per branch. The
+  * rewrite preserves results, so the oracle hashes pass whether it
+  * fires or not; these pins are what notices a registry query that
+  * silently stops (or starts) taking it. */
+class UnpartitionedWindowSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Queries whose plans legitimately carry an unpartitioned window,
     * with the k-row bound that justifies each. Adding a key here
@@ -54,18 +62,47 @@ class UnpartitionedWindowSpec extends SparkSpec {
     "q136_cat_advisor" -> "rank over |candidate layouts|",
   )
 
-  test("every unpartitioned window in the registry is pinned k-row-bounded") {
-    val carriers = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+  /** Queries whose optimized plan carries TopKRewrite's k = 1
+    * `min_by`/`max_by` aggregate (alias `__graft_top_row`). */
+  private val TopRowCarriers = Set(
+    "q2_dedupe_rank", "q14_first_price", "q29_incremental_upsert",
+    "q93_scd2_history", "q98_interval_allocation", "q124_declared_dedupe",
+    "q147_scd2_apply")
+
+  /** Queries whose optimized plan carries TopKRewrite's k ≥ 2
+    * `collect_top_k` heap (alias `__graft_topk`). */
+  private val HeapCarriers = Set(
+    "q109_kmv_overlap", "q116_pq_adc_knn", "q117_ivfpq_knn",
+    "q122_residual_ivfpq", "q171_declared_topk")
+
+  private val RewriteAliases = Set("__graft_top_row", "__graft_topk")
+
+  /** One walk over the registry: per query, the markers its optimized
+    * plan carries — "window" for an unpartitioned Window, and the
+    * alias of each TopKRewrite aggregate. */
+  private lazy val markers: Map[String, Set[String]] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         // release between queries so the walk itself doesn't leak
         // cache entries across 207 eager constructions
         CacheScope.releaseAll(spark): Unit
         val plan = fn(spark, SfDir).queryExecution.optimizedPlan
-        val bad = plan.collectWithSubqueries {
-          case w: LogicalWindow if w.partitionSpec.isEmpty => w
-        }
-        if (bad.nonEmpty) Some(name) else None
-    }.toSet
+        name -> plan.collectWithSubqueries {
+          case w: LogicalWindow if w.partitionSpec.isEmpty => Seq("window")
+          case a: Aggregate => a.aggregateExpressions.map(_.name).filter(RewriteAliases)
+          // a rewrite below the query's own persist point shows only in
+          // the cached physical plan (q147's SCD2 snapshot)
+          case m: InMemoryRelation =>
+            collect(m.cachedPlan) { case agg: BaseAggregateExec => agg.output.map(_.name) }
+              .flatten.filter(RewriteAliases)
+        }.flatten.toSet
+    }.toMap
+
+  private def carrying(marker: String): Set[String] =
+    markers.collect { case (name, ms) if ms.contains(marker) => name }.toSet
+
+  test("every unpartitioned window in the registry is pinned k-row-bounded") {
+    val carriers = carrying("window")
     assert(carriers -- Allowed.keySet == Set.empty[String],
       s"NEW unpartitioned window (single-partition exchange at scale) in: " +
         s"${carriers -- Allowed.keySet} — partition it, or justify the " +
@@ -74,5 +111,10 @@ class UnpartitionedWindowSpec extends SparkSpec {
       "walk found NO unpartitioned windows at all — the detector is " +
         "likely broken (the vocab-rank family always carries at least " +
         "one when its caches are cold)")
+  }
+
+  test("TopKRewrite fires on exactly the pinned registry queries, per branch") {
+    assert(carrying("__graft_top_row") == TopRowCarriers)
+    assert(carrying("__graft_topk") == HeapCarriers)
   }
 }
