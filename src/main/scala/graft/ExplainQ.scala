@@ -11,8 +11,10 @@ object ExplainQ {
     val spark = GraftSession.local(8)
     val df = SparkEntry.queries(args(0))(spark, sfDir)
     df.explain("formatted")
-    // executed plan exposes the post-AQE codegen stages (* markers)
-    df.write.format("noop").mode("overwrite").save()
+    // run the action through df's own QueryExecution (a `noop` write
+    // plans its own), so its adaptive plan is final and shows the
+    // post-AQE codegen stages (* markers)
+    df.queryExecution.toRdd.foreach(_ => ())
     println(df.queryExecution.executedPlan.toString.split("\n").take(60).mkString("\n"))
     spark.stop()
   }

@@ -52,7 +52,7 @@ object GraftSession {
     // WindowExec's "No Partition Defined" warning is demoted to a
     // SPEC, not a log line: every intentional global window in this
     // repo runs over a k-row-bounded input (top-k ranks, bounded key
-    // grains), and UnpartitionedWindowSpec walks every registry
+    // grains), and QueriesSpec's registry walk reads every registry
     // query's optimized plan asserting the set of unpartitioned
     // windows equals that pinned allowlist — a NEW one is a failing
     // test. The log suppression exists because r13's driver bench

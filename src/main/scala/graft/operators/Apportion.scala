@@ -50,7 +50,7 @@ object Apportion {
     // back onto the key grain, NOT unpartitioned windows: same values,
     // but map-side partial aggregation replaces the move-everything-
     // to-one-partition WindowExec (and its warning — which this repo
-    // treats as a real defect signal, see UnpartitionedWindowSpec).
+    // treats as a real defect signal, see QueriesSpec).
     val weighted = df
       .withColumn("__w", col(weightCol).cast("long"))
       .withColumn("__w", when(assert_true(col("__w") >= 0,
@@ -68,7 +68,7 @@ object Apportion {
     // the remainder rank stays a window — but over the BOUNDED key
     // grain only (languages/domains/sources; the caller aggregated
     // the corpus first), the documented k-row exception pinned in
-    // UnpartitionedWindowSpec's allowlist
+    // QueriesSpec's allowlist
     val ranked = withTotals
       .withColumn("__rk", row_number().over(
         Window.orderBy(col("__rem").desc, col(keyCol).asc)).cast("long"))

@@ -73,19 +73,15 @@ import graft.operators.AsOfJoin
   * replacement subtree — windows, unions, a Deduplicate — can never
   * re-match the Aggregate-over-Join pattern.
   *
-  * Session conf: `spark.graft.asofJoin.auto` (default true).
+  * Switched off, like any optimizer rule, by listing its rule name
+  * `graft.plans.AsOfRewrite` in `spark.sql.optimizer.excludedRules`.
   */
 case class AsOfRewrite(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val on = spark.sessionState.conf
-      .getConfString("spark.graft.asofJoin.auto", "true").toBoolean
-    if (!on) plan
-    else plan.transformUp {
-      case a @ Aggregate(_, _, child, _) =>
-        unwrapJoin(child).flatMap(j => rewrite(a, j)).getOrElse(a)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case a @ Aggregate(_, _, child, _) =>
+      unwrapJoin(child).flatMap(j => rewrite(a, j)).getOrElse(a)
   }
 
   /** The join under the aggregate, looking through a pruning-only

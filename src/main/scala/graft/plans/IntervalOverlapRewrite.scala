@@ -54,8 +54,10 @@ import graft.operators.RangeJoin
   * the tuned path; this rule is the transparent floor for declared
   * SQL.
   *
-  * Session conf: `spark.graft.rangeJoin.auto` (default true). The bin
-  * width and the per-interval bin ceiling are the constants
+  * Switched off, like any optimizer rule, by listing its rule name
+  * `graft.plans.IntervalOverlapRewrite` in
+  * `spark.sql.optimizer.excludedRules`. The bin width and the
+  * per-interval bin ceiling are the constants
   * [[IntervalOverlapRewrite.BinWidth]] (64) and
   * [[IntervalOverlapRewrite.MaxBinsPerInterval]] (4096).
   *
@@ -74,12 +76,9 @@ case class IntervalOverlapRewrite(spark: SparkSession)
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.sessionState.conf.getConfString("spark.graft.rangeJoin.auto", "true").toBoolean) plan
-    else plan.transformUp {
-      case j @ Join(left, right, Inner, Some(cond), _) =>
-        rewrite(j, left, right, cond).getOrElse(j)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case j @ Join(left, right, Inner, Some(cond), _) =>
+      rewrite(j, left, right, cond).getOrElse(j)
   }
 
   private def rewrite(

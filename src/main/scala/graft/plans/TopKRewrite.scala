@@ -93,18 +93,14 @@ import org.apache.spark.sql.types.IntegerType
   * the replacement Aggregate can never re-match the Filter-over-Window
   * pattern.
   *
-  * Session conf: `spark.graft.topK.auto` (default true).
+  * Switched off, like any optimizer rule, by listing its rule name
+  * `graft.plans.TopKRewrite` in `spark.sql.optimizer.excludedRules`.
   */
 case class TopKRewrite(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val on = spark.sessionState.conf
-      .getConfString("spark.graft.topK.auto", "true").toBoolean
-    if (!on) plan
-    else plan.transformUp {
-      case f @ Filter(cond, child) => rewrite(cond, child).getOrElse(f)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case f @ Filter(cond, child) => rewrite(cond, child).getOrElse(f)
   }
 
   private def rewrite(cond: Expression, filterChild: LogicalPlan): Option[LogicalPlan] = {

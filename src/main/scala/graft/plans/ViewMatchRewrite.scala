@@ -78,19 +78,15 @@ import graft.sources.MatViews
   * the rule trusts [[MatViews]]; a stale registration is a stale
   * answer, which is why registration is explicit and path-scoped.
   *
-  * Session conf: `spark.graft.viewMatch.auto` (default true).
+  * Switched off, like any optimizer rule, by listing its rule name
+  * `graft.plans.ViewMatchRewrite` in `spark.sql.optimizer.excludedRules`.
   */
 case class ViewMatchRewrite(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val on = spark.sessionState.conf
-      .getConfString("spark.graft.viewMatch.auto", "true").toBoolean
-    if (!on) plan
-    else plan.transformUp {
-      case a @ Aggregate(_, _, child, _) =>
-        rewriteSingle(a, child).orElse(rewriteJoin(a, child)).getOrElse(a)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case a @ Aggregate(_, _, child, _) =>
+      rewriteSingle(a, child).orElse(rewriteJoin(a, child)).getOrElse(a)
   }
 
   /** Strip [Filter]/attr-only-Project chains down to a V1 file scan,

@@ -92,9 +92,10 @@ object ZOrder {
 
   /** Write `df` clustered along the Z curve of (`colA`, `colB`) into
     * `~numFiles` files at `path`, and a per-file min/max stats table
-    * at [[statsPath]]. One range exchange on the z-value (the
-    * clustering shuffle — the cost Z-ORDER always pays), one read-back
-    * scan to build the stats (the manifest-build pass).
+    * at [[statsPath]]. One exchange on exact z-value ranges (the
+    * clustering shuffle — the cost Z-ORDER always pays; its cuts come
+    * from one histogram job), one read-back scan to build the stats
+    * (the manifest-build pass).
     *
     * `keyCol` additionally folds each file's values of a
     * HIGH-CARDINALITY key into a per-file BLOOM column
@@ -216,9 +217,19 @@ object ZOrder {
     clusterAndWrite(withZ, path, colA, colB, numFiles, keyCol, keyFpp, nRows)
   }
 
-  /** Shared clustering write: range-partition on the precomputed
-    * `__z`, drop it, write the data files, then one read-back scan
-    * builds the per-file min/max (+ optional key bloom) manifest. */
+  /** Shared clustering write: cut the precomputed `__z` into
+    * `numFiles` contiguous, equal-mass ranges, route range i to shuffle
+    * partition i, drop `__z`, write the data files, then one read-back
+    * scan builds the per-file min/max (+ optional key bloom) manifest.
+    *
+    * The cuts come from `__z`'s EXACT histogram, collected on the
+    * driver (at most min(rows, 4^bits) entries — 65,536 at the default
+    * `bits`): z value v opens file floor(rows below v · numFiles /
+    * rows). So the layout is a function of the data, `bits` and
+    * `numFiles` alone. A `repartitionByRange` would instead cut at a
+    * sample seeded from the RDD id, i.e. from how many RDDs the JVM
+    * made before. A z value heavier than one file's share keeps its
+    * rows together, so such a layout writes fewer files. */
   private def clusterAndWrite(
       withZ: DataFrame,
       path: String,
@@ -229,8 +240,25 @@ object ZOrder {
       keyFpp: Double,
       nRows: Long): Unit = {
     val spark = withZ.sparkSession
+    val hist = withZ.groupBy("__z").count().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val below = hist.scanLeft(0L)(_ + _._2)
+    // (first z value, file) of every file that receives rows; the file
+    // never decreases along z, so each file holds one z range
+    val starts = hist.indices
+      .map(i => (hist(i)._1, (below(i) * numFiles / below.last).toInt))
+      .distinctBy(_._2)
+    // hash partitioning sends key k to pmod(murmur3(k), numFiles); the
+    // smallest int landing on each partition routes exactly there
+    val keyOf = hashKeys(numFiles)
+    def route(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(keyOf(starts(lo)._2))
+      else {
+        val mid = (lo + hi + 1) / 2
+        when(col("__z") < starts(mid)._1, route(lo, mid - 1)).otherwise(route(mid, hi))
+      }
     withZ
-      .repartitionByRange(numFiles, col("__z"))
+      .repartition(numFiles, if (starts.isEmpty) lit(0) else route(0, starts.length - 1))
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode("overwrite").parquet(path)
@@ -250,6 +278,17 @@ object ZOrder {
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(statsPath(path))
+  }
+
+  /** For each shuffle partition p < n, the smallest non-negative int
+    * that Spark's hash partitioning sends to p: the same
+    * `pmod(murmur3(k, 42), n)` expression, evaluated on the driver. */
+  private def hashKeys(n: Int): Map[Int, Int] = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
+    Iterator.from(0)
+      .map(k => Pmod(Murmur3Hash(Seq(Literal(k)), 42), Literal(n)).eval(null).asInstanceOf[Int] -> k)
+      .scanLeft(Map.empty[Int, Int]) { case (m, (p, k)) => if (m.contains(p)) m else m + (p -> k) }
+      .find(_.size == n).get
   }
 
   /** The files whose (A, B) stats box intersects `[loA, hiA] ×

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.tools.Scratch
+
 /** Invariants for the q33-q40 analytics block. */
 class AnalyticsInvariantsSpec extends SparkSpec {
 
@@ -53,7 +55,7 @@ class AnalyticsInvariantsSpec extends SparkSpec {
       ("view", 1, 1.0), ("view", 2, 3.0), ("view", 3, 2.0), ("view", 4, 4.0),
       ("click", 5, 100.0), // pair-less day: invisible to every semantics
       ("click", 6, 5.0), ("view", 6, 5.0)) // the pairwise/listwise fork
-    val dir = java.nio.file.Files.createTempDirectory("graft_corrpanel").toString
+    val dir = Scratch.tempDir("graft_corrpanel")
     panel.toDF("event_type", "day", "value")
       .select(
         monotonically_increasing_id().as("event_id"),
@@ -425,7 +427,7 @@ class AnalyticsInvariantsSpec extends SparkSpec {
       (1L, ts(0), 7L, "a", 10.0, ""), (2L, ts(1), 7L, "a", 20.0, ""),
       (3L, ts(3), 7L, "a", 40.0, ""), (4L, ts(20), 7L, "a", 80.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma").toString
+    val dir = Scratch.tempDir("graft_ewma")
     try {
       ev.write.parquet(s"$dir/events.parquet")
       val got = SparkEntry.q149Ewma(spark, dir)

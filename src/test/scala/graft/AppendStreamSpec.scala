@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{Compact, Publish}
 import graft.streaming.AppendStream
+import graft.tools.Scratch
 
 /** S20 (streaming/AppendStream): append-only versioned ingest with
   * the maintenance loop. Zero-copy carry proven by inode identity,
@@ -22,7 +23,7 @@ class AppendStreamSpec extends SparkSpec {
   test("append carries prior files as hard links and adds only the batch") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_s20_links").toString
+    val root = Scratch.tempDir("graft_s20_links")
     try {
       assert(AppendStream.applyBatch(
         Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L, root))
@@ -58,7 +59,7 @@ class AppendStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_s20_stream").toString
+    val root = Scratch.tempDir("graft_s20_stream")
     try {
       val mem = MemoryStream[(Long, Long)]
       val query = AppendStream.start(
@@ -103,7 +104,7 @@ class AppendStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_s20_stats").toString
+    val root = Scratch.tempDir("graft_s20_stats")
     try {
       val mem = MemoryStream[(Long, Long)]
       // small target: early batches' files survive later compactions
@@ -179,7 +180,7 @@ class AppendStreamSpec extends SparkSpec {
   test("commit path job count: a plain append is one job; the cadence batch is pinned") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_s20_jobs").toString
+    val root = Scratch.tempDir("graft_s20_jobs")
     try {
       def batch(i: Long) =
         ((i * 1000L + 1) to (i * 1000L + 500)).map(j => (j, j % 7)).toDF("k", "x")

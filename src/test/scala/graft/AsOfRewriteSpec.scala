@@ -42,10 +42,8 @@ class AsOfRewriteSpec extends SparkSpec {
     df.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
 
-  private def withRuleOff[A](body: => A): A = {
-    spark.conf.set("spark.graft.asofJoin.auto", "false")
-    try body finally spark.conf.set("spark.graft.asofJoin.auto", "true")
-  }
+  private def withRuleOff[A](body: => A): A =
+    withoutRule(classOf[graft.plans.AsOfRewrite])(body)
 
   test("backward: rule on ≡ rule off ≡ hand expectation; plan loses the join") {
     mkPanels()

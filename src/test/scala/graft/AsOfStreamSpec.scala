@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{AsOfProbe, AsOfQuote, AsOfStream}
+import graft.tools.Scratch
 
 /** S33 (streaming/AsOfStream): the stateful twin of the backward
   * as-of join. A hand panel proves the pricing rules (inclusive
@@ -203,10 +204,10 @@ class AsOfStreamSpec extends SparkSpec {
   }
 
   test("S33r: carry and buffered probes survive a kill-and-restart") {
-    val inQ = java.nio.file.Files.createTempDirectory("graft_s33r_q").toString
-    val inP = java.nio.file.Files.createTempDirectory("graft_s33r_p").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_s33r_sink").toString + "/out"
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_s33r_ckpt").toString
+    val inQ = Scratch.tempDir("graft_s33r_q")
+    val inP = Scratch.tempDir("graft_s33r_p")
+    val sinkDir = Scratch.tempDir("graft_s33r_sink") + "/out"
+    val ckptDir = Scratch.tempDir("graft_s33r_ckpt")
     val sess = spark
     import sess.implicits._
 

@@ -1,12 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Publish, Sinks, Txn}
 import graft.text.TextOps
+import graft.tools.Scratch
 
 /** The q179 storage contract: the BM25 (doc, term, tf, dl, fp) index
   * is a PUBLISHED, append-maintained table, and ranking the stored
@@ -37,7 +38,7 @@ class Bm25IndexSpec extends SparkSpec {
         r.getLong(3), r.getDouble(4))).toSeq
 
   test("Txn.append maintenance equals re-indexing from scratch; stored ranking equals in-line") {
-    val root = Files.createTempDirectory("graft_bm25idx_spec").resolve("idx").toString
+    val root = Scratch.tempDir("graft_bm25idx_spec") + "/idx"
     val corpus = docs.where(col("doc_id") % 3 =!= 0)
     val batch = docs.where(col("doc_id") % 3 === 0)
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.Publish
 import graft.streaming.Bm25IndexStream
 import graft.text.TextOps
+import graft.tools.Scratch
 
 /** S37 (streaming/Bm25IndexStream): the maintained retrieval index.
   * Pins the incremental identity (streamed index ≡ from-scratch
@@ -23,8 +24,7 @@ class Bm25IndexStreamSpec extends SparkSpec {
         r.getLong(3), r.getLong(4))).toSet
 
   test("streamed index equals from-scratch; stored ranking equals in-line; replay refused") {
-    val root = java.nio.file.Files.createTempDirectory("graft_s37")
-      .resolve("idx").toString
+    val root = Scratch.tempDir("graft_s37") + "/idx"
     val b0 = Seq((1L, "spark shuffle join window"),
       (2L, "spark shuffle join window")).toDF("doc_id", "text")
     val b1 = Seq((3L, "spark shuffle join elsewhere"),
@@ -60,7 +60,7 @@ class Bm25IndexStreamSpec extends SparkSpec {
   }
 
   test("S37r: kill-and-restart resumes index maintenance exactly once") {
-    val base = java.nio.file.Files.createTempDirectory("graft_s37r")
+    val base = java.nio.file.Paths.get(Scratch.tempDir("graft_s37r"))
     val root = base.resolve("idx").toString
     val inDir = base.resolve("in").toString
     val ckpt = base.resolve("ck").toString

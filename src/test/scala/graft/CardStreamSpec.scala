@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.{Publish, Sinks}
 import graft.streaming.CardStream
 import graft.text.TextOps
+import graft.tools.Scratch
 
 case class CardDoc(doc_id: Long, text: String, lang: String, source: String)
 
@@ -37,7 +38,7 @@ class CardStreamSpec extends SparkSpec {
     val all = Tables.documents(spark, SfDir)
       .select("doc_id", "text", "lang", "source").as[CardDoc]
       .collect().sortBy(_.doc_id)
-    val root = Files.createTempDirectory("graft_cardstream").resolve("t").toString
+    val root = Scratch.tempDir("graft_cardstream") + "/t"
     val chunks = all.grouped(math.max(1, all.length / 3)).toSeq
 
     val mem = MemoryStream[CardDoc]
@@ -84,7 +85,7 @@ class CardStreamSpec extends SparkSpec {
     val all = Tables.documents(spark, SfDir)
       .select("doc_id", "text", "lang", "source").as[CardDoc]
       .collect().sortBy(_.doc_id)
-    val root = Files.createTempDirectory("graft_cardstream_r").resolve("t").toString
+    val root = Scratch.tempDir("graft_cardstream_r") + "/t"
     val parts = all.grouped(math.max(1, all.length / 4)).toSeq
       .map(_.toSeq.toDF())
     graft.streaming.DurableReplay.runForeachRestart(spark,

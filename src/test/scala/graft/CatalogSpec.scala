@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Catalog, Publish}
+import graft.tools.Scratch
 
 /** Multi-table snapshot consistency (sources/Catalog.scala +
   * streaming/CatalogStream.scala — S23): one atomic flip covers N
@@ -25,7 +26,7 @@ class CatalogSpec extends SparkSpec {
     d.collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
   test("publishAll round-trips; a torn second publish is invisible until commit") {
-    val root = Files.createTempDirectory("graft_catalog").toString
+    val root = Scratch.tempDir("graft_catalog")
     val a1 = df("x" -> 1L); val b1 = df("y" -> 10L)
     val v1 = Catalog.publishAll(spark, root, Map("a" -> a1, "b" -> b1))
     assert(v1 == 1L)
@@ -48,7 +49,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("unchanged tables carry by reference; vacuum reaps orphans and old snapshots") {
-    val root = Files.createTempDirectory("graft_catalog_vac").toString
+    val root = Scratch.tempDir("graft_catalog_vac")
     Catalog.publishAll(spark, root, Map("a" -> df("x" -> 1L), "b" -> df("y" -> 1L)))
     // snapshot 2 changes only `a` — `b` stays pinned at version 1
     Catalog.publishAll(spark, root, Map("a" -> df("x" -> 2L)))
@@ -79,7 +80,7 @@ class CatalogSpec extends SparkSpec {
     import sess.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-    val root = Files.createTempDirectory("graft_catalog_stream").toString
+    val root = Scratch.tempDir("graft_catalog_stream")
     // two derived tables from one fact stream: per-user totals and
     // per-type totals — consistency invariant: equal grand totals
     def mergeOn(keys: Seq[String])(live: Option[DataFrame], batch: DataFrame): DataFrame = {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.{Catalog, Wap}
 import graft.streaming.CatalogWapStream
 import graft.streaming.CatalogWapStream.Referential
+import graft.tools.Scratch
 
 case class StarRow(order_id: Long, cust: Long, amount: Long, seq: Long)
 
@@ -39,7 +40,7 @@ class CatalogWapStreamSpec extends SparkSpec {
   test("drop severities: per-table and referential violations quarantine snapshot-consistently") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_catwap").toString
+    val root = Scratch.tempDir("graft_catwap")
     implicit val sqlCtx = spark.sqlContext
     try {
       val mem = MemoryStream[StarRow]
@@ -92,7 +93,7 @@ class CatalogWapStreamSpec extends SparkSpec {
   test("a fail-severity violation aborts the WHOLE flip: no member version, no pointer move") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_catwap_fail").toString
+    val root = Scratch.tempDir("graft_catwap_fail")
     try {
       val failRefs = Seq(Referential(
         "fact_has_dim", "facts", Seq("cust"), "dims", Seq("cust"),
@@ -121,7 +122,7 @@ class CatalogWapStreamSpec extends SparkSpec {
   test("referential checks run against the CLEANED dim: a dim-drop leaves its facts dangling") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_catwap_dimdrop").toString
+    val root = Scratch.tempDir("graft_catwap_dimdrop")
     try {
       // dim admits cust 10 and 13, but 13 violates the dim's OWN drop
       // expectation (even cust only) — so fact 2 (cust 13) references
@@ -161,7 +162,7 @@ class CatalogWapStreamSpec extends SparkSpec {
   test("chained referential drops: a dim pruned by an EARLIER referential drop cannot vouch for facts") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_catwap_chain").toString
+    val root = Scratch.tempDir("graft_catwap_chain")
     try {
       // three-level star: facts → mid → dims. dims only admits
       // cust < 100, so mid's cust-200 row is REFERENTIALLY dropped by
@@ -206,7 +207,7 @@ class CatalogWapStreamSpec extends SparkSpec {
   test("a crash BETWEEN audit and catalog flip leaks nothing; the retried batch commits exactly once") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_catwap_crash").toString
+    val root = Scratch.tempDir("graft_catwap_crash")
     try {
       assert(CatalogWapStream.applyBatch(
         Seq(StarRow(1, 10, 100, 1)).toDF(), 0L, root, derivations, exps, refs))
@@ -264,7 +265,7 @@ class CatalogWapStreamSpec extends SparkSpec {
   test("S29r: the audited snapshot ingest survives a mid-backlog kill-and-restart") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_catwap_restart").toString
+    val root = Scratch.tempDir("graft_catwap_restart")
     try {
       val first = Seq(
         Seq(StarRow(1, 10, 100, 1)).toDF(),

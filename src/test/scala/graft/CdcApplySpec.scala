@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{Deletes, Publish}
 import graft.streaming.CdcApplyStream
+import graft.tools.Scratch
 
 case class Cdc(id: Long, v: Long, seq: Long, op: String)
 
@@ -19,7 +20,7 @@ class CdcApplySpec extends SparkSpec {
   test("applyBatch: upsert/delete semantics, replay refusal, absent-key tombstone no-op") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdc_unit").toString
+    val root = Scratch.tempDir("graft_cdc_unit")
     try {
       // bootstrap batch: three inserts plus a tombstone for a key
       // that never existed (must be a no-op, not an insert)
@@ -51,7 +52,7 @@ class CdcApplySpec extends SparkSpec {
   test("within-batch collapse: the newest op per key wins") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdc_collapse").toString
+    val root = Scratch.tempDir("graft_cdc_collapse")
     try {
       Publish.publish(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), root): Unit
       // key 1: upserted then deleted (ends deleted); key 2: deleted
@@ -73,7 +74,7 @@ class CdcApplySpec extends SparkSpec {
   test("evolveSchema: a change feed that grew a column widens the table mid-stream") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdc_evo").toString
+    val root = Scratch.tempDir("graft_cdc_evo")
     try {
       // the target pre-exists NARROW (id, v); the feed arrives with a
       // new `tag` column — the upstream-API-grew-a-field case
@@ -100,7 +101,7 @@ class CdcApplySpec extends SparkSpec {
   test("S24r: CDC apply survives a mid-backlog kill-and-restart through the checkpoint") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdc_restart").toString
+    val root = Scratch.tempDir("graft_cdc_restart")
     try {
       // one file = one micro-batch. Incarnation 1 is KILLED right
       // after batch 0 commits, with batches 1–2 still in the backlog;
@@ -141,7 +142,7 @@ class CdcApplySpec extends SparkSpec {
   test("S24: streamed CDC equals batch-sequential application across chops") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdc_stream").toString
+    val root = Scratch.tempDir("graft_cdc_stream")
     implicit val sqlCtx = spark.sqlContext
     try {
       val mem = MemoryStream[Cdc]

@@ -1,10 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Deletes, Merge, Publish, Txn}
+import graft.tools.Scratch
 
 /** S26 (streaming/ChangeFeedSource): a published table consumed as a
   * structured stream — offsets ARE version numbers, the opening batch
@@ -19,9 +20,9 @@ class ChangeFeedSourceSpec extends SparkSpec {
   test("S26: snapshot-then-deltas, every commit kind classified, restart resumes at the version offset") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdcsrc").toString
-    val ckpt = Files.createTempDirectory("graft_cdcsrc_ckpt").toString
-    val out = Files.createTempDirectory("graft_cdcsrc_out").toString + "/feed"
+    val root = Scratch.tempDir("graft_cdcsrc")
+    val ckpt = Scratch.tempDir("graft_cdcsrc_ckpt")
+    val out = Scratch.tempDir("graft_cdcsrc_out") + "/feed"
     def feed(): Set[(Long, String, Long, Long)] = spark.read.parquet(out)
       .select(col("id"), col("change_type"), col("from_version"), col("to_version"))
       .as[(Long, String, Long, Long)].collect().toSet
@@ -84,7 +85,7 @@ class ChangeFeedSourceSpec extends SparkSpec {
   test("S26: feed values carry old/new sides; schema is the manifest's types") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdcsrc2").toString
+    val root = Scratch.tempDir("graft_cdcsrc2")
     try {
       Publish.publish(Seq((1L, 10L)).toDF("id", "v"), root): Unit
       Publish.publish(Seq((1L, 11L)).toDF("id", "v"), root): Unit
@@ -107,7 +108,7 @@ class ChangeFeedSourceSpec extends SparkSpec {
   test("S26 ≡ t$changes: the streaming and SQL feed surfaces agree row-for-row") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdcsrc_sql").toString
+    val root = Scratch.tempDir("graft_cdcsrc_sql")
     try {
       val tdir = Paths.get(root, "t").toString
       Publish.publish(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), tdir): Unit
@@ -147,7 +148,7 @@ class ChangeFeedSourceSpec extends SparkSpec {
   test("S26 sugar: tableChanges resolves root/keys/values from the catalog conf; misconfig refuses") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdcsrc_sugar").toString
+    val root = Scratch.tempDir("graft_cdcsrc_sugar")
     try {
       val tdir = Paths.get(root, "t").toString
       Publish.publish(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), tdir): Unit
@@ -196,7 +197,7 @@ class ChangeFeedSourceSpec extends SparkSpec {
   test("S26: a new subscriber boots from the oldest RETAINED version after v=1 is vacuumed") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cdcsrc3").toString
+    val root = Scratch.tempDir("graft_cdcsrc3")
     try {
       // three versions, then a vacuum that reaps v1 (keep=1 retains
       // the live v3 + newest old v2) — the r8 advisor's stream-can-

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AsOfJoin, PrefixSum, Salting, WindowOps}
 import graft.similarity.Dedup
-import graft.tools.Chaos
+import graft.tools.{Chaos, Scratch}
 
 /** Task-retry determinism, tested by actually killing tasks.
   *
@@ -31,23 +29,7 @@ import graft.tools.Chaos
   * hash dedup (first-row-per-key tie), and a retry in the RESULT
   * stage after a shuffle (the exactly-one-commit path).
   */
-class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
-  val SfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    // this suite needs a different MASTER, not just different conf:
-    // stop the process-wide session; afterAll stops ours so the next
-    // suite's getOrCreate rebuilds the default local[4]
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(_.stop())
-    spark = GraftSession.build("local[4,2]", 4)
-  }
-
-  override def afterAll(): Unit = {
-    spark.stop()
-    super.afterAll()
-  }
+class ChaosSpec extends RetryingSparkSpec {
 
   /** Row-for-row comparison + proof the failure was injected. */
   private def assertSurvivesRetry(
@@ -170,8 +152,7 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = Tables.documents(spark, SfDir)
       .select("doc_id", "source", "n_chars")
       .as[graft.streaming.Doc].collect().sortBy(_.doc_id)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_chaos_pub").resolve("ds").toString
+    val root = Scratch.tempDir("graft_chaos_pub") + "/ds"
 
     val mem = MemoryStream[graft.streaming.Doc]
     val (chaosIn, acc) = Chaos.failFirstAttempt(mem.toDF())
@@ -196,43 +177,9 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       "published snapshot diverges from the input under task retries")
   }
 
-  test("C9: EVERY registry query survives a result-stage retry (the blanket)") {
-    // the hand-picked cases above are the argument (chaos on inputs,
-    // specific failure surfaces); this is the blanket: all 80 registry
-    // queries at sf0.001, each evaluated clean and then with every
-    // final-stage task killed once. Doubles are rounded to 1e-6 before
-    // comparing — shuffle-block merge order legitimately reorders
-    // float additions between ANY two runs, and the driver's own gate
-    // applies the same tolerance.
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-      val rounded = df.select(df.schema.fields.map { f =>
-        f.dataType match {
-          case org.apache.spark.sql.types.DoubleType |
-               org.apache.spark.sql.types.FloatType =>
-            round(col(f.name), 6).as(f.name)
-          case _ => col(f.name)
-        }
-      }.toIndexedSeq: _*)
-      rounded.collect().map(_.toString).sorted.toSeq
-    }
-    val failures = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val clean = canon(fn(spark, SfDir))
-      CacheScope.releaseAll(spark): Unit
-      val (chaotic, acc) = Chaos.failFirstAttempt(fn(spark, SfDir))
-      val got = canon(chaotic)
-      CacheScope.releaseAll(spark): Unit
-      if (acc.value < 1L) failures += s"$name: injection never fired"
-      else if (got != clean)
-        failures += s"$name: retry changed rows (clean=${clean.length}, chaos=${got.length})"
-    }
-    assert(failures.isEmpty, s"${failures.length} queries failed the blanket:\n  " +
-      failures.mkString("\n  "))
-  }
-
   test("C10: the BFS loop survives first-attempt kills in its per-round jobs") {
-    // the C9 blanket wraps each query's RESULT, but q83/q84 run their
-    // rounds as separate driver-side jobs (localCheckpoint per round)
+    // QueriesSpec's C9 blanket wraps each query's RESULT, but q83/q84
+    // run their rounds as separate driver-side jobs (localCheckpoint per round)
     // BEFORE the result ever evaluates — chaos must ride the loop
     // INPUT to reach those jobs: the persisted symmetrized edge
     // build, each round's frontier-join checkpoint, and the isEmpty

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{LocalCommitStore, Publish, Txn}
+import graft.tools.Scratch
 
 /** The CommitStore seam's object-store claims, exercised as CODE: a
   * RENAME-LESS backend (promotion = non-atomic copy+delete, the
@@ -54,7 +55,7 @@ class CommitStoreSpec extends SparkSpec {
   test("the full protocol holds on a rename-less backend: publish, CAS, racing appends") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_renameless").resolve("t").toString
+    val root = Scratch.tempDir("graft_renameless") + "/t"
     withStore(new RenamelessStore) {
       assert(Publish.publish(Seq(1L, 2L).toDF("x"), root) == 1L)
       assert(Publish.read(spark, root).count() == 2L)
@@ -82,7 +83,7 @@ class CommitStoreSpec extends SparkSpec {
   test("a crash MID-PROMOTION is invisible: readers keep the old version, retry routes around, vacuum reaps") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_renameless_crash").resolve("t").toString
+    val root = Scratch.tempDir("graft_renameless_crash") + "/t"
     withStore(new RenamelessStore) {
       Publish.publish((1L to 10L).toDF("x").repartition(4), root): Unit
     }

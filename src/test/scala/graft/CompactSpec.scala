@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Compact, Publish}
+import graft.tools.Scratch
 
 /** Small-file compaction (sources/Compact.scala): hand-computed bin
   * plans, row identity through the rewrite, and the full maintenance
@@ -27,7 +28,7 @@ class CompactSpec extends SparkSpec {
     val data = spark.range(10000L).select(
       col("id"), (col("id") % 97).as("k"),
       concat(lit("v"), col("id")).as("s"))
-    val root = Files.createTempDirectory("graft_compact_spec").toString
+    val root = Scratch.tempDir("graft_compact_spec")
     val fragDir = root + "/frag"
     val outDir = root + "/out"
     try {
@@ -51,7 +52,7 @@ class CompactSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val data = (1L to 5000L).map(i => (i, s"g${i % 7}", i * 3L)).toDF("id", "g", "v")
-    val root = Files.createTempDirectory("graft_compact_pub").toString
+    val root = Scratch.tempDir("graft_compact_pub")
     try {
       val v1 = Publish.publish(data.repartition(32), root)
       val v1Files = Compact.listDataFiles(
@@ -91,7 +92,7 @@ class CompactSpec extends SparkSpec {
     }
     val big = (1L to 20000L).map(i => (i, s"g${i % 7}", i * 3L)).toDF("id", "g", "v")
     val small = (20001L to 21000L).map(i => (i, s"g${i % 7}", i * 3L)).toDF("id", "g", "v")
-    val root = Files.createTempDirectory("graft_icompact_spec").toString
+    val root = Scratch.tempDir("graft_icompact_spec")
     try {
       val v1 = Publish.publishStaged(spark, root) { staging =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staging)): Unit
@@ -162,7 +163,7 @@ class CompactSpec extends SparkSpec {
   test("deletion vectors compose: compaction folds fragments' deletes and carries kept files' slices") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_compact_dv").toString
+    val root = Scratch.tempDir("graft_compact_dv")
     try {
       // one BIG file (carried) + four tiny fragments (rewritten)
       Publish.publishStaged(spark, root) { staging =>

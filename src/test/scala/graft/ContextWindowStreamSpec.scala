@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.sources.Publish
 import graft.streaming.{ContextWindowStream, TokenizerStream}
+import graft.tools.Scratch
 
 /** S40 (streaming/ContextWindowStream): streaming context-window
   * assembly. Pins the per-batch identity (a batch's windows ≡
@@ -26,7 +27,7 @@ class ContextWindowStreamSpec extends SparkSpec {
         r.getLong(4), r.getLong(5), r.getLong(6))).toSet
 
   test("per-batch windows: packing identity, namespacing, provenance, replay refusal") {
-    val base = java.nio.file.Files.createTempDirectory("graft_s40").toString
+    val base = Scratch.tempDir("graft_s40")
     val (tokRoot, winRoot) = (s"$base/tok", s"$base/windows")
     TokenizerStream.publish(ref1, "doc_id", "text", rounds = 2, tokRoot)
 
@@ -72,7 +73,7 @@ class ContextWindowStreamSpec extends SparkSpec {
   }
 
   test("cutover: later batches assemble under the new tokenizer version, per-row pinned") {
-    val base = java.nio.file.Files.createTempDirectory("graft_s40c").toString
+    val base = Scratch.tempDir("graft_s40c")
     val (tokRoot, winRoot) = (s"$base/tok", s"$base/windows")
     TokenizerStream.publish(ref1, "doc_id", "text", rounds = 2, tokRoot)
     val b0 = Seq((10L, "ab abc")).toDF("doc_id", "text")

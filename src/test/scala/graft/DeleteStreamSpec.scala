@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.sources.{Deletes, Publish}
 import graft.streaming.DeleteStream
+import graft.tools.Scratch
 
 case class Tomb(id: Long)
 
@@ -32,7 +33,7 @@ class DeleteStreamSpec extends SparkSpec {
   test("applyBatch: sidecar-only commits, byte-identical data files, replay refusal") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_delstream_unit").toString
+    val root = Scratch.tempDir("graft_delstream_unit")
     try {
       Publish.publish(seed(100).repartition(4), root): Unit
       val v1files = graft.sources.Compact
@@ -62,7 +63,7 @@ class DeleteStreamSpec extends SparkSpec {
   test("materialization cadence folds the vector; equivalence holds across it") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_delstream_mat").toString
+    val root = Scratch.tempDir("graft_delstream_mat")
     try {
       Publish.publish(seed(60).repartition(3), root): Unit
       // batches 0 and 1; cadence fires after batch 1 ((1+1) % 2 == 0)
@@ -83,7 +84,7 @@ class DeleteStreamSpec extends SparkSpec {
   test("S25r: DV maintenance survives a mid-backlog kill-and-restart through the checkpoint") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_delstream_restart").toString
+    val root = Scratch.tempDir("graft_delstream_restart")
     try {
       Publish.publish(seed(100).repartition(4), root): Unit
       // one file = one batch; incarnation 1 killed after batch 0's
@@ -131,7 +132,7 @@ class DeleteStreamSpec extends SparkSpec {
   test("S25: streamed tombstones equal the batch-side delete across chops") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_delstream").toString
+    val root = Scratch.tempDir("graft_delstream")
     implicit val sqlCtx = spark.sqlContext
     try {
       Publish.publish(seed(200).repartition(4), root): Unit

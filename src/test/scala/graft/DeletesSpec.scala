@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Compact, Deletes, Publish}
+import graft.tools.Scratch
 
 /** Deletion vectors (sources/Deletes.scala): delete-without-rewrite
   * semantics, data-file byte identity, idempotence, the versioned
@@ -21,7 +22,7 @@ class DeletesSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val data = (1L to 9000L).map(i => (i, s"g${i % 5}", i * 7L)).toDF("id", "g", "v")
-    val root = Files.createTempDirectory("graft_deletes_spec").toString
+    val root = Scratch.tempDir("graft_deletes_spec")
     val dir = root + "/t"
     try {
       data.repartition(8).write.parquet(dir)
@@ -62,7 +63,7 @@ class DeletesSpec extends SparkSpec {
     // two files split on a known key boundary so one delete touches one file
     val lo = (1L to 1000L).map(i => (i, "lo")).toDF("id", "part")
     val hi = (1001L to 2000L).map(i => (i, "hi")).toDF("id", "part")
-    val root = Files.createTempDirectory("graft_deletes_prune").toString
+    val root = Scratch.tempDir("graft_deletes_prune")
     val dir = root + "/t"
     try {
       Files.createDirectories(Paths.get(dir))
@@ -88,7 +89,7 @@ class DeletesSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val data = (1L to 6000L).map(i => (i, i % 17, s"s$i")).toDF("id", "k", "s")
-    val root = Files.createTempDirectory("graft_deletes_pub").toString
+    val root = Scratch.tempDir("graft_deletes_pub")
     try {
       val v1 = Publish.publish(data.repartition(6), root)
       val v1Dir = Paths.get(root).resolve(s"v=$v1")
@@ -127,7 +128,7 @@ class DeletesSpec extends SparkSpec {
     import sess.implicits._
     // planted layout: file boundaries on id ranges so the delete
     // touches exactly 2 of 4 files
-    val root = Files.createTempDirectory("graft_deletes_mat").toString
+    val root = Scratch.tempDir("graft_deletes_mat")
     try {
       val parts = Seq(
         (1L to 1000L), (1001L to 2000L), (2001L to 3000L), (3001L to 4000L))

@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.sources.{Publish, Sinks}
 import graft.streaming.{DriftAdmitStream, DriftStream}
+import graft.tools.Scratch
 
 /** S45 (streaming/DriftAdmitStream): drift-gated admission. Pins the
   * split semantics (quarantine = post-update verdict, the rotting
@@ -22,7 +21,7 @@ class DriftAdmitStreamSpec extends SparkSpec {
 
   test("rotting feed quarantines its own batch, recovers when the mix does; " +
     "monitor sees everything; replay refused") {
-    val base = Files.createTempDirectory("graft_s45").toString
+    val base = Scratch.tempDir("graft_s45")
     val (refRoot, statsRoot) = (s"$base/ref", s"$base/stats")
     val (corpusRoot, quarRoot) = (s"$base/corpus", s"$base/quar")
     val ref = Seq((1L, "alpha beta alpha gamma", "base"),
@@ -104,7 +103,7 @@ class DriftAdmitStreamSpec extends SparkSpec {
 
   test("S45r: the gate's split survives the real micro-batch engine and restart") {
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_s45_r").toString
+    val base = Scratch.tempDir("graft_s45_r")
     val (refRoot, statsRoot) = (s"$base/ref", s"$base/stats")
     val (corpusRoot, quarRoot) = (s"$base/corpus", s"$base/quar")
     val docs = Tables.documents(spark, SfDir)

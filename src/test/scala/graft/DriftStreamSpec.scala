@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Publish, Sinks}
 import graft.streaming.DriftStream
+import graft.tools.Scratch
 
 /** S44 (streaming/DriftStream): maintained feed-health drift stats.
   * Pins the additive identity (driftView ≡ the one-shot q208 monitor
@@ -22,7 +21,7 @@ class DriftStreamSpec extends SparkSpec {
 
   test("streamed view equals the one-shot q208 monitor; replay refused; fold preserves") {
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_s44").toString
+    val base = Scratch.tempDir("graft_s44")
     val (refRoot, statsRoot) = (s"$base/ref", s"$base/stats")
     val docs = Tables.documents(spark, SfDir)
 
@@ -80,7 +79,7 @@ class DriftStreamSpec extends SparkSpec {
   }
 
   test("a feed that rots in a LATER batch flips retroactively, exactly as one-shot") {
-    val base = Files.createTempDirectory("graft_s44_rot").toString
+    val base = Scratch.tempDir("graft_s44_rot")
     val (refRoot, statsRoot) = (s"$base/ref", s"$base/stats")
     val ref = Seq((1L, "alpha beta alpha gamma", "base"),
       (2L, "beta gamma alpha alpha", "base")).toDF("doc_id", "text", "source")
@@ -110,7 +109,7 @@ class DriftStreamSpec extends SparkSpec {
   }
 
   test("reference cutover re-verdicts retroactively; a bucket-count change is refused") {
-    val base = Files.createTempDirectory("graft_s44_cut").toString
+    val base = Scratch.tempDir("graft_s44_cut")
     val (refRoot, statsRoot) = (s"$base/ref", s"$base/stats")
     val refV1 = Seq((1L, "alpha beta alpha gamma", "base"),
       (2L, "beta gamma alpha alpha", "base")).toDF("doc_id", "text", "source")
@@ -160,7 +159,7 @@ class DriftStreamSpec extends SparkSpec {
   }
 
   test("S44r: the drift view survives a mid-backlog kill-and-restart") {
-    val base = Files.createTempDirectory("graft_s44_r").toString
+    val base = Scratch.tempDir("graft_s44_r")
     val (refRoot, statsRoot) = (s"$base/ref", s"$base/stats")
     val docs = Tables.documents(spark, SfDir)
     DriftStream.publishReference(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Publish
 import graft.streaming.{EvalStatsStream, TokenizerStream}
+import graft.tools.Scratch
 
 /** S41 (streaming/EvalStatsStream): maintained tokenizer-eval stats.
   * Pins the additive identity (the folded view ≡ one-shot
@@ -36,7 +37,7 @@ class EvalStatsStreamSpec extends SparkSpec {
   }
 
   test("folded view equals one-shot fertility; cutover isolates versions; replay refused") {
-    val base = java.nio.file.Files.createTempDirectory("graft_s41").toString
+    val base = Scratch.tempDir("graft_s41")
     val (tokRoot, statsRoot) = (s"$base/tok", s"$base/stats")
     TokenizerStream.publish(ref1, "doc_id", "text", rounds = 2, tokRoot)
 
@@ -78,7 +79,7 @@ class EvalStatsStreamSpec extends SparkSpec {
   }
 
   test("S42: tokenBudgetView over maintained stats equals one-shot Bpe.tokenBudget") {
-    val base = java.nio.file.Files.createTempDirectory("graft_s42").toString
+    val base = Scratch.tempDir("graft_s42")
     val (tokRoot, statsRoot) = (s"$base/tok", s"$base/stats")
     TokenizerStream.publish(ref1, "doc_id", "text", rounds = 2, tokRoot)
     val b0 = Seq((10L, "ab abc", "en"), (11L, "ab ab", "fr"))

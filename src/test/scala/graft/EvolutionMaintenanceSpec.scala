@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Compact, Deletes, Merge, Publish, Txn}
+import graft.tools.Scratch
 
 /** Maintenance AFTER schema evolution — the r8 advisor's high finding:
   * once a Merge(evolveSchema=true) leaves a version mixing file
@@ -25,7 +26,7 @@ class EvolutionMaintenanceSpec extends SparkSpec {
   private def evolvedTable(): String = {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_evo_maint").toString
+    val root = Scratch.tempDir("graft_evo_maint")
     Publish.publishStaged(spark, root) { staging =>
       Files.createDirectories(Paths.get(staging)): Unit
       Seq(1L to 1000L, 1001L to 2000L).foreach { r =>

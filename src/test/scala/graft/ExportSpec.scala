@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Export
+import graft.tools.Scratch
 
 /** q156 (sources/Export): JSONL shard export — byte-faithful
   * round-trip through the JSON escaping (newlines, quotes, unicode,
@@ -14,7 +15,7 @@ class ExportSpec extends SparkSpec {
   test("round-trip is lossless, including JSON-hostile strings") {
     val sess = spark
     import sess.implicits._
-    val out = Files.createTempDirectory("graft_export_rt").toString + "/corpus"
+    val out = Scratch.tempDir("graft_export_rt") + "/corpus"
     try {
       val nasty = Seq(
         (1L, "plain text", 0L),
@@ -38,7 +39,7 @@ class ExportSpec extends SparkSpec {
   test("maxRecordsPerFile splits shard files; manifest accounts for every byte") {
     val sess = spark
     import sess.implicits._
-    val out = Files.createTempDirectory("graft_export_cap").toString + "/corpus"
+    val out = Scratch.tempDir("graft_export_cap") + "/corpus"
     try {
       val docs = (1L to 100L).map(i => (i, s"doc number $i", i % 3))
         .toDF("doc_id", "text", "shard")
@@ -72,7 +73,7 @@ class ExportSpec extends SparkSpec {
   test("split tree: directory wall is the group wall; round-trip exact") {
     val sess = spark
     import sess.implicits._
-    val out = Files.createTempDirectory("graft_split_rt").toString + "/tree"
+    val out = Scratch.tempDir("graft_split_rt") + "/tree"
     try {
       // two docs per source; labels come from the leakage-free split,
       // so both copies of a source must land under the SAME split dir

@@ -7,6 +7,7 @@ import org.apache.spark.util.sketch.BloomFilter
 
 import graft.sources.FileStats
 import graft.sources.FileStats.{Between, IsNull, KeyIn}
+import graft.tools.Scratch
 
 /** Generic per-file stats manifest (sources/FileStats.scala): stat
   * correctness against global aggregates, range/null/bloom pruning
@@ -23,7 +24,7 @@ class FileStatsSpec extends SparkSpec {
       col("id").as("a"),
       when(col("id") % 100 === 0, lit(null).cast("long"))
         .otherwise(pmod(col("id") * 69621L, lit(104857L)) % 1000).as("b"))
-    val root = Files.createTempDirectory("graft_fstats_spec").toString
+    val root = Scratch.tempDir("graft_fstats_spec")
     val path = root + "/t"
     try {
       data.repartitionByRange(16, col("a")).sortWithinPartitions("a")
@@ -81,7 +82,7 @@ class FileStatsSpec extends SparkSpec {
   test("an all-null file is prunable for a range and kept for IsNull") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_fstats_null").toString
+    val root = Scratch.tempDir("graft_fstats_null")
     val path = root + "/t"
     try {
       // two files: one real-valued, one entirely null in c
@@ -111,7 +112,7 @@ class FileStatsSpec extends SparkSpec {
     import graft.sources.{Compact, Publish}
     val big = (1L to 20000L).map(i => (i, i * 3 % 997)).toDF("k", "v")
     val small = (20001L to 21000L).map(i => (i, i * 3 % 997)).toDF("k", "v")
-    val root = Files.createTempDirectory("graft_fstats_inc").toString
+    val root = Scratch.tempDir("graft_fstats_inc")
     try {
       Publish.publishStaged(spark, root) { staging =>
         Files.createDirectories(Paths.get(staging)): Unit
@@ -198,7 +199,7 @@ class FileStatsSpec extends SparkSpec {
     // epoch A: id-clustered (8 files on disjoint id ranges); epoch B:
     // k-clustered (8 files on disjoint k ranges) — the layout changed
     // mid-table, as under Iceberg partition evolution
-    val root = java.nio.file.Files.createTempDirectory("graft_fstats_evo").toString
+    val root = Scratch.tempDir("graft_fstats_evo")
     val dir = root + "/t"
     try {
       val a = (1L to 8000L).map(i => (i, i % 100, "A")).toDF("id", "k", "epoch")
@@ -265,7 +266,7 @@ class FileStatsSpec extends SparkSpec {
   }
 
   test("KMV sketches: exact ndv below k, bounded estimate above, deterministic rebuild, incremental carry") {
-    val root = Files.createTempDirectory("graft_fstats_kmv").toString
+    val root = Scratch.tempDir("graft_fstats_kmv")
     val path = root + "/t"
     try {
       // 4 files; cat has 3 values everywhere, id is near-unique
@@ -329,7 +330,7 @@ class FileStatsSpec extends SparkSpec {
   }
 
   test("bloom sizing from footers equals the count / distinct-file values it replaced") {
-    val root = Files.createTempDirectory("graft_fstats_sizing").toString
+    val root = Scratch.tempDir("graft_fstats_sizing")
     val data = spark.range(3000L).select(col("id").as("k"), (col("id") % 3).as("p"))
     val partitioned = root + "/partitioned"
     val withEmpty = root + "/with_empty"

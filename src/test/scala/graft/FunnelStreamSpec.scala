@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{FunnelEv, FunnelStream}
+import graft.tools.Scratch
 
 /** S19 (streaming/FunnelStream): the stateful twin of q102's sequence
   * matcher. A hand panel proves the binding rules settle correctly
@@ -130,9 +131,9 @@ class FunnelStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
-    val inDir = java.nio.file.Files.createTempDirectory("graft_s19r_in").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_s19r_sink").toString + "/out"
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_s19r_ckpt").toString
+    val inDir = Scratch.tempDir("graft_s19r_in")
+    val sinkDir = Scratch.tempDir("graft_s19r_sink") + "/out"
+    val ckptDir = Scratch.tempDir("graft_s19r_ckpt")
 
     // explicit strictly-increasing mtimes (the DurableReplay rule):
     // the file source replays oldest-first, and 1s-granularity clocks

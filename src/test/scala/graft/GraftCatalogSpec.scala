@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Deletes, GraftCatalog, Merge, Publish}
+import graft.tools.Scratch
 
 /** The SQL front door (sources/GraftCatalog): published tables served
   * to plain SQL through a DSv2 TableCatalog — live pointer, VERSION
@@ -27,7 +28,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("live, VERSION AS OF, and TIMESTAMP AS OF resolve through the version layout") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_sql").toString
+    val root = Scratch.tempDir("graft_cat_sql")
     try {
       val tdir = Paths.get(root, "t").toString
       Publish.publish((1L to 10L).toDF("x"), tdir): Unit
@@ -55,7 +56,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("post-evolution versions conform to the manifest schema through SQL") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_evo").toString
+    val root = Scratch.tempDir("graft_cat_evo")
     try {
       val tdir = Paths.get(root, "t").toString
       Publish.publishStaged(spark, tdir) { staging =>
@@ -84,7 +85,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("SQL writes commit through the protocol: INSERT appends via CAS, OVERWRITE publishes, history is read-only") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_write").toString
+    val root = Scratch.tempDir("graft_cat_write")
     try {
       val tdir = Paths.get(root, "t").toString
       Publish.publish((1L to 10L).toDF("x"), tdir): Unit
@@ -118,7 +119,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("snapshot mode: SQL joins read ONE consistent catalog horizon; AS OF is snapshot-grained") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_snap").toString
+    val root = Scratch.tempDir("graft_cat_snap")
     try {
       def facts(n: Long) = (1L to n).map(i => (i, i % 3)).toDF("id", "grp")
       def rates(r: Long) = (0L to 2L).map(g => (g, r)).toDF("grp", "rate")
@@ -169,7 +170,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("DV versions are refused, writes are refused, listTables lists published roots") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_dv").toString
+    val root = Scratch.tempDir("graft_cat_dv")
     try {
       val tdir = Paths.get(root, "t").toString
       Publish.publish((1L to 100L).toDF("x"), tdir): Unit
@@ -198,7 +199,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("SQL DDL: CREATE TABLE / CTAS / ALTER ADD COLUMNS / DROP ride the commit protocol") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_ddl").toString
+    val root = Scratch.tempDir("graft_cat_ddl")
     try {
       val cat = catalogFor(root)
       // CREATE TABLE: an empty schema-bearing version, immediately queryable
@@ -255,7 +256,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("metadata tables: t$history and t$files serve manifest accounting through SQL") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_meta").toString
+    val root = Scratch.tempDir("graft_cat_meta")
     try {
       val tdir = Paths.get(root, "t").toString
       Publish.publish((1L to 100L).toDF("x").repartition(2), tdir): Unit
@@ -295,7 +296,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("t$changes: the change feed as a SQL relation — distributed scan, version-bound pushdown, retention refusal") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_changes").toString
+    val root = Scratch.tempDir("graft_cat_changes")
     try {
       val tdir = Paths.get(root, "t").toString
       // v1 publish → v2 MERGE (update 2, delete 3, insert 11) → v3 DV delete 5
@@ -386,7 +387,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("a data table whose NAME contains '$' still resolves as a plain table") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_dollar").toString
+    val root = Scratch.tempDir("graft_cat_dollar")
     try {
       val tdir = Paths.get(root, "we$rd").toString
       Publish.publish((1L to 7L).toDF("x"), tdir): Unit
@@ -398,7 +399,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("CALL advise_recluster: the measured maintenance verdict from SQL") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_advrecl").toString
+    val root = Scratch.tempDir("graft_cat_advrecl")
     try {
       // publish an arrival-ordered layout (files = s runs, each
       // spanning all users), then ask the verdict for a user workload
@@ -421,7 +422,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("CALL admit_batch: manifest-pruned admission, per-batch key collapse, freshness across calls") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_admit").toString
+    val root = Scratch.tempDir("graft_cat_admit")
     try {
       Publish.publish(Seq((1L, 2L), (2L, 4L)).toDF("id", "fp"),
         Paths.get(root, "corpus").toString): Unit
@@ -463,7 +464,7 @@ class GraftCatalogSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     def build(): String = {
-      val root = Files.createTempDirectory("graft_cat_snapret").toString
+      val root = Scratch.tempDir("graft_cat_snapret")
       (1 to 3).foreach { i =>
         graft.sources.Catalog.publishAll(spark, root,
           Map("t" -> (1L to i * 10L).toDF("x"),
@@ -511,7 +512,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("CALL procedures: incremental compact, vacuum, expire — atomic versions, lossless, accounted") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_cat_proc").toString
+    val root = Scratch.tempDir("graft_cat_proc")
     try {
       val tdir = Paths.get(root, "t").toString
       // fragment the table: publish + two CAS appends of small files

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Publish
 import graft.streaming.ImportanceAdmitStream
+import graft.tools.Scratch
 
 /** S34 (streaming/ImportanceAdmitStream): the adaptive DSIR admission
   * gate. Pins the maintained-raw-stats ≡ batch-recomputation claim,
@@ -14,7 +15,7 @@ class ImportanceAdmitStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private def roots(): (String, String, String) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_s34").toString
+    val base = Scratch.tempDir("graft_s34")
     (s"$base/target", s"$base/raw", s"$base/corpus")
   }
 
@@ -79,8 +80,8 @@ class ImportanceAdmitStreamSpec extends SparkSpec {
 
   test("S34r: kill-and-restart resumes with stats and admissions intact") {
     val (tgtRoot, rawRoot, corpRoot) = roots()
-    val inDir = java.nio.file.Files.createTempDirectory("graft_s34r_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_s34r_ck").toString
+    val inDir = Scratch.tempDir("graft_s34r_in")
+    val ckpt = Scratch.tempDir("graft_s34r_ck")
     ImportanceAdmitStream.publishTarget(
       Seq((900L, "alpha beta alpha beta")).toDF("doc_id", "text"),
       "doc_id", "text", B, tgtRoot)

@@ -1,12 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.{ImageDedup, Multimodal}
 import graft.sources.{Publish, Sinks, Txn}
+import graft.tools.Scratch
 
 /** The q181 contract — q166's crawl-ingest identity carried to the
   * PERCEPTUAL media family. Perceptual fingerprints (image dHash,
@@ -83,7 +84,7 @@ class IncrementalMediaDedupSpec extends SparkSpec {
   }
 
   test("Txn.append maintenance equals re-fingerprinting from scratch; gate recall carries") {
-    val root = Files.createTempDirectory("graft_mndidx_spec").resolve("idx").toString
+    val root = Scratch.tempDir("graft_mndidx_spec") + "/idx"
     val a = docs.where(col("doc_id") % 3 === 1)
     val b = docs.where(col("doc_id") % 3 === 2)
     val c = docs.where(col("doc_id") % 3 === 0)

@@ -1,12 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Dedup
 import graft.sources.{Publish, Sinks, Txn}
+import graft.tools.Scratch
 
 /** The q166 contract: a MAINTAINED band-signature index makes the
   * near-dup gate incremental WITHOUT changing what it finds.
@@ -65,7 +66,7 @@ class IncrementalNearDupSpec extends SparkSpec {
   }
 
   test("Txn.append maintenance equals re-signing from scratch; gate recall carries") {
-    val root = Files.createTempDirectory("graft_ndidx_spec").resolve("idx").toString
+    val root = Scratch.tempDir("graft_ndidx_spec") + "/idx"
     val a = docs.where(col("doc_id") % 3 === 1)
     val b = docs.where(col("doc_id") % 3 === 2)
     val c = docs.where(col("doc_id") % 3 === 0)

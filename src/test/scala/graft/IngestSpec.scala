@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.WindowOps
 import graft.sources.{Ingest, Sinks}
+import graft.tools.Scratch
 
 /** Ingestion surface: CSV round-trip + corrupt-row quarantine,
   * N-source entity resolution, and the composed incremental refresh
@@ -14,7 +15,7 @@ import graft.sources.{Ingest, Sinks}
 class IngestSpec extends SparkSpec {
 
   test("readCsv round-trips typed data and quarantines corrupt rows") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = Scratch.tempDir("graft_csv")
     val ev = Tables.events(spark, SfDir)
       .select("event_id", "event_type", "user_id", "value")
     // hand-write the CSV (appending to Spark's own output would break
@@ -35,7 +36,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("readJsonl round-trips typed data and quarantines malformed lines") {
-    val dir = Files.createTempDirectory("graft_jsonl").toString
+    val dir = Scratch.tempDir("graft_jsonl")
     val ev = Tables.events(spark, SfDir)
       .select("event_id", "event_type", "user_id", "value")
     val rows = ev.collect().map(r =>
@@ -54,7 +55,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("corrupt-column guard matches field NAMES, not substrings") {
-    val dir = Files.createTempDirectory("graft_ddl_guard").toString
+    val dir = Scratch.tempDir("graft_ddl_guard")
     Files.writeString(java.nio.file.Paths.get(dir, "d.csv"), "k,raw_corrupt_record_src\n1,x\n")
     // a legal column merely CONTAINING the reserved name must pass
     assert(Ingest.readCsv(spark, dir,
@@ -95,8 +96,8 @@ class IngestSpec extends SparkSpec {
     val updates = ev.where(
       col("event_id") % 2 === 1 && length(col("event_type")) % 2 === 0)
 
-    val tableDir = Files.createTempDirectory("graft_refresh_table").toString
-    val stagingDir = Files.createTempDirectory("graft_refresh_stage").toString
+    val tableDir = Scratch.tempDir("graft_refresh_table")
+    val stagingDir = Scratch.tempDir("graft_refresh_stage")
     Sinks.writePartitioned(base, tableDir, Seq("event_type"))
 
     // snapshot every data file under a partition dir: path -> (size, mtime)

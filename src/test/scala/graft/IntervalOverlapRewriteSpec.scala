@@ -39,14 +39,15 @@ class IntervalOverlapRewriteSpec extends SparkSpec {
     leftPanel.join(rightPanel,
       col("l_lo") <= col("r_hi") && col("r_lo") <= col("l_hi"))
 
+  private def withRuleOff[A](body: => A): A =
+    withoutRule(classOf[graft.plans.IntervalOverlapRewrite])(body)
+
   private def rowsOf(df: DataFrame): Set[(Long, Long)] =
     df.select("l_id", "r_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("rewrite on ≡ rewrite off, including empty/null/mega intervals") {
-    spark.conf.set("spark.graft.rangeJoin.auto", "false")
-    val vanilla = try rowsOf(overlapJoin())
-    finally spark.conf.set("spark.graft.rangeJoin.auto", "true")
+    val vanilla = withRuleOff(rowsOf(overlapJoin()))
     val rewritten = rowsOf(overlapJoin())
     assert(vanilla.nonEmpty, "planted panels produced no overlaps")
     assert(rewritten == vanilla,
@@ -59,9 +60,7 @@ class IntervalOverlapRewriteSpec extends SparkSpec {
   }
 
   test("the rewritten plan joins on an equi key instead of pure nested-loop") {
-    spark.conf.set("spark.graft.rangeJoin.auto", "false")
-    val vanillaPlan = try overlapJoin().queryExecution.executedPlan.toString
-    finally spark.conf.set("spark.graft.rangeJoin.auto", "true")
+    val vanillaPlan = withRuleOff(overlapJoin().queryExecution.executedPlan.toString)
     val rewrittenPlan = overlapJoin().queryExecution.executedPlan.toString
     assert(vanillaPlan.contains("BroadcastNestedLoopJoin"))
     assert(!vanillaPlan.contains("SortMergeJoin") && !vanillaPlan.contains("BroadcastHashJoin"))
@@ -90,9 +89,8 @@ class IntervalOverlapRewriteSpec extends SparkSpec {
     val ivals = (0L until 300L).map(i => (i + 50000L, i * 31 % 9000, i * 31 % 9000 + i % 50))
       .toDF("i_id", "i_lo", "i_hi")
     def joined() = points.join(ivals, col("i_lo") <= col("p") && col("p") <= col("i_hi"))
-    spark.conf.set("spark.graft.rangeJoin.auto", "false")
-    val vanilla = try joined().select("p_id", "i_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    finally spark.conf.set("spark.graft.rangeJoin.auto", "true")
+    val vanilla = withRuleOff(
+      joined().select("p_id", "i_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val rewritten = joined().select("p_id", "i_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(vanilla.nonEmpty && rewritten == vanilla)
     assert(joined().queryExecution.executedPlan.toString.contains("Join"))

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ivm, Scd}
 import graft.sources.Publish
+import graft.tools.Scratch
 
 /** Incremental view maintenance (operators/Ivm.scala): a
   * hand-computed feed pins the retract/assert algebra (insert,
@@ -102,7 +101,7 @@ class IvmSpec extends SparkSpec {
   test("maintained aggregate tracks Publish versions via the diff feed") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_ivm_pub").toString
+    val root = Scratch.tempDir("graft_ivm_pub")
     try {
       val v1Data = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
         .toDF("id", "g", "v")

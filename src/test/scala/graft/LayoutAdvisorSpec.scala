@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.{FileStats, LayoutAdvisor}
 import graft.sources.FileStats.Between
+import graft.tools.Scratch
 
 /** Workload-driven layout advisor (sources/LayoutAdvisor.scala): the
   * cost model against a hand-computed panel, and EMPIRICAL validation
@@ -43,7 +42,7 @@ class LayoutAdvisorSpec extends SparkSpec {
     // 2 files of 1000 rows; dim a has 2 values per file, dim b has 40 —
     // an equality slice on b reads 1/40 of a b-clustered table, on a
     // only 1/2: the advisor must rank b above a, and b+a above both
-    val root = Files.createTempDirectory("graft_advisor_cat").toString
+    val root = Scratch.tempDir("graft_advisor_cat")
     val path = root + "/t"
     (0L until 2000L).map(i => (i, s"a${i % 2}", s"b${i % 40}"))
       .toDF("id", "a", "b")
@@ -96,7 +95,7 @@ class LayoutAdvisorSpec extends SparkSpec {
       s"expected the narrow-predicate dim to win: $advice")
 
     // materialize both layouts, measure files actually read per query
-    val root = Files.createTempDirectory("graft_advisor_spec").toString
+    val root = Scratch.tempDir("graft_advisor_spec")
     def measure(layoutDim: String): Int = {
       val path = s"$root/$layoutDim"
       ev.repartitionByRange(8, col(layoutDim))
@@ -123,7 +122,7 @@ class LayoutAdvisorSpec extends SparkSpec {
     val workload = Seq((1L, "u", 2L, 3L), (2L, "u", 6L, 6L))
     val dims = Seq("u" -> "u", "s" -> "s")
     val layouts = Seq(Seq("u"), Seq("s"))
-    val root = Files.createTempDirectory("graft_reclust_spec").toString
+    val root = Scratch.tempDir("graft_reclust_spec")
 
     // bad layout: files = 20-row s runs — every file spans all users
     val bad = s"$root/bad"
@@ -157,7 +156,7 @@ class LayoutAdvisorSpec extends SparkSpec {
   test("reclusterAdvice on an empty table keeps (no zero-divisor in the independence model)") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_reclust_empty").toString
+    val root = Scratch.tempDir("graft_reclust_empty")
     val path = s"$root/t"
     // just-created table: zero rows, schema only — a ≥2-dim layout
     // would otherwise divide by N^(p−1) = 0
@@ -191,15 +190,17 @@ class LayoutAdvisorSpec extends SparkSpec {
         workload, layouts)
       .collect().map(r => r.getString(0) -> r.getInt(3)).toMap
 
-    val path = Files.createTempDirectory("graft_advisor_stats").toString + "/t"
+    val path = Scratch.tempDir("graft_advisor_stats") + "/t"
     ev.repartitionByRange(8, col("user_id"))
       .sortWithinPartitions("user_id").write.parquet(path)
     FileStats.build(spark, path, cols = Seq("user_id", "value"))
     val fromStats = LayoutAdvisor.adviseFromStats(spark, path,
       Seq("user" -> "user_id", "value" -> "value"), workload, layouts)
-    val statsPlan = fromStats.queryExecution.executedPlan.toString
-    assert(statsPlan.contains("_fstats") && !statsPlan.contains("/t]"),
-      s"manifest scoring must read the sidecar, not the data table:\n$statsPlan")
+    // by file, not by plan text: the plan string cuts a scan's
+    // location short, and a run-scoped temp dir's name is ~70 chars
+    val read = fromStats.inputFiles
+    assert(read.nonEmpty && read.forall(_.contains("/t/_fstats/")),
+      s"manifest scoring must read the sidecar, not the data table:\n${read.mkString("\n")}")
     val estimated = fromStats
       .collect().map(r => r.getString(0) -> r.getInt(3)).toMap
     assert(estimated == measured,

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -9,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.{ImageDedup, Multimodal}
 import graft.sources.{Publish, Sinks}
 import graft.streaming.MediaAdmitStream
+import graft.tools.Scratch
 
 case class MediaDocRow(doc_id: Long, media_type: String, payload: Array[Byte])
 
@@ -64,7 +63,7 @@ class MediaAdmitStreamSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val all = mediaRows
-    val base = Files.createTempDirectory("graft_madmit")
+    val base = java.nio.file.Paths.get(Scratch.tempDir("graft_madmit"))
     val (corpusRoot, indexRoot, quarRoot) =
       (base.resolve("corpus").toString, base.resolve("index").toString,
         base.resolve("rejects").toString)
@@ -100,7 +99,7 @@ class MediaAdmitStreamSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val all = mediaRows
-    val base = Files.createTempDirectory("graft_madmit_r")
+    val base = java.nio.file.Paths.get(Scratch.tempDir("graft_madmit_r"))
     val (corpusRoot, indexRoot, quarRoot) =
       (base.resolve("corpus").toString, base.resolve("index").toString,
         base.resolve("rejects").toString)

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Compact, Deletes, FileStats, Merge, Publish}
+import graft.tools.Scratch
 
 /** MERGE INTO (sources/Merge.scala): update/delete/insert semantics
   * against hand-derived expectations, copy-on-write file accounting
@@ -22,7 +23,7 @@ class MergeSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     // four files on known id ranges: source keys hit files 2 and 3 only
-    val root = Files.createTempDirectory("graft_merge_spec").toString
+    val root = Scratch.tempDir("graft_merge_spec")
     val parts = Seq((1L to 1000L), (1001L to 2000L), (2001L to 3000L), (3001L to 4000L))
     val v1 = Publish.publishStaged(spark, root) { staging =>
       Files.createDirectories(Paths.get(staging)): Unit
@@ -74,7 +75,7 @@ class MergeSpec extends SparkSpec {
   test("bloom manifest prunes the overlap scan to the hit files") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_merge_bloom").toString
+    val root = Scratch.tempDir("graft_merge_bloom")
     val parts = (0 until 8).map(b => ((b * 1000L + 1) to (b * 1000L + 1000)))
     val v1 = Publish.publishStaged(spark, root) { staging =>
       Files.createDirectories(Paths.get(staging)): Unit
@@ -105,7 +106,7 @@ class MergeSpec extends SparkSpec {
   test("ambiguous source (duplicate keys) is refused") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_merge_dup").toString
+    val root = Scratch.tempDir("graft_merge_dup")
     try {
       Publish.publish((1L to 100L).map(i => (i, i)).toDF("id", "v"), root): Unit
       val dupSource = Seq((5L, 1L), (5L, 2L)).toDF("id", "v")
@@ -122,7 +123,7 @@ class MergeSpec extends SparkSpec {
   test("schema evolution: new source columns widen the table; carried files stay old-width bytes") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_merge_evo").toString
+    val root = Scratch.tempDir("graft_merge_evo")
     // two files on known id ranges: source hits file 2 only
     val v1 = Publish.publishStaged(spark, root) { staging =>
       Files.createDirectories(Paths.get(staging)): Unit
@@ -182,7 +183,7 @@ class MergeSpec extends SparkSpec {
   test("deletion vectors compose: DV-deleted rows are not matches and do not resurrect") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_merge_dv").toString
+    val root = Scratch.tempDir("graft_merge_dv")
     try {
       Publish.publish(
         (1L to 2000L).map(i => (i, i % 3, s"p$i")).toDF("id", "grp", "payload")

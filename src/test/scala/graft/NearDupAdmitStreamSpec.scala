@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.similarity.Dedup
 import graft.sources.{Publish, Sinks}
 import graft.streaming.NearDupAdmitStream
+import graft.tools.Scratch
 
 case class AdmitDoc(doc_id: Long, text: String)
 
@@ -61,7 +62,7 @@ class NearDupAdmitStreamSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val all = docs
-    val base = Files.createTempDirectory("graft_ndadmit")
+    val base = Paths.get(Scratch.tempDir("graft_ndadmit"))
     val (corpusRoot, indexRoot, quarRoot) =
       (base.resolve("corpus").toString, base.resolve("index").toString,
         base.resolve("rejects").toString)
@@ -97,7 +98,7 @@ class NearDupAdmitStreamSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val all = docs
-    val base = Files.createTempDirectory("graft_ndadmit_r")
+    val base = Paths.get(Scratch.tempDir("graft_ndadmit_r"))
     val (corpusRoot, indexRoot, quarRoot) =
       (base.resolve("corpus").toString, base.resolve("index").toString,
         base.resolve("rejects").toString)

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.tools.Scratch
+
 /** Targeted semantic invariants per operator family — the properties
   * the reference pipelines rely on, asserted directly (value-level
   * equality vs DuckDB is the driver gate's job). */
@@ -629,7 +631,7 @@ class OperatorInvariantsSpec extends SparkSpec {
     import sess.implicits._
     import graft.sources.FileStats
     import graft.text.TextOps
-    val root = java.nio.file.Files.createTempDirectory("graft_incdedup_spec").toString
+    val root = Scratch.tempDir("graft_incdedup_spec")
     // corpus: even keys 0,2,…,198 clustered by key into 8 range files
     val corpus = (0L until 100L).map(i => (i, i * 2)).toDF("cid", "k")
     corpus.repartitionByRange(8, col("k")).sortWithinPartitions("k")
@@ -656,7 +658,7 @@ class OperatorInvariantsSpec extends SparkSpec {
       s"band must touch a strict subset: $touched of $nFiles")
 
     // empty corpus: everything is new
-    val eroot = java.nio.file.Files.createTempDirectory("graft_incdedup_mt").toString
+    val eroot = Scratch.tempDir("graft_incdedup_mt")
     corpus.limit(0).repartition(1).write.mode("overwrite").parquet(eroot)
     FileStats.build(spark, eroot, cols = Seq("k"))
     assert(graft.similarity.Dedup.incrementalNew(spark, eroot, batch, "k")

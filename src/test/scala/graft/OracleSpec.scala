@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.Scratch
+
 /** Oracle hygiene inside `sbt test`, so rot surfaces before the
   * driver's round gate: the oracle map must stay structurally sound
   * (pure Scala) and every oracle must still EXECUTE in DuckDB over
@@ -76,7 +78,7 @@ class OracleSpec extends AnyFunSuite {
     val smoke = new java.io.File("tools/oracle_smoke.py").getAbsoluteFile
     assume(smoke.exists(), s"not run from the repo root: $smoke missing")
 
-    val oracleFile = Files.createTempFile("graft_oracle_sql", ".json")
+    val oracleFile = java.nio.file.Paths.get(Scratch.tempDir("graft_oracle_sql"), "oracle.json")
     Files.writeString(oracleFile, Verify.oracleJson)
     val proc = new ProcessBuilder(
       "python3", smoke.toString, SfDir, oracleFile.toString)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Publish
 import graft.streaming.PerplexityAdmitStream
+import graft.tools.Scratch
 
 /** S35 (streaming/PerplexityAdmitStream): the fixed-model fluency
   * admission gate. Pins the planted incoherent-doc rejection (same
@@ -21,7 +22,7 @@ class PerplexityAdmitStreamSpec extends SparkSpec {
   private val MaxCe = 1.0
 
   private def roots(): (String, String) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_s35").toString
+    val base = Scratch.tempDir("graft_s35")
     (s"$base/model", s"$base/corpus")
   }
 
@@ -93,8 +94,8 @@ class PerplexityAdmitStreamSpec extends SparkSpec {
 
   test("S35r: kill-and-restart resumes admissions exactly once") {
     val (modelRoot, corpRoot) = roots()
-    val inDir = java.nio.file.Files.createTempDirectory("graft_s35r_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_s35r_ck").toString
+    val inDir = Scratch.tempDir("graft_s35r_in")
+    val ckpt = Scratch.tempDir("graft_s35r_ck")
     PerplexityAdmitStream.publishModel(refDocs, "doc_id", "text", modelRoot)
 
     var mtime = System.currentTimeMillis() / 1000 * 1000 - 3600L * 1000

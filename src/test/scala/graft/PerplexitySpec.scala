@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.text.Perplexity
+import graft.tools.Scratch
 
 /** Planted-fixture coverage for the CCNet-style LM filter (q172):
   * hand-computed cross-entropy on a tiny model, word-order
@@ -86,8 +87,7 @@ class PerplexitySpec extends SparkSpec {
     val live = Perplexity.lmScore(docs, "doc_id", "text",
       referencePred = col("doc_id") <= 5L)
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_pplx_spec")
-      .resolve("scores").toString
+    val dir = Scratch.tempDir("graft_pplx_spec") + "/scores"
     try {
       val (rb, vc) = Perplexity.trainBigramModel(
         docs.where(col("doc_id") <= 5L), "doc_id", "text")

@@ -9,6 +9,7 @@ import org.scalacheck.rng.Seed
 import graft.operators.{GapFill, WindowOps}
 import graft.sources.Ingest
 import graft.text.TextOps
+import graft.tools.Scratch
 
 case class Obs(k: String, date: Date, v: Double)
 case class Ver(k: Long, ver: Long, payload: Long)
@@ -459,7 +460,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("WorkloadCapture.extract equals the per-dim interval intersection of planted conjuncts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wcap_prop").resolve("t").toString
+    val dir = Scratch.tempDir("graft_wcap_prop") + "/t"
     locally {
       import spark.implicits._
       (0L until 50L).map(i => (i, i % 7)).toDF("x", "y").write.parquet(dir)

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.sources.Publish
+import graft.tools.Scratch
 
 /** Atomic publication protocol: every case is a failure-ordering
   * argument — what a reader sees at each point of a publisher's life,
@@ -14,7 +15,7 @@ import graft.sources.Publish
 class PublishSpec extends SparkSpec {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_publish").resolve("ds").toString
+    Scratch.tempDir("graft_publish") + "/ds"
 
   test("publish → read round-trips, manifest matches the files on disk") {
     import spark.implicits._
@@ -217,7 +218,7 @@ class PublishSpec extends SparkSpec {
     val root = freshRoot()
     val rootPath = Paths.get(root)
     Publish.publish(Seq((1L, "live")).toDF("id", "s"), root)
-    val src = Files.createTempDirectory("graft_publish_torn").resolve("ok")
+    val src = Paths.get(Scratch.tempDir("graft_publish_torn")).resolve("ok")
     Seq((2L, "x"), (3L, "y")).toDF("id", "s").coalesce(1).write.parquet(src.toString)
     val good = {
       val s = Files.list(src)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{FileStats, Publish}
 import graft.streaming.ReclusterStream
+import graft.tools.Scratch
 
 case class ReclRow(u: Long, s: Long)
 
@@ -26,7 +27,7 @@ class ReclusterStreamSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_reclstream").resolve("t").toString
+    val root = Scratch.tempDir("graft_reclstream") + "/t"
     val mem = MemoryStream[ReclRow]
     // every batch interleaves all 8 users, and repartition(1) makes
     // each append ONE file spanning them — the arrival-ordered
@@ -90,7 +91,7 @@ class ReclusterStreamSpec extends SparkSpec {
   test("S30r: the advised ingest survives a mid-backlog kill-and-restart") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_reclstream_r").resolve("t").toString
+    val root = Scratch.tempDir("graft_reclstream_r") + "/t"
     def part(b: Int, n: Int, base: Long): org.apache.spark.sql.DataFrame =
       (0 until n).map(i => (i.toLong % 8, base + b * 100L + i)).toDF("u", "s")
     val first = Seq(part(0, 80, 0), part(1, 80, 0), part(2, 80, 0))
@@ -123,7 +124,7 @@ class ReclusterStreamSpec extends SparkSpec {
   }
 
   test("keepVerdict tolerates a torn sidecar line (no '=') instead of mis-parsing") {
-    val root = Files.createTempDirectory("graft_reclust_torn").toString
+    val root = Scratch.tempDir("graft_reclust_torn")
     try {
       // simulate the pre-atomic-write failure mode: a crash mid-write
       // leaves a final line cut before its '='

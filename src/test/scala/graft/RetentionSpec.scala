@@ -1,8 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import graft.sources.{Catalog, Publish}
+import graft.tools.Scratch
 
 /** Snapshot expiration / time-travel retention
   * (Publish.expireVersions + Catalog.expireSnapshots + pinnedVersions):
@@ -19,7 +20,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("keepLast: newest N + live survive, the rest reap; kept readers survive") {
-    val root = Files.createTempDirectory("graft_ret_last").toString
+    val root = Scratch.tempDir("graft_ret_last")
     try {
       (1L to 4L).foreach(i => Publish.publish(df(i), root): Unit)
       val reaped = Publish.expireVersions(root, keepLast = 2)
@@ -34,7 +35,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("keepWithin: the time-travel window retains beyond keepLast; replayable with explicit now") {
-    val root = Files.createTempDirectory("graft_ret_within").toString
+    val root = Scratch.tempDir("graft_ret_within")
     try {
       Publish.publish(df(1), root): Unit
       Thread.sleep(60)
@@ -60,7 +61,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("pinned versions outlive the local policy; live is never reaped") {
-    val root = Files.createTempDirectory("graft_ret_pin").toString
+    val root = Scratch.tempDir("graft_ret_pin")
     try {
       (1L to 3L).foreach(i => Publish.publish(df(i), root): Unit)
       val reaped = Publish.expireVersions(root, keepLast = 1, pinned = Set(1L))
@@ -72,7 +73,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("catalog integration: a cataloged snapshot's members survive the member's own policy") {
-    val root = Files.createTempDirectory("graft_ret_cat").toString
+    val root = Scratch.tempDir("graft_ret_cat")
     try {
       Catalog.publishAll(spark, root, Map("a" -> df(1))): Unit
       Catalog.publishAll(spark, root, Map("a" -> df(2))): Unit
@@ -95,7 +96,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("readAsOf: timestamp resolves to the newest version committed ≤ t; expiration shrinks the horizon") {
-    val root = Files.createTempDirectory("graft_ret_asof").toString
+    val root = Scratch.tempDir("graft_ret_asof")
     try {
       Publish.publish(df(1), root): Unit
       Thread.sleep(60)
@@ -120,7 +121,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("catalog readAsOf: one timestamp pins every table to the SAME snapshot") {
-    val root = Files.createTempDirectory("graft_ret_catasof").toString
+    val root = Scratch.tempDir("graft_ret_catasof")
     try {
       Catalog.publishAll(spark, root, Map("a" -> df(1), "b" -> df(10))): Unit
       Thread.sleep(60)
@@ -138,7 +139,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("catalog CAS: racing publishAlls of different tables never lose a pin") {
-    val root = Files.createTempDirectory("graft_cat_race").toString
+    val root = Scratch.tempDir("graft_cat_race")
     try {
       Catalog.publishAll(spark, root, Map("a" -> df(1), "b" -> df(1))): Unit
       // two writers, each bumping a DIFFERENT table, racing the flip:
@@ -172,7 +173,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("expireSnapshots keepWithin retains recent snapshots beyond keepLast") {
-    val root = Files.createTempDirectory("graft_ret_catwin").toString
+    val root = Scratch.tempDir("graft_ret_catwin")
     try {
       Catalog.publishAll(spark, root, Map("a" -> df(1))): Unit
       Thread.sleep(60)

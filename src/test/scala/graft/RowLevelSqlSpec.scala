@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Compact, Deletes, GraftCatalog, Publish}
+import graft.tools.Scratch
 
 /** SQL row-level writes through the catalog
   * (plans/RowLevelSqlBridge): DELETE / UPDATE / MERGE INTO statements
@@ -46,7 +47,7 @@ class RowLevelSqlSpec extends SparkSpec {
   }
 
   test("SQL DELETE: versioned copy-on-write, file-pruned, history preserved") {
-    val root = Files.createTempDirectory("graft_sql_del").toString
+    val root = Scratch.tempDir("graft_sql_del")
     try {
       val tdir = fourFileTable(root)
       val v1Dir = Paths.get(tdir).resolve("v=1")
@@ -75,7 +76,7 @@ class RowLevelSqlSpec extends SparkSpec {
   }
 
   test("SQL UPDATE: SET expressions over target columns, pruned rewrite") {
-    val root = Files.createTempDirectory("graft_sql_upd").toString
+    val root = Scratch.tempDir("graft_sql_upd")
     try {
       val tdir = fourFileTable(root)
       val cat = catalogFor(root)
@@ -100,7 +101,7 @@ class RowLevelSqlSpec extends SparkSpec {
   test("SQL MERGE: all five clause kinds with clause-order semantics") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_sql_merge").toString
+    val root = Scratch.tempDir("graft_sql_merge")
     try {
       val tdir = fourFileTable(root)
       val cat = catalogFor(root)
@@ -151,7 +152,7 @@ class RowLevelSqlSpec extends SparkSpec {
   test("SQL MERGE full-sync: unconditional NOT MATCHED BY SOURCE DELETE rebuilds to the source") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_sql_sync").toString
+    val root = Scratch.tempDir("graft_sql_sync")
     try {
       val tdir = fourFileTable(root)
       val cat = catalogFor(root)
@@ -177,7 +178,7 @@ class RowLevelSqlSpec extends SparkSpec {
   test("SQL MERGE: NOT MATCHED BY SOURCE UPDATE branch") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_sql_bsu").toString
+    val root = Scratch.tempDir("graft_sql_bsu")
     try {
       val tdir = fourFileTable(root)
       val cat = catalogFor(root)
@@ -197,7 +198,7 @@ class RowLevelSqlSpec extends SparkSpec {
   test("refusals: history targets, snapshot mode, and subqueries") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_sql_refuse").toString
+    val root = Scratch.tempDir("graft_sql_refuse")
     try {
       val tdir = fourFileTable(root)
       val cat = catalogFor(root)
@@ -233,7 +234,7 @@ class RowLevelSqlSpec extends SparkSpec {
   test("SQL writes compose with deletion vectors: DV state folds, never resurrects") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_sql_dv").toString
+    val root = Scratch.tempDir("graft_sql_dv")
     try {
       val tdir = fourFileTable(root)
       // DV-delete 100..200 through the API, then SQL-delete more: the

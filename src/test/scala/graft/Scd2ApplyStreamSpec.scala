@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Scd
 import graft.sources.Publish
 import graft.streaming.Scd2ApplyStream
+import graft.tools.Scratch
 
 case class Scd2Change(wallet: Long, day: java.sql.Date, tier: String)
 
@@ -45,7 +46,7 @@ class Scd2ApplyStreamSpec extends SparkSpec {
   test("applyBatch: sequence ≡ recompute; no-op/late/new-key boundaries; replay refused; files carried") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_scd2_stream").toString
+    val root = Scratch.tempDir("graft_scd2_stream")
     try {
       val b0 = Seq(
         ch(1, "2024-01-01", "low"), ch(1, "2024-01-04", "mid"),
@@ -100,7 +101,7 @@ class Scd2ApplyStreamSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     implicit val sq = spark.sqlContext
-    val root = Files.createTempDirectory("graft_scd2_e2e").toString
+    val root = Scratch.tempDir("graft_scd2_e2e")
     try {
       val b0 = Seq(ch(1, "2024-01-01", "low"), ch(2, "2024-01-02", "mid"))
       val b1 = Seq(ch(1, "2024-01-05", "high"), ch(3, "2024-01-03", "low"))

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scd
 import graft.sources.Publish
+import graft.tools.Scratch
 
 /** SCD Type-2 history + snapshot differencing (operators/Scd.scala):
   * hand-computed micro-cases pin the interval/classification
@@ -144,7 +143,7 @@ class ScdSpec extends SparkSpec {
   test("snapshotDiff over Publish versions: time travel recovers the change feed") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_scd_pub").toString
+    val root = Scratch.tempDir("graft_scd_pub")
     try {
       val v1Data = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "n")
       val v2Data = Seq((1L, 10L), (2L, 25L), (4L, 40L)).toDF("id", "n")
@@ -171,7 +170,7 @@ class ScdSpec extends SparkSpec {
   test("changeFeedBetween: multi-step feed with lineage; DV versions surface as deletes") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_scd_feed").toString
+    val root = Scratch.tempDir("graft_scd_feed")
     try {
       Publish.publish(Seq((1L, 10L), (2L, 20L)).toDF("id", "n"), root): Unit
       Publish.publish(Seq((1L, 10L), (2L, 25L), (3L, 30L)).toDF("id", "n"), root): Unit

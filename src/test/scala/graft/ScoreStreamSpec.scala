@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.sources.{Publish, Sinks}
 import graft.streaming.ScoreStream
+import graft.tools.Scratch
 
 /** S43 (streaming/ScoreStream): maintained curriculum scores. Pins
   * the plan identity (the plan over the maintained table ≡ one-shot
@@ -25,7 +24,7 @@ class ScoreStreamSpec extends SparkSpec {
   test("the maintained plan equals one-shot phaseOrder; replay refused") {
     implicit val sqlCtx = spark.sqlContext
     val all = docs
-    val base = Files.createTempDirectory("graft_s43")
+    val base = java.nio.file.Paths.get(Scratch.tempDir("graft_s43"))
     val scoresRoot = base.resolve("scores").toString
 
     val mem = MemoryStream[(Long, String)]
@@ -55,7 +54,7 @@ class ScoreStreamSpec extends SparkSpec {
 
   test("S43r: the plan identity survives a mid-backlog kill-and-restart") {
     val all = docs
-    val base = Files.createTempDirectory("graft_s43_r")
+    val base = java.nio.file.Paths.get(Scratch.tempDir("graft_s43_r"))
     val scoresRoot = base.resolve("scores").toString
     val parts = all.grouped(math.max(1, all.length / 4)).toSeq
       .map(_.toDF("doc_id", "text"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.Publish
 import graft.streaming.{AppendStream, SegmentFreqStream}
 import graft.text.TextOps
+import graft.tools.Scratch
 
 /** S38 (streaming/SegmentFreqStream): maintained boilerplate
   * frequency. Pins the aggregate-state identity (summed deltas ≡
@@ -23,7 +24,7 @@ class SegmentFreqStreamSpec extends SparkSpec {
   private val footer = "copyright acme all rights"
 
   private def roots(): (String, String, java.nio.file.Path) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_s38")
+    val base = java.nio.file.Paths.get(Scratch.tempDir("graft_s38"))
     (base.resolve("corpus").toString, base.resolve("freq").toString, base)
   }
 
@@ -146,7 +147,7 @@ class SegmentFreqStreamSpec extends SparkSpec {
   }
 
   test("S38r: kill-and-restart resumes exactly once") {
-    val base = java.nio.file.Files.createTempDirectory("graft_s38r")
+    val base = java.nio.file.Paths.get(Scratch.tempDir("graft_s38r"))
     val (corpus, freq) = (base.resolve("corpus").toString, base.resolve("freq").toString)
     val inDir = base.resolve("in").toString
     val ckpt = base.resolve("ck").toString

@@ -1,17 +1,16 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sinks
+import graft.tools.Scratch
 
 /** Sink layout behaviors that matter at scale: partition pruning on
   * partitioned writes, shuffle-free joins on bucketed writes. */
 class SinksSpec extends SparkSpec {
 
   test("partitioned write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = Scratch.tempDir("graft_part")
     val ev = Tables.events(spark, SfDir)
     Sinks.writePartitioned(ev, dir, Seq("event_type"))
 
@@ -105,7 +104,7 @@ class SinksSpec extends SparkSpec {
 
   test("writeShards lands one sorted file per shard and loses no rows") {
     val assigned = SparkEntry.q59ShardAssign(spark, SfDir)
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = Scratch.tempDir("graft_shards")
     try {
       Sinks.writeShards(assigned, out, "shard", nShards = 8,
         orderCols = Seq("scramble", "doc_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{DedupStream, EventRollup, RunningBalance, SessionRollup, Transfer, UpsertSink}
+import graft.tools.Scratch
 
 /** S1/S2: drive the streaming operators through MemoryStream →
   * writeStream (the real Structured Streaming engine, micro-batched)
@@ -175,8 +176,8 @@ class StreamingSpec extends SparkSpec {
     val rows = Tables.events(spark, SfDir)
       .select("event_id", "event_type", "user_id", "ts", "value")
       .as[Ev].collect().sortBy(_.ts.getTime)
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_upsert_table").toString
-    val stagingDir = java.nio.file.Files.createTempDirectory("graft_upsert_stage").toString
+    val tableDir = Scratch.tempDir("graft_upsert_table")
+    val stagingDir = Scratch.tempDir("graft_upsert_stage")
     val keys = Seq("user_id", "event_type")
     val version = Seq(col("ts"), col("event_id"))
 
@@ -222,7 +223,7 @@ class StreamingSpec extends SparkSpec {
     val rows = Tables.events(spark, SfDir)
       .select("event_id", "event_type", "user_id", "ts", "value")
       .as[Ev].collect().sortBy(_.ts.getTime)
-    val root = java.nio.file.Files.createTempDirectory("graft_pubstream").resolve("ds").toString
+    val root = Scratch.tempDir("graft_pubstream") + "/ds"
     val keys = Seq("user_id", "event_type")
     val version = Seq(col("ts"), col("event_id"))
 
@@ -287,8 +288,7 @@ class StreamingSpec extends SparkSpec {
     val eventsDf = Tables.events(spark, SfDir)
       .select("event_id", "event_type", "user_id", "ts", "value")
     val rows = eventsDf.as[Ev].collect().sortBy(_.ts.getTime)
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("graft_sktbl").toString + "/t"
+    val tableDir = Scratch.tempDir("graft_sktbl") + "/t"
 
     val mem = MemoryStream[Ev]
     val query = SketchTableSink.start(mem.toDF(), tableDir)
@@ -308,8 +308,7 @@ class StreamingSpec extends SparkSpec {
     // batch twin: the SAME dailySketches aggregation over all rows at
     // once, same read side — register max is order-insensitive, so
     // estimates match exactly however the stream was chopped
-    val batchDir = java.nio.file.Files
-      .createTempDirectory("graft_sktbl_batch").toString + "/t"
+    val batchDir = Scratch.tempDir("graft_sktbl_batch") + "/t"
     graft.sources.Sinks.writePartitioned(
       SketchTableSink.dailySketches(eventsDf), batchDir, Seq("day"))
     assert(streamed == est(SketchTableSink.rollingEstimate(spark, batchDir)),
@@ -358,8 +357,7 @@ class StreamingSpec extends SparkSpec {
     val eventsDf = Tables.events(spark, SfDir)
       .select("event_id", "event_type", "user_id", "ts", "value")
     val rows = eventsDf.as[Ev].collect().sortBy(_.event_id)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_aggtbl").toString + "/t"
+    val root = Scratch.tempDir("graft_aggtbl") + "/t"
     def withDecimal(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("value_d", round(col("value"), 6).cast("decimal(18,6)"))
 
@@ -427,8 +425,8 @@ class StreamingSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, SfDir)
       .selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) as embedding")
       .as[(Long, Seq[Double])].collect()
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_annidx_table").toString
-    val stagingDir = java.nio.file.Files.createTempDirectory("graft_annidx_stage").toString
+    val tableDir = Scratch.tempDir("graft_annidx_table")
+    val stagingDir = Scratch.tempDir("graft_annidx_stage")
 
     val mem = MemoryStream[(Long, Seq[Double])]
     val query = graft.streaming.AnnIndexSink.start(
@@ -500,8 +498,8 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Seq[Double])].collect()
     val cb = graft.similarity.Pq.trainCodebook(
       embDf, "vec_id", "embedding", 8, 8, 16, iters = 2)
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_adc_table").toString
-    val stagingDir = java.nio.file.Files.createTempDirectory("graft_adc_stage").toString
+    val tableDir = Scratch.tempDir("graft_adc_table")
+    val stagingDir = Scratch.tempDir("graft_adc_stage")
 
     val mem = MemoryStream[(Long, Seq[Double])]
     val query = graft.streaming.AdcSearchStream.start(
@@ -597,13 +595,12 @@ class StreamingSpec extends SparkSpec {
     assert(winners == winners2, "intra-batch winner depends on row order")
 
     // missing table ⇒ sequence starts at 0
-    val missing = java.nio.file.Files.createTempDirectory("graft_annidx_seq")
-      .resolve("never_written").toString
+    val missing = Scratch.tempDir("graft_annidx_seq") + "/never_written"
     assert(graft.streaming.AnnIndexSink.nextBatchSeq(spark, missing) == 0L)
     // a populated-but-unreadable table must ABORT the batch, not
     // silently reset the sequence to 0 (which would version the batch
     // below the table's high-water mark and keep stale buckets)
-    val corrupt = java.nio.file.Files.createTempDirectory("graft_annidx_corrupt")
+    val corrupt = java.nio.file.Paths.get(Scratch.tempDir("graft_annidx_corrupt"))
     java.nio.file.Files.write(
       corrupt.resolve("part-00000.parquet"), "not a parquet file".getBytes)
     intercept[Exception] {

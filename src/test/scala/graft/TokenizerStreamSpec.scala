@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.sources.Publish
 import graft.streaming.TokenizerStream
+import graft.tools.Scratch
 
 /** S39 (streaming/TokenizerStream): token-stream maintenance under a
   * versioned reference tokenizer. Pins the encode identity (streamed
@@ -29,7 +30,7 @@ class TokenizerStreamSpec extends SparkSpec {
         r.getString(3), r.getLong(4))).toSet
 
   private def roots(): (String, String) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_s39").toString
+    val base = Scratch.tempDir("graft_s39")
     (s"$base/tok", s"$base/streams")
   }
 
@@ -103,7 +104,7 @@ class TokenizerStreamSpec extends SparkSpec {
   }
 
   test("S39r: kill-and-restart resumes encoding exactly once") {
-    val base = java.nio.file.Files.createTempDirectory("graft_s39r")
+    val base = java.nio.file.Paths.get(Scratch.tempDir("graft_s39r"))
     val tokRoot = base.resolve("tok").toString
     val streamsRoot = base.resolve("streams").toString
     val inDir = base.resolve("in").toString

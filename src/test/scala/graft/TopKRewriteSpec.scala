@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import graft.tools.Scratch
+
 /** The injected per-group top-N rule's k ≥ 2 branch (plans/TopKRewrite):
   * `row_number() <= k` over a window must produce IDENTICAL rows —
   * rank column included — with the rule on and off, while the
@@ -42,10 +44,8 @@ class TopKRewriteSpec extends SparkSpec {
         r.getString(2), r.getDouble(3), r.getInt(4))
     }.toSet
 
-  private def withRuleOff[A](body: => A): A = {
-    spark.conf.set("spark.graft.topK.auto", "false")
-    try body finally spark.conf.set("spark.graft.topK.auto", "true")
-  }
+  private def withRuleOff[A](body: => A): A =
+    withoutRule(classOf[graft.plans.TopKRewrite])(body)
 
   private def planOf(sql: String): String =
     spark.sql(sql).queryExecution.executedPlan.toString
@@ -158,7 +158,7 @@ class TopKRewriteSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_topk_gate").toString
+    val root = Scratch.tempDir("graft_topk_gate")
     try {
       // leaderboard regime: 8 groups × 500 rows — rows-per-group 500
       val lead = s"$root/lead"
@@ -209,7 +209,7 @@ class TopKRewriteSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_topk_sig").toString
+    val root = Scratch.tempDir("graft_topk_sig")
     try {
       val t = s"$root/t"
       // churn regime first: near-unique key → the gate keeps the Window
@@ -245,7 +245,7 @@ class TopKRewriteSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_topk_cat").toString
+    val root = Scratch.tempDir("graft_topk_cat")
     try {
       // churn regime published through the catalog protocol, stats on
       // the LIVE version dir (where maintenance builds them)

@@ -40,10 +40,8 @@ class TopRowRewriteSpec extends SparkSpec {
         r.getString(2), r.getDouble(3))
     }.toSet
 
-  private def withRuleOff[A](body: => A): A = {
-    spark.conf.set("spark.graft.topK.auto", "false")
-    try body finally spark.conf.set("spark.graft.topK.auto", "true")
-  }
+  private def withRuleOff[A](body: => A): A =
+    withoutRule(classOf[graft.plans.TopKRewrite])(body)
 
   private def planOf(sql: String): String =
     spark.sql(sql).queryExecution.executedPlan.toString

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.CountDownLatch
 
 import graft.sources.{Publish, Txn}
+import graft.tools.Scratch
 
 /** Optimistic concurrency (sources/Txn.scala +
   * Publish.publishStagedIf): the expected-version CAS refuses stale
@@ -26,7 +27,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("CAS: a stale expected version refuses with nothing committed; bootstrap races too") {
-    val root = Files.createTempDirectory("graft_txn_cas").toString
+    val root = Scratch.tempDir("graft_txn_cas")
     try {
       val v1 = Publish.publish(df(1), root)
       // stale: table is at v1, transaction expects the bootstrap state
@@ -56,7 +57,7 @@ class TxnSpec extends SparkSpec {
   test("negative control: the unchecked path LOSES a concurrent update (the hazard the CAS closes)") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_txn_lost").toString
+    val root = Scratch.tempDir("graft_txn_lost")
     try {
       Publish.publish(df(1), root): Unit
       // writer A derives its new content from v1 NOW...
@@ -82,7 +83,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("race: concurrent Txn.append writers serialize with every update present") {
-    val root = Files.createTempDirectory("graft_txn_race").toString
+    val root = Scratch.tempDir("graft_txn_race")
     try {
       Publish.publish(df(0), root): Unit
       val start = new CountDownLatch(1)
@@ -107,7 +108,7 @@ class TxnSpec extends SparkSpec {
     import graft.sources.Compact
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_txn_maint").toString
+    val root = Scratch.tempDir("graft_txn_maint")
     try {
       def batch(i: Long) = ((i * 100 + 1) to (i * 100 + 20)).map(j => (j, j)).toDF("id", "n")
       assert(AppendStream.applyBatch(batch(0), 0L, root))
@@ -141,7 +142,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("a crashed writer's stale commit lock is broken, not a wedge") {
-    val root = Files.createTempDirectory("graft_txn_stale").toString
+    val root = Scratch.tempDir("graft_txn_stale")
     try {
       Files.createDirectories(Paths.get(root)): Unit
       val lock = Paths.get(root).resolve("_COMMIT_LOCK")

@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.MatViews
+import graft.tools.Scratch
 
 /** Automatic materialized-view matching (plans/ViewMatchRewrite +
   * sources/MatViews): aggregates contained by a registered view must
@@ -22,7 +21,7 @@ class ViewMatchRewriteSpec extends SparkSpec {
 
   private def setup(): Unit = {
     if (factsPath != null) return
-    val root = Files.createTempDirectory("graft_mv_spec").toString
+    val root = Scratch.tempDir("graft_mv_spec")
     factsPath = s"$root/facts.parquet"
     mvPath = s"$root/mv.parquet"
     val sess = spark
@@ -45,13 +44,15 @@ class ViewMatchRewriteSpec extends SparkSpec {
     spark.read.parquet(factsPath).createOrReplaceTempView("mv_facts")
   }
 
-  private def withRuleOff[A](body: => A): A = {
-    spark.conf.set("spark.graft.viewMatch.auto", "false")
-    try body finally spark.conf.set("spark.graft.viewMatch.auto", "true")
-  }
+  private def withRuleOff[A](body: => A): A =
+    withoutRule(classOf[graft.plans.ViewMatchRewrite])(body)
 
+  /** The executed plan, then every file the query reads, by full path:
+    * the plan string cuts a scan's location after
+    * `spark.sql.maxMetadataStringLength` (100) characters, and a
+    * run-scoped temp dir's name alone is ~70. */
   private def scans(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString
+    (df.queryExecution.executedPlan.toString +: df.inputFiles).mkString("\n")
 
   private def agree(sql: String): Unit = {
     val on = spark.sql(sql).collect().map(_.toString).sorted.toSeq
@@ -134,7 +135,7 @@ class ViewMatchRewriteSpec extends SparkSpec {
 
   private def setupJoin(): Unit = {
     if (jFactsPath != null) return
-    val root = Files.createTempDirectory("graft_mv_join_spec").toString
+    val root = Scratch.tempDir("graft_mv_join_spec")
     jFactsPath = s"$root/jfacts.parquet"
     jDimPath = s"$root/jdim.parquet"
     jMvPath = s"$root/jmv.parquet"
@@ -225,7 +226,7 @@ class ViewMatchRewriteSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
 
-    val root = Files.createTempDirectory("graft_mv_stream").toString
+    val root = Scratch.tempDir("graft_mv_stream")
     val liveFacts = s"$root/facts.parquet"
     val viewRoot = s"$root/view"
     val mem = MemoryStream[(String, Double)]

@@ -1,11 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Publish, Wap}
 import graft.sources.Wap.Expectation
+import graft.tools.Scratch
 
 /** Write-audit-publish (sources/Wap.scala): fail aborts before the
   * pointer flip, drop quarantines with triage lineage, warn records
@@ -16,7 +17,7 @@ class WapSpec extends SparkSpec {
   test("fail severity: violations abort, live version untouched, no new dir") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_wap_fail").toString
+    val root = Scratch.tempDir("graft_wap_fail")
     try {
       val v1 = Publish.publish(
         Seq((1L, 10L)).toDF("id", "v"), root)
@@ -42,7 +43,7 @@ class WapSpec extends SparkSpec {
   test("drop severity: violators quarantine with the expectations they failed") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_wap_drop").toString
+    val root = Scratch.tempDir("graft_wap_drop")
     try {
       val rows = Seq(
         (1L, 10L, "a"), (2L, -5L, "b"),          // fails nonneg
@@ -71,7 +72,7 @@ class WapSpec extends SparkSpec {
   test("warn severity gates nothing; all-green publishes with zero counts") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_wap_warn").toString
+    val root = Scratch.tempDir("graft_wap_warn")
     try {
       val rows = Seq((1L, 100L), (2L, 200L)).toDF("id", "v")
       val (_, counts) = Wap.publishWithExpectations(spark, root, rows, Seq(
@@ -88,7 +89,7 @@ class WapSpec extends SparkSpec {
   test("append form: an all-rejected FIRST batch still publishes an empty v1") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_wap_allrej").toString
+    val root = Scratch.tempDir("graft_wap_allrej")
     try {
       // no live version yet, and every row drop-quarantines — drop
       // severity promises a clean publish, which here is an empty v1
@@ -115,8 +116,8 @@ class WapSpec extends SparkSpec {
   test("referential expectation: fact keys ⊆ published dim via pre-join") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_wap_ref").toString
-    val dimRoot = Files.createTempDirectory("graft_wap_dim").toString
+    val root = Scratch.tempDir("graft_wap_ref")
+    val dimRoot = Scratch.tempDir("graft_wap_dim")
     try {
       Publish.publish(Seq((10L, "x"), (20L, "y")).toDF("ck", "seg"), dimRoot): Unit
       val facts = Seq((1L, 10L), (2L, 20L), (3L, 99L)).toDF("id", "ck")

@@ -1,12 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Publish, Wap}
 import graft.streaming.WapStream
+import graft.tools.Scratch
 
 case class WapRow(id: Long, v: Long, src: String)
 
@@ -23,7 +24,7 @@ class WapStreamSpec extends SparkSpec {
   test("streamed batches audit-and-append: quarantines are batch-grained, counts committed") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_wapstream").toString
+    val root = Scratch.tempDir("graft_wapstream")
     implicit val sqlCtx = spark.sqlContext
     try {
       val mem = MemoryStream[WapRow]
@@ -69,7 +70,7 @@ class WapStreamSpec extends SparkSpec {
   test("a fail-severity violation aborts the batch with nothing committed") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_wapstream_fail").toString
+    val root = Scratch.tempDir("graft_wapstream_fail")
     try {
       val gate = Seq(Wap.Expectation.fail("no_negatives", col("v") >= 0))
       assert(WapStream.applyBatch(
@@ -90,7 +91,7 @@ class WapStreamSpec extends SparkSpec {
   test("S28r: the audited ingest survives a mid-backlog kill-and-restart") {
     val sess = spark
     import sess.implicits._
-    val root = Files.createTempDirectory("graft_wapstream_restart").toString
+    val root = Scratch.tempDir("graft_wapstream_restart")
     try {
       val first = Seq(
         Seq(WapRow(1, 1, "a"), WapRow(2, -2, "a")).toDF(),

@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.WorkloadCapture
+import graft.tools.Scratch
 
 /** The observed-workload capture contract (q167's listener):
   * optimized-plan scan predicates over ONE target table, folded into
@@ -19,7 +18,7 @@ class WorkloadCaptureSpec extends SparkSpec {
   private lazy val root: String = {
     val sess = spark
     import sess.implicits._
-    val dir = Files.createTempDirectory("graft_wcap").resolve("t").toString
+    val dir = Scratch.tempDir("graft_wcap") + "/t"
     (0L until 100L).map(i => (i, i % 10)).toDF("x", "y")
       .repartition(2).write.parquet(dir)
     dir

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.ZOrder
+import graft.tools.Scratch
 
 /** Z-order clustering + file-level min/max skipping (sources/ZOrder):
   * hand-computed Morton bits, bucket edge cases, pruned-read
@@ -97,7 +96,7 @@ class ZOrderSpec extends SparkSpec {
     val data = spark.range(n.toLong).select(
       (pmod(col("id") * 48271L, lit(104729L)) % 1000).as("a"),
       (pmod(col("id") * 69621L, lit(104857L)) % 1000).as("b"))
-    val root = Files.createTempDirectory("graft_zorder_spec").toString
+    val root = Scratch.tempDir("graft_zorder_spec")
     val zPath = root + "/z"
     val linPath = root + "/lin"
     try {
@@ -157,7 +156,7 @@ class ZOrderSpec extends SparkSpec {
       col("id").as("k"),
       expr("shiftleft(cast(1 as bigint), cast(id % 30 as int))").as("a"),
       (pmod(col("id") * 69621L, lit(104857L)) % 1000).as("b"))
-    val root = Files.createTempDirectory("graft_zq_spec").toString
+    val root = Scratch.tempDir("graft_zq_spec")
     val affPath = root + "/aff"
     val qPath = root + "/q"
     try {
@@ -191,6 +190,36 @@ class ZOrderSpec extends SparkSpec {
     }
   }
 
+  test("a second write of the same input cuts the same files, whatever the RDD counter") {
+    // Spark seeds a range partitioner's sample from the RDD id, so cuts
+    // drawn from a sample move with how many RDDs the JVM made first;
+    // both writers must cut the same files on a second write
+    val n = 21000
+    val data = spark.range(n.toLong).select(
+      col("id").as("k"),
+      expr("shiftleft(cast(1 as bigint), cast(id % 30 as int))").as("a"),
+      (pmod(col("id") * 69621L, lit(104857L)) % 1000).as("b"))
+    val root = Scratch.tempDir("graft_zdet_spec")
+    def stats(path: String): Seq[String] =
+      spark.read.parquet(ZOrder.statsPath(path)).collect().map { r =>
+        // the file name carries a per-write uuid; its part number is the file
+        val part = "part-\\d+".r.findFirstIn(r.getString(0)).get
+        (part +: r.toSeq.tail).mkString(",")
+      }.sorted.toSeq
+    def layouts(run: String): (Seq[String], Seq[String]) = {
+      ZOrder.writeZOrdered(data, s"$root/$run/aff", "a", "b", bits = 8, numFiles = 32)
+      ZOrder.writeZOrderedQuantile(data, s"$root/$run/q", "a", "b", tieBreaker = "k",
+        bits = 8, numFiles = 32)
+      (stats(s"$root/$run/aff"), stats(s"$root/$run/q"))
+    }
+    val (aff1, q1) = layouts("first")
+    (1 to 3).foreach(i => spark.sparkContext.parallelize(1 to i).count())
+    val (aff2, q2) = layouts("second")
+    assert(aff1.length >= 16 && q1.length >= 16, s"files: aff=${aff1.length} q=${q1.length}")
+    assert(aff2 == aff1, "the affine layout changed between two writes of the same input")
+    assert(q2 == q1, "the quantile layout changed between two writes of the same input")
+  }
+
   test("q103: quantile-layout pruned read equals the full-scan filter") {
     val out = SparkEntry.q103ZorderQuantile(spark, SfDir)
     val want = Tables.events(spark, SfDir)
@@ -212,7 +241,7 @@ class ZOrderSpec extends SparkSpec {
       col("id").as("k"),
       (pmod(col("id") * 48271L, lit(104729L)) % 1000).as("a"),
       (pmod(col("id") * 69621L, lit(104857L)) % 1000).as("b"))
-    val root = Files.createTempDirectory("graft_zbloom_spec").toString
+    val root = Scratch.tempDir("graft_zbloom_spec")
     val path = root + "/t"
     try {
       ZOrder.writeZOrdered(data, path, "a", "b", bits = 8, numFiles = 32,
@@ -280,7 +309,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("hilbert layout: lossless box pruning; never more candidate files than z-order on the panel") {
-    val root = Files.createTempDirectory("graft_hilbert_spec").toString
+    val root = Scratch.tempDir("graft_hilbert_spec")
     val hPath = root + "/h"
     val zPath = root + "/z"
     try {
