@@ -2004,7 +2004,7 @@ object SparkEntry {
   /** q100: Z-order data skipping ([[graft.sources.ZOrder]]) — the
     * lakehouse stats-manifest pattern: events clustered along the
     * Morton curve of (user_id, value) into ~32 files with a per-file
-    * min/max stats table, then a 2-D box predicate answered by
+    * min/max [[graft.sources.FileStats]] manifest, then a 2-D box predicate answered by
     * reading ONLY the files whose stats box intersects it. Pruning is
     * an optimization, never semantics: the predicate re-applies to
     * the surviving rows, so the DuckDB oracle (same filter +
@@ -2031,7 +2031,9 @@ object SparkEntry {
 
   def q100ZorderPrune(spark: SparkSession, dir: String): DataFrame = {
     val table = zIndexedEvents(spark, dir)
-    graft.sources.ZOrder.prunedRead(spark, table, 3L, 7L, 20.0, 80.0)
+    import graft.sources.FileStats.Between
+    graft.sources.FileStats.prunedRead(spark, table,
+        Seq(Between("user_id", 3L, 7L), Between("value", 20.0, 80.0)))
       .where(col("user_id").between(3, 7) && col("value").between(20.0, 80.0))
       .groupBy("event_type")
       .agg(
@@ -2041,12 +2043,12 @@ object SparkEntry {
   }
 
   /** q101: bloom point-lookup over the same z-ordered layout
-    * ([[graft.sources.ZOrder.prunedReadByKeys]]) — the skipping case
+    * ([[graft.sources.FileStats.prunedRead]] with a `KeyIn`) — the skipping case
     * min/max boxes CANNOT serve: after the z-shuffle a sequential
     * event_id is uncorrelated with the curve dims, so every file's
     * id range spans nearly the whole domain and box pruning keeps
     * everything; the per-file bloom column (graft_bloom_agg over
-    * xxhash64(event_id), built into the `_zstats` manifest at write
+    * xxhash64(event_id), built into the `_fstats` manifest at write
     * time) prunes to ~1 file per probed key + fpp stragglers. False
     * positives only add file reads (the predicate re-applies), false
     * negatives are impossible — so the full-table DuckDB oracle
@@ -2054,8 +2056,8 @@ object SparkEntry {
     * this is the needle-in-haystack path: O(keys) file reads instead
     * of a table scan, off a driver-sized manifest. */
   def q101BloomLookup(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.ZOrder
-      .prunedReadByKeys(spark, zIndexedEvents(spark, dir), Seq(5L, 123L, 456L))
+    graft.sources.FileStats.prunedRead(spark, zIndexedEvents(spark, dir),
+        Seq(graft.sources.FileStats.KeyIn("event_id", Seq(5L, 123L, 456L))))
       .where(col("event_id").isin(5L, 123L, 456L))
       .select("event_id", "event_type", "user_id", "value")
 
@@ -2080,7 +2082,9 @@ object SparkEntry {
 
   def q103ZorderQuantile(spark: SparkSession, dir: String): DataFrame = {
     val table = zqIndexedEvents(spark, dir)
-    graft.sources.ZOrder.prunedRead(spark, table, 10L, 20L, 30.0, 60.0)
+    import graft.sources.FileStats.Between
+    graft.sources.FileStats.prunedRead(spark, table,
+        Seq(Between("user_id", 10L, 20L), Between("value", 30.0, 60.0)))
       .where(col("user_id").between(10, 20) && col("value").between(30.0, 60.0))
       .groupBy("event_type")
       .agg(
@@ -2404,13 +2408,13 @@ object SparkEntry {
   }
 
   /** q112: 3-dimensional z-order + the generic stats manifest
-    * ([[graft.sources.ZOrder.zValueN]] + [[graft.sources.FileStats]])
-    * — the two r8 skipping layers COMPOSED: events clustered along
-    * the k=3 Morton curve of (user bucket, value bucket, epoch-day
-    * bucket), with pruning served by FileStats' schema-driven
-    * `_fstats` sidecar instead of ZOrder's bespoke 2-D `_zstats` —
-    * one manifest format across layouts (the r9-ranked adapter,
-    * closed). A 3-D box (user × value × week) then reads only files
+    * ([[graft.sources.ZOrder.zValueN]] through
+    * [[graft.sources.ZOrder.writeCurve]], pruned by
+    * [[graft.sources.FileStats]]) — events clustered along the k=3
+    * Morton curve of (user bucket, value bucket, epoch-day bucket),
+    * cut into files by the same exact-histogram writer as every other
+    * curve layout, with a FileStats manifest over all three
+    * predicate columns. A 3-D box (user × value × week) then reads only files
     * whose three stat ranges all intersect it; the same full-scan
     * oracle posture as q100/q106 hash-checks losslessness. At 100 TB
     * this is the dashboard-slice shape: every dimension selective,
@@ -2418,24 +2422,11 @@ object SparkEntry {
     * three per file where any linear layout bounds one. */
   private def z3IndexedEvents(spark: SparkSession, dir: String): String =
     graft.tools.Scratch.cachedArtifact("graft_z3idx", dir) { tableDir =>
+      import graft.sources.ZOrder
       val ev = Tables.events(spark, dir)
-      val bounds = ev.agg(
-        min("user_id").as("lu"), max("user_id").as("hu"),
-        min("value").as("lv"), max("value").as("hv"),
-        min(unix_date(to_date(col("ts")))).as("ld"),
-        max(unix_date(to_date(col("ts")))).as("hd")).collect()(0)
-      import graft.sources.ZOrder.{affineBucket, zValueN}
-      ev.withColumn("__z", zValueN(Seq(
-          affineBucket(col("user_id"), lit(bounds.get(0)), lit(bounds.get(1)), 6),
-          affineBucket(col("value"), lit(bounds.get(2)), lit(bounds.get(3)), 6),
-          affineBucket(unix_date(to_date(col("ts"))).cast("long"),
-            lit(bounds.get(4)), lit(bounds.get(5)), 6)), 6))
-        .repartitionByRange(32, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.parquet(tableDir)
-      graft.sources.FileStats.build(spark, tableDir,
-        cols = Seq("user_id", "value", "ts"))
+      val dims = Seq(col("user_id"), col("value"), unix_date(to_date(col("ts"))))
+      ZOrder.writeCurve(ev, tableDir, ZOrder.zValueN(ZOrder.affineBuckets(ev, dims, 6), 6),
+        numFiles = 32, statCols = Seq("user_id", "value", "ts"))
     }
 
   def q112Zorder3Prune(spark: SparkSession, dir: String): DataFrame = {
@@ -2729,24 +2720,14 @@ object SparkEntry {
 
     val table = graft.tools.Scratch.cachedArtifact(
       s"graft_q123_${best.replace("+", "_")}", dir) { tableDir =>
+      import graft.sources.ZOrder
       val ev = Tables.events(spark, dir)
       val dimCols = advisorDims.toMap.view.mapValues(_.cast("double")).toMap
       val chosen = best.split('+').toSeq
-      val aggs = chosen.flatMap(d =>
-        Seq(min(dimCols(d)).as(s"lo_$d"), max(dimCols(d)).as(s"hi_$d")))
-      val b = ev.agg(aggs.head, aggs.tail: _*).collect()(0)
-      import graft.sources.ZOrder.{affineBucket, zValueN}
       val bits = if (chosen.length == 1) 12 else 9
-      val zcols = chosen.zipWithIndex.map { case (d, i) =>
-        affineBucket(dimCols(d), lit(b.get(2 * i)), lit(b.get(2 * i + 1)), bits)
-      }
-      ev.withColumn("__z", zValueN(zcols, bits))
-        .repartitionByRange(32, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.parquet(tableDir)
-      graft.sources.FileStats.build(spark, tableDir,
-        cols = Seq("user_id", "value", "ts"))
+      val curve = ZOrder.zValueN(ZOrder.affineBuckets(ev, chosen.map(dimCols), bits), bits)
+      ZOrder.writeCurve(ev, tableDir, curve,
+        numFiles = 32, statCols = Seq("user_id", "value", "ts"))
     }
 
     val lo = java.sql.Timestamp.valueOf("2024-01-08 00:00:00")
@@ -4176,7 +4157,9 @@ object SparkEntry {
 
   def q150HilbertPrune(spark: SparkSession, dir: String): DataFrame = {
     val table = hilbertIndexedEvents(spark, dir)
-    graft.sources.ZOrder.prunedRead(spark, table, 3L, 7L, 20.0, 80.0)
+    import graft.sources.FileStats.Between
+    graft.sources.FileStats.prunedRead(spark, table,
+        Seq(Between("user_id", 3L, 7L), Between("value", 20.0, 80.0)))
       .where(col("user_id").between(3, 7) && col("value").between(20.0, 80.0))
       .groupBy("event_type")
       .agg(

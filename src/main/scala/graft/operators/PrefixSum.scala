@@ -55,47 +55,17 @@ object PrefixSum {
     * (ascending) — `ROW_NUMBER() OVER (ORDER BY …)` with no partition
     * key — and return the total row count alongside, for free: pass 1
     * already counts every partition, so callers that need rank AND N
-    * (ntile, percent_rank) pay no extra job. Same two-pass shape and
-    * same total-order requirement as [[globalRunningSum]]; the count
-    * is an eager driver-side scalar (pass 1 runs at call time). */
+    * (ntile, percent_rank) pay no extra job. The unit-weight case of
+    * [[globalRunningSum]]'s two-pass scan, same total-order
+    * requirement; the count is an eager driver-side scalar (pass 1
+    * runs at call time). */
   def globalRowNumber(
       df: DataFrame,
       orderCols: Seq[String],
       outCol: String,
       numPartitions: Int = 0): (DataFrame, Long) = {
     require(orderCols.nonEmpty, "global row number needs an order")
-    require(!df.columns.contains(outCol),
-      s"output column '$outCol' already exists on the input")
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-
-    val sorted = df
-      .repartitionByRange(n, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-    val schema = sorted.schema
-    val rdd = sorted.rdd
-
-    // pass 1: per-partition row counts (numPartitions scalars)
-    val counts = rdd.mapPartitionsWithIndex { (pid, it) =>
-      Iterator((pid, it.size.toLong))
-    }.collect()
-
-    val off = new Array[Long](n)
-    counts.sortBy(_._1).foreach { case (pid, c) =>
-      if (pid + 1 < n) off(pid + 1) = c
-    }
-    for (i <- 1 until n) off(i) += off(i - 1)
-    val total = counts.map(_._2).sum
-
-    // pass 2: seed each partition with its exclusive prefix count
-    val outRows = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rk = off(pid)
-      it.map { r => rk += 1; Row.fromSeq(r.toSeq :+ rk) }
-    }
-    val out = spark.createDataFrame(outRows,
-      StructType(schema.fields :+ StructField(outCol, LongType, nullable = false)))
-    (out, total)
+    twoPassScan(df, orderCols, None, outCol, numPartitions)
   }
 
   /** Append `outCol` = running sum of `valueCol` over the global
@@ -117,6 +87,19 @@ object PrefixSum {
       outCol: String,
       numPartitions: Int = 0): DataFrame = {
     require(orderCols.nonEmpty, "global running sum needs an order")
+    twoPassScan(df, orderCols, Some(valueCol), outCol, numPartitions)._1
+  }
+
+  /** The shared two-pass scan: range exchange, pass 1 per-partition
+    * totals, exclusive scan on the driver, pass 2 seeded per
+    * partition. `valueCol = None` is the unit weight (the row number):
+    * no measure is read per row, and pass 1's total is the row count. */
+  private def twoPassScan(
+      df: DataFrame,
+      orderCols: Seq[String],
+      valueCol: Option[String],
+      outCol: String,
+      numPartitions: Int): (DataFrame, Long) = {
     require(!df.columns.contains(outCol),
       s"output column '$outCol' already exists on the input")
     val spark = df.sparkSession
@@ -127,13 +110,14 @@ object PrefixSum {
       .repartitionByRange(n, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.map(col): _*)
     val schema = sorted.schema
-    val vIdx = schema.fieldIndex(valueCol)
-    val integral = schema(valueCol).dataType match {
+    // -1: unit weight
+    val vIdx = valueCol.map(schema.fieldIndex).getOrElse(-1)
+    val integral = valueCol.forall(v => schema(v).dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case FloatType | DoubleType => false
       case dt => throw new IllegalArgumentException(
-        s"globalRunningSum supports integral and floating measures, got $dt for '$valueCol'")
-    }
+        s"globalRunningSum supports integral and floating measures, got $dt for '$v'")
+    })
 
     // one RDD val: both jobs below share its shuffle dependency, so
     // the range exchange is WRITTEN once and only re-READ for pass 2
@@ -141,15 +125,18 @@ object PrefixSum {
 
     // pass 1: per-partition totals (numPartitions scalars, not rows)
     val totals = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var accL = 0L
-      var accD = 0.0
-      it.foreach { r =>
-        if (!r.isNullAt(vIdx)) {
-          if (integral) accL += r.getAs[Number](vIdx).longValue()
-          else accD += r.getAs[Number](vIdx).doubleValue()
+      if (vIdx < 0) Iterator((pid, it.size.toLong, 0.0))
+      else {
+        var accL = 0L
+        var accD = 0.0
+        it.foreach { r =>
+          if (!r.isNullAt(vIdx)) {
+            if (integral) accL += r.getAs[Number](vIdx).longValue()
+            else accD += r.getAs[Number](vIdx).doubleValue()
+          }
         }
+        Iterator((pid, accL, accD))
       }
-      Iterator((pid, accL, accD))
     }.collect()
 
     // exclusive scan on the driver — numPartitions additions
@@ -164,7 +151,8 @@ object PrefixSum {
     val outRows = rdd.mapPartitionsWithIndex { (pid, it) =>
       var accL = offL(pid)
       var accD = offD(pid)
-      it.map { r =>
+      if (vIdx < 0) it.map { r => accL += 1; Row.fromSeq(r.toSeq :+ accL) }
+      else it.map { r =>
         if (!r.isNullAt(vIdx)) {
           if (integral) accL += r.getAs[Number](vIdx).longValue()
           else accD += r.getAs[Number](vIdx).doubleValue()
@@ -173,7 +161,8 @@ object PrefixSum {
       }
     }
     val outType = if (integral) LongType else DoubleType
-    spark.createDataFrame(outRows,
+    val out = spark.createDataFrame(outRows,
       StructType(schema.fields :+ StructField(outCol, outType, nullable = false)))
+    (out, totals.map(_._2).sum)
   }
 }

@@ -8,23 +8,21 @@ import org.apache.spark.sql.graftbridge.SqlInternals
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Generic per-file statistics manifest — the skipping layer as a
-  * reusable sidecar for ANY layout.
-  *
-  * [[ZOrder]]'s `_zstats` hardcodes its two curve dimensions and one
-  * key bloom; every other sink in the library (Compact output,
-  * Publish versions, a plain time-clustered write) would want the
-  * same file-level pruning without adopting the curve. This is the
-  * schema-driven form — exactly what Delta/Iceberg store per data
-  * file in their logs: for each named column its per-file min / max /
-  * null count, plus an optional bloom over each named key column.
+  * reusable sidecar for ANY layout, and the ONE manifest format in
+  * the library: [[ZOrder]]'s curve layouts, Compact output, Publish
+  * versions and plain time-clustered writes all prune through it.
+  * This is the schema-driven form — exactly what Delta/Iceberg store
+  * per data file in their logs: for each named column its per-file
+  * min / max / null count, plus an optional bloom over each named key
+  * column.
   * Built in ONE read-back scan (groupBy `input_file_name`), stored as
   * a hidden `_fstats` table inside the table directory (the
   * underscore convention keeps plain readers blind to it; |files|
   * rows — the driver-sized manifest bound every table format accepts
   * by design).
   *
-  * Pruning contract (shared with ZOrder, q100's posture): skipping is
-  * an OPTIMIZATION, never semantics. A file is a candidate unless its
+  * Pruning contract (q100's posture): skipping is an OPTIMIZATION,
+  * never semantics. A file is a candidate unless its
   * stats PROVE no row can match; callers re-apply the predicate to
   * surviving rows, so a stats bug can only surface as a hash mismatch
   * against a full-scan oracle. Stat semantics under nulls follow SQL
@@ -41,6 +39,13 @@ object FileStats {
 
   def statsPath(path: String): String = path + "/_fstats"
 
+  /** False-positive rate of every key bloom. */
+  val BloomFpp = 0.01
+
+  /** K of every `kmv_<c>` sketch — [[ndvEstimate]] readers must pass
+    * the same K the manifest was built with. */
+  val KmvK = 64
+
   /** One skipping predicate, evaluated against the manifest. */
   sealed trait Pred { def col: String }
   /** Rows with `col` in [lo, hi] — prunes on min/max. */
@@ -55,7 +60,7 @@ object FileStats {
     * per file `n_rows` and, per entry of `cols`, `min_<c>` /
     * `max_<c>` / `nulls_<c>`; per entry of `keyCols`, `bloom_<k>`
     * over xxhash64(k) sized for the file's row share; per entry of
-    * `kmvCols`, `kmv_<c>` — the file's `kmvK` smallest DISTINCT
+    * `kmvCols`, `kmv_<c>` — the file's [[KmvK]] smallest DISTINCT
     * 60-bit content hashes of the column (a per-file KMV
     * distinct-count sketch, [[graft.similarity.Overlap]]'s hash and
     * estimator, so [[ndvEstimate]] is cross-engine re-derivable). */
@@ -63,9 +68,7 @@ object FileStats {
       cols: Seq[String],
       keyCols: Seq[String],
       kmvCols: Seq[String],
-      kmvK: Int,
-      expectedPerFile: Long,
-      fpp: Double): Seq[org.apache.spark.sql.Column] =
+      expectedPerFile: Long): Seq[org.apache.spark.sql.Column] =
     Seq(count(lit(1)).as("n_rows")) ++
       cols.flatMap { c =>
         Seq(min(c).as(s"min_$c"), max(c).as(s"max_$c"),
@@ -73,7 +76,7 @@ object FileStats {
       } ++
       keyCols.map { k =>
         call_function("graft_bloom_agg",
-          xxhash64(col(k)), lit(expectedPerFile), lit(fpp)).as(s"bloom_$k")
+          xxhash64(col(k)), lit(expectedPerFile), lit(BloomFpp)).as(s"bloom_$k")
       } ++
       kmvCols.map { c =>
         // bounded k-minimum-values aggregate: per-group state is O(k)
@@ -84,16 +87,14 @@ object FileStats {
         // sorted-ascending k-smallest array with a capped buffer)
         call_function("graft_kmv_agg",
           graft.similarity.Overlap.contentHash(col(c).cast("string")),
-          lit(kmvK)).as(s"kmv_$c")
+          lit(KmvK)).as(s"kmv_$c")
       }
 
   private def statsOf(
       data: org.apache.spark.sql.DataFrame,
       cols: Seq[String],
       keyCols: Seq[String],
-      kmvCols: Seq[String],
-      kmvK: Int,
-      fpp: Double): org.apache.spark.sql.DataFrame = {
+      kmvCols: Seq[String]): org.apache.spark.sql.DataFrame = {
     if (keyCols.nonEmpty || kmvCols.nonEmpty)
       graft.functions.GraftFunctions.register(data.sparkSession)
     // bloom sizing from the footers on the driver, no Spark job: the
@@ -102,8 +103,7 @@ object FileStats {
       data.sparkSession, data.inputFiles.toSeq, mergeSchema = false)
     val nRows = counts.sum
     val nFiles = math.max(1L, counts.count(_ > 0).toLong)
-    val aggs = statAggs(cols, keyCols, kmvCols, kmvK,
-      math.max(64L, 2L * nRows / nFiles), fpp)
+    val aggs = statAggs(cols, keyCols, kmvCols, math.max(64L, 2L * nRows / nFiles))
     data.groupBy(input_file_name().as("file")).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -112,12 +112,10 @@ object FileStats {
       path: String,
       cols: Seq[String],
       keyCols: Seq[String] = Nil,
-      fpp: Double = 0.01,
-      kmvCols: Seq[String] = Nil,
-      kmvK: Int = 64): Unit = {
+      kmvCols: Seq[String] = Nil): Unit = {
     require(cols.nonEmpty || keyCols.nonEmpty || kmvCols.nonEmpty,
       "nothing to collect stats for")
-    statsOf(spark.read.parquet(path), cols, keyCols, kmvCols, kmvK, fpp)
+    statsOf(spark.read.parquet(path), cols, keyCols, kmvCols)
       .write.mode("overwrite").parquet(statsPath(path))
   }
 
@@ -147,10 +145,8 @@ object FileStats {
       path: String,
       cols: Seq[String],
       keyCols: Seq[String] = Nil,
-      fpp: Double = 0.01,
       priorFrom: Option[String] = None,
-      kmvCols: Seq[String] = Nil,
-      kmvK: Int = 64): (Int, Int) = {
+      kmvCols: Seq[String] = Nil): (Int, Int) = {
     require(cols.nonEmpty || keyCols.nonEmpty || kmvCols.nonEmpty,
       "nothing to collect stats for")
     val statsDir = statsPath(path)
@@ -162,7 +158,7 @@ object FileStats {
     val onDisk = Compact.listDataFiles(path).map(_._1)
     val havePrior = java.nio.file.Files.exists(java.nio.file.Paths.get(priorDir))
     if (!havePrior) {
-      build(spark, path, cols, keyCols, fpp, kmvCols, kmvK)
+      build(spark, path, cols, keyCols, kmvCols)
       return (0, onDisk.size)
     }
     val base = "file:" + java.nio.file.Paths.get(path).toAbsolutePath + "/"
@@ -178,7 +174,7 @@ object FileStats {
       else {
         val freshStats = statsOf(
           spark.read.parquet(fresh.map(n => s"$path/$n"): _*),
-          cols, keyCols, kmvCols, kmvK, fpp)
+          cols, keyCols, kmvCols)
         carried.drop("__name").unionByName(freshStats)
       }
     // the refreshed manifest is DERIVED from the one it replaces —
@@ -197,7 +193,7 @@ object FileStats {
     * conjunction's candidate set (intersection over preds). Range and
     * null-count predicates evaluate as one filter over the manifest
     * DataFrame; key blooms probe driver-side with the catalyst-eval
-    * hash twin (ZOrder's mechanism). */
+    * hash twin ([[sparkHash]]). */
   def candidateFiles(spark: SparkSession, path: String, preds: Seq[Pred]): Seq[String] = {
     require(preds.nonEmpty, "no predicates — read the table directly")
     val stats = spark.read.parquet(statsPath(path))
@@ -217,10 +213,19 @@ object FileStats {
       keyPreds.zipWithIndex.forall { case (k, i) =>
         val bf = BloomFilter.readFrom(
           new ByteArrayInputStream(r.getAs[Array[Byte]](i + 1)))
-        k.keys.map(ZOrder.sparkHash).exists(bf.mightContainLong)
+        k.keys.map(sparkHash).exists(bf.mightContainLong)
       }
     }.map(_.getString(0)).toIndexedSeq
   }
+
+  // driver-side twin of `functions.xxhash64` on a single literal
+  // (same algorithm, same default seed 42), so a probe value hashes
+  // to exactly what the stored blooms were built from; key values
+  // must carry the key column's type (a Long for a bigint key)
+  private def sparkHash(v: Any): Long =
+    org.apache.spark.sql.catalyst.expressions.XxHash64(
+      Seq(org.apache.spark.sql.catalyst.expressions.Literal(v)), 42L)
+      .eval(null).asInstanceOf[Long]
 
   /** Read only the candidate files. Callers MUST still apply the
     * predicates — stats over-approximate. */

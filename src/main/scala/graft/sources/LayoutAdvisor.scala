@@ -117,8 +117,7 @@ object LayoutAdvisor {
       dims: Seq[(String, String)],
       workload: DataFrame,
       layouts: Seq[Seq[String]],
-      catDims: Seq[(String, String)] = Nil,
-      kmvK: Int = 64): DataFrame = {
+      catDims: Seq[(String, String)] = Nil): DataFrame = {
     require((dims.nonEmpty || catDims.nonEmpty) && layouts.nonEmpty)
     require(dims.map(_._1).intersect(catDims.map(_._1)).isEmpty,
       "a dim cannot be both ranged and categorical")
@@ -152,7 +151,7 @@ object LayoutAdvisor {
         // clustered equality predicate reads ~1/ndv of each file
         .withColumn("est",
           floor(col("n_rows").cast("double") /
-            FileStats.ndvEstimate(col("kmv"), kmvK)))
+            FileStats.ndvEstimate(col("kmv"), FileStats.KmvK)))
         .select(col("query_id"), col("dim"), col("est"))
     }
     val counts = (rangeCounts.toSeq ++ catCounts.toSeq)

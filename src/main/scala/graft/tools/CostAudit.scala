@@ -38,7 +38,8 @@ import graft.{CacheScope, GraftSession, SparkEntry}
   * Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.CostAudit [substr…]
   * — optional args keep only queries whose name contains a given
   * substring (fast single-query iteration while tuning a plan).
-  * Emits one JSON line per query plus a closing summary line.
+  * Emits one JSON line per query (with `wall_s`, the measured run's
+  * wall seconds — the single-query timer) plus a closing summary line.
   */
 object CostAudit {
 
@@ -82,15 +83,17 @@ object CostAudit {
 
     val rows = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       reset()
+      val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
         catch { case _: Throwable => false }
+      val wall = (System.nanoTime() - t0) / 1e9
       CacheScope.releaseAll(spark): Unit
       drain()
       val r = Map(
         "query" -> name, "ok" -> ok,
         "input_bytes" -> input.get, "shuffle_write_bytes" -> shuffleWrite.get,
         "shuffle_read_bytes" -> shuffleRead.get, "stages" -> stages.get)
-      println(s"""{"query":"$name","ok":$ok,"input_bytes":${input.get},""" +
+      println(f"""{"query":"$name","ok":$ok,"wall_s":$wall%.3f,"input_bytes":${input.get},""" +
         s""""shuffle_write_bytes":${shuffleWrite.get},""" +
         s""""shuffle_read_bytes":${shuffleRead.get},"stages":${stages.get}}""")
       r

@@ -276,7 +276,7 @@ class FileStatsSpec extends SparkSpec {
         concat(lit("c"), (col("id") % 3).cast("string")).as("cat"))
       data.repartition(4, col("id")).write.parquet(path)
       FileStats.build(spark, path, cols = Nil,
-        kmvCols = Seq("cat", "id"), kmvK = 64)
+        kmvCols = Seq("cat", "id"))
 
       val stats = spark.read.parquet(FileStats.statsPath(path))
       assert(stats.count() == 4)
@@ -302,7 +302,7 @@ class FileStatsSpec extends SparkSpec {
       val before = stats.select("file", "kmv_id").collect()
         .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
       FileStats.build(spark, path, cols = Nil,
-        kmvCols = Seq("cat", "id"), kmvK = 64)
+        kmvCols = Seq("cat", "id"))
       val after = spark.read.parquet(FileStats.statsPath(path))
         .select("file", "kmv_id").collect()
         .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
@@ -314,7 +314,7 @@ class FileStatsSpec extends SparkSpec {
           concat(lit("c"), (col("id") % 3).cast("string")).as("cat"))
         .coalesce(1).write.mode("append").parquet(path)
       val (carried, scanned) = FileStats.buildIncremental(spark, path,
-        cols = Nil, kmvCols = Seq("cat", "id"), kmvK = 64)
+        cols = Nil, kmvCols = Seq("cat", "id"))
       assert(carried == 4 && scanned == 1, s"carried=$carried scanned=$scanned")
       val refreshed = spark.read.parquet(FileStats.statsPath(path))
         .select("file", "kmv_id").collect()

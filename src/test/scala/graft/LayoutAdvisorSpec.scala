@@ -47,7 +47,7 @@ class LayoutAdvisorSpec extends SparkSpec {
     (0L until 2000L).map(i => (i, s"a${i % 2}", s"b${i % 40}"))
       .toDF("id", "a", "b")
       .repartition(2, col("id")).write.parquet(path)
-    FileStats.build(spark, path, cols = Nil, kmvCols = Seq("a", "b"), kmvK = 64)
+    FileStats.build(spark, path, cols = Nil, kmvCols = Seq("a", "b"))
 
     val workload = Seq((1L, "a"), (2L, "b"))
       .toDF("query_id", "dim")

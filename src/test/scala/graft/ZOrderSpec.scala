@@ -2,15 +2,21 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.ZOrder
+import graft.sources.{FileStats, ZOrder}
+import graft.sources.FileStats.{Between, KeyIn}
 import graft.tools.Scratch
 
-/** Z-order clustering + file-level min/max skipping (sources/ZOrder):
-  * hand-computed Morton bits, bucket edge cases, pruned-read
-  * correctness on testdata, and the claim the curve exists for —
-  * a 2-D box predicate skips files a 1-D linear layout cannot. */
+/** Z-order clustering (sources/ZOrder) + file-level min/max skipping
+  * through its FileStats manifest: hand-computed Morton bits, bucket
+  * edge cases, pruned-read correctness on testdata, and the claim the
+  * curve exists for — a 2-D box predicate skips files a 1-D linear
+  * layout cannot. */
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
+
+  // the (a, b) box predicate every layout test prunes by
+  private def box(loA: Long, hiA: Long, loB: Long, hiB: Long) =
+    Seq(Between("a", loA, hiA), Between("b", loB, hiB))
 
   test("zValue: hand-computed bit interleave") {
     // a=5 (101b) into odd positions -> 100010b = 34
@@ -105,27 +111,22 @@ class ZOrderSpec extends SparkSpec {
       // same stats machinery
       data.repartitionByRange(32, col("a")).sortWithinPartitions("a")
         .write.parquet(linPath)
-      spark.read.parquet(linPath)
-        .groupBy(input_file_name().as("file"))
-        .agg(count(lit(1)).as("n_rows"),
-          min("a").as("min_a"), max("a").as("max_a"),
-          min("b").as("min_b"), max("b").as("max_b"))
-        .write.parquet(ZOrder.statsPath(linPath))
+      FileStats.build(spark, linPath, cols = Seq("a", "b"))
 
-      val nFiles = spark.read.parquet(ZOrder.statsPath(zPath)).count()
+      val nFiles = spark.read.parquet(FileStats.statsPath(zPath)).count()
       assert(nFiles >= 16, s"expected ~32 files, got $nFiles")
 
       // a 10% × 10% box: the Z layout bounds BOTH dims per file
-      val zCand = ZOrder.candidateFiles(spark, zPath, 100L, 199L, 100L, 199L).count()
+      val zCand = FileStats.candidateFiles(spark, zPath, box(100L, 199L, 100L, 199L)).size
       assert(zCand <= nFiles / 2,
         s"z-order should skip most files for a small box: $zCand of $nFiles")
 
       // b-only predicate: every linear file spans b's full range, so
       // linear skips NOTHING; the curve still skips
-      val linFiles = spark.read.parquet(ZOrder.statsPath(linPath)).count()
-      val linCand = spark.read.parquet(ZOrder.statsPath(linPath))
+      val linFiles = spark.read.parquet(FileStats.statsPath(linPath)).count()
+      val linCand = spark.read.parquet(FileStats.statsPath(linPath))
         .where(col("min_b") <= 199L && col("max_b") >= 100L).count()
-      val zCandB = spark.read.parquet(ZOrder.statsPath(zPath))
+      val zCandB = spark.read.parquet(FileStats.statsPath(zPath))
         .where(col("min_b") <= 199L && col("max_b") >= 100L).count()
       assert(linCand == linFiles,
         "a 1-D layout should be unable to skip on the unsorted dimension")
@@ -133,13 +134,13 @@ class ZOrderSpec extends SparkSpec {
         s"the curve must beat linear on the second dimension: z=$zCandB lin=$linCand")
 
       // pruning never loses rows: pruned+filter ≡ full filter
-      val got = ZOrder.prunedRead(spark, zPath, 100L, 199L, 100L, 199L)
+      val got = FileStats.prunedRead(spark, zPath, box(100L, 199L, 100L, 199L))
         .where(col("a").between(100, 199) && col("b").between(100, 199))
       val want = data.where(col("a").between(100, 199) && col("b").between(100, 199))
       assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
 
       // a box fully outside the data range survives as an empty read
-      assert(ZOrder.prunedRead(spark, zPath, 5000L, 6000L, 0L, 10L).count() == 0)
+      assert(FileStats.prunedRead(spark, zPath, box(5000L, 6000L, 0L, 10L)).count() == 0)
     } finally {
       graft.sources.Sinks.deleteRecursively(java.nio.file.Paths.get(root))
     }
@@ -165,7 +166,7 @@ class ZOrderSpec extends SparkSpec {
         bits = 8, numFiles = 32)
 
       // quantile layout splits row MASS evenly by construction
-      val q = spark.read.parquet(ZOrder.statsPath(qPath))
+      val q = spark.read.parquet(FileStats.statsPath(qPath))
         .select("n_rows").collect().map(_.getLong(0))
       val qMean = n.toDouble / q.length
       assert(q.max <= (2.5 * qMean).toLong,
@@ -174,14 +175,14 @@ class ZOrderSpec extends SparkSpec {
       // a low-range box (exponents 0..9, ~1/3 of rows, b-unconstrained):
       // the affine layout mixes those rows into bucket 0 with the
       // bottom 22 exponents, the quantile layout isolates them
-      val affCand = ZOrder.candidateFiles(spark, affPath, 1L, 512L, 0L, 999L).count()
-      val qCand = ZOrder.candidateFiles(spark, qPath, 1L, 512L, 0L, 999L).count()
+      val affCand = FileStats.candidateFiles(spark, affPath, box(1L, 512L, 0L, 999L)).size
+      val qCand = FileStats.candidateFiles(spark, qPath, box(1L, 512L, 0L, 999L)).size
       assert(qCand * 2 <= affCand,
         s"rank buckets should at least halve the candidates: q=$qCand aff=$affCand")
 
       // pruning over the quantile layout stays lossless — stats are
       // real column min/max regardless of how buckets were drawn
-      val got = ZOrder.prunedRead(spark, qPath, 1L, 512L, 0L, 999L)
+      val got = FileStats.prunedRead(spark, qPath, box(1L, 512L, 0L, 999L))
         .where(col("a").between(1, 512) && col("b").between(0, 999))
       val want = data.where(col("a").between(1, 512) && col("b").between(0, 999))
       assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
@@ -193,31 +194,39 @@ class ZOrderSpec extends SparkSpec {
   test("a second write of the same input cuts the same files, whatever the RDD counter") {
     // Spark seeds a range partitioner's sample from the RDD id, so cuts
     // drawn from a sample move with how many RDDs the JVM made first;
-    // both writers must cut the same files on a second write
+    // every curve layout must cut the same files on a second write —
+    // the two 2-D writers and a q112-shaped 3-D affine zValueN curve
     val n = 21000
     val data = spark.range(n.toLong).select(
       col("id").as("k"),
       expr("shiftleft(cast(1 as bigint), cast(id % 30 as int))").as("a"),
       (pmod(col("id") * 69621L, lit(104857L)) % 1000).as("b"))
+    val data3 = data.withColumn("c", pmod(col("k") * 48271L, lit(104729L)) % 365)
     val root = Scratch.tempDir("graft_zdet_spec")
     def stats(path: String): Seq[String] =
-      spark.read.parquet(ZOrder.statsPath(path)).collect().map { r =>
+      spark.read.parquet(FileStats.statsPath(path)).collect().map { r =>
         // the file name carries a per-write uuid; its part number is the file
         val part = "part-\\d+".r.findFirstIn(r.getString(0)).get
         (part +: r.toSeq.tail).mkString(",")
       }.sorted.toSeq
-    def layouts(run: String): (Seq[String], Seq[String]) = {
+    def layouts(run: String): (Seq[String], Seq[String], Seq[String]) = {
       ZOrder.writeZOrdered(data, s"$root/$run/aff", "a", "b", bits = 8, numFiles = 32)
       ZOrder.writeZOrderedQuantile(data, s"$root/$run/q", "a", "b", tieBreaker = "k",
         bits = 8, numFiles = 32)
-      (stats(s"$root/$run/aff"), stats(s"$root/$run/q"))
+      val dims3 = Seq(col("a"), col("b"), col("c"))
+      ZOrder.writeCurve(data3, s"$root/$run/z3",
+        ZOrder.zValueN(ZOrder.affineBuckets(data3, dims3, 6), 6),
+        numFiles = 32, statCols = Seq("a", "b", "c"))
+      (stats(s"$root/$run/aff"), stats(s"$root/$run/q"), stats(s"$root/$run/z3"))
     }
-    val (aff1, q1) = layouts("first")
+    val (aff1, q1, z31) = layouts("first")
     (1 to 3).foreach(i => spark.sparkContext.parallelize(1 to i).count())
-    val (aff2, q2) = layouts("second")
+    val (aff2, q2, z32) = layouts("second")
     assert(aff1.length >= 16 && q1.length >= 16, s"files: aff=${aff1.length} q=${q1.length}")
     assert(aff2 == aff1, "the affine layout changed between two writes of the same input")
     assert(q2 == q1, "the quantile layout changed between two writes of the same input")
+    assert(z31.length >= 16, s"files: z3=${z31.length}")
+    assert(z32 == z31, "the 3-D curve layout changed between two writes of the same input")
   }
 
   test("q103: quantile-layout pruned read equals the full-scan filter") {
@@ -246,23 +255,23 @@ class ZOrderSpec extends SparkSpec {
     try {
       ZOrder.writeZOrdered(data, path, "a", "b", bits = 8, numFiles = 32,
         keyCol = Some("k"))
-      val nFiles = spark.read.parquet(ZOrder.statsPath(path)).count()
+      val nFiles = spark.read.parquet(FileStats.statsPath(path)).count()
 
       // present keys ALWAYS surface their row (no false negatives)
       val probes = Seq(0L, 1L, 9999L, 19999L, 777L)
-      val got = ZOrder.prunedReadByKeys(spark, path, probes)
+      val got = FileStats.prunedRead(spark, path, Seq(KeyIn("k", probes)))
         .where(col("k").isin(probes: _*))
         .select("k").collect().map(_.getLong(0)).toSet
       assert(got == probes.toSet, s"point lookup lost keys: ${probes.toSet -- got}")
 
       // a unique key lives in ONE file; fpp=0.01 over ~32 files adds
       // at most a few stragglers — far below reading everything
-      val cand = ZOrder.keyCandidateFiles(spark, path, Seq(777L)).size
+      val cand = FileStats.candidateFiles(spark, path, Seq(KeyIn("k", Seq(777L)))).size
       assert(cand <= math.max(4, nFiles / 4).toInt,
         s"bloom skipped too little: $cand of $nFiles files")
 
       // an absent key prunes to ~nothing and reads no matching rows
-      val absent = ZOrder.prunedReadByKeys(spark, path, Seq(987654321L))
+      val absent = FileStats.prunedRead(spark, path, Seq(KeyIn("k", Seq(987654321L))))
         .where(col("k") === 987654321L)
       assert(absent.count() == 0)
     } finally {
@@ -321,7 +330,7 @@ class ZOrderSpec extends SparkSpec {
       ZOrder.writeZOrdered(df, zPath, "a", "b", bits = 6, numFiles = 24)
 
       // losslessness on a box
-      val gotH = ZOrder.prunedRead(spark, hPath, 20L, 60L, 50L, 120L)
+      val gotH = FileStats.prunedRead(spark, hPath, box(20L, 60L, 50L, 120L))
         .where(col("a").between(20L, 60L) && col("b").between(50L, 120L))
       val want = df
         .where(col("a").between(20L, 60L) && col("b").between(50L, 120L))
@@ -337,8 +346,8 @@ class ZOrderSpec extends SparkSpec {
         (20L, 60L, 50L, 120L), (80L, 120L, 80L, 120L))
       val (hTot, zTot) = boxes.foldLeft((0L, 0L)) {
         case ((ht, zt), (la, ha, lb, hb)) =>
-          (ht + ZOrder.candidateFiles(spark, hPath, la, ha, lb, hb).count(),
-            zt + ZOrder.candidateFiles(spark, zPath, la, ha, lb, hb).count())
+          (ht + FileStats.candidateFiles(spark, hPath, box(la, ha, lb, hb)).size,
+            zt + FileStats.candidateFiles(spark, zPath, box(la, ha, lb, hb)).size)
       }
       assert(hTot <= zTot,
         s"hilbert candidates ($hTot) exceeded z-order ($zTot) on the panel")
