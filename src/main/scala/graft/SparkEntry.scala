@@ -2004,8 +2004,9 @@ object SparkEntry {
   /** q100: Z-order data skipping ([[graft.sources.ZOrder]]) — the
     * lakehouse stats-manifest pattern: events clustered along the
     * Morton curve of (user_id, value) into ~32 files with a per-file
-    * min/max [[graft.sources.FileStats]] manifest, then a 2-D box predicate answered by
-    * reading ONLY the files whose stats box intersects it. Pruning is
+    * min/max [[graft.sources.FileStats]] manifest, then a 2-D box
+    * predicate answered by reading ONLY the files whose stats box
+    * intersects it. Pruning is
     * an optimization, never semantics: the predicate re-applies to
     * the surviving rows, so the DuckDB oracle (same filter +
     * aggregate over the WHOLE table) hash-checks that skipping
@@ -2043,8 +2044,8 @@ object SparkEntry {
   }
 
   /** q101: bloom point-lookup over the same z-ordered layout
-    * ([[graft.sources.FileStats.prunedRead]] with a `KeyIn`) — the skipping case
-    * min/max boxes CANNOT serve: after the z-shuffle a sequential
+    * ([[graft.sources.FileStats.prunedRead]] with a `KeyIn`) — the
+    * skipping case min/max boxes CANNOT serve: after the z-shuffle a sequential
     * event_id is uncorrelated with the curve dims, so every file's
     * id range spans nearly the whole domain and box pruning keeps
     * everything; the per-file bloom column (graft_bloom_agg over
@@ -2414,8 +2415,8 @@ object SparkEntry {
     * Morton curve of (user bucket, value bucket, epoch-day bucket),
     * cut into files by the same exact-histogram writer as every other
     * curve layout, with a FileStats manifest over all three
-    * predicate columns. A 3-D box (user × value × week) then reads only files
-    * whose three stat ranges all intersect it; the same full-scan
+    * predicate columns. A 3-D box (user × value × week) then reads
+    * only files whose three stat ranges all intersect it; the same full-scan
     * oracle posture as q100/q106 hash-checks losslessness. At 100 TB
     * this is the dashboard-slice shape: every dimension selective,
     * no single dimension selective ENOUGH — the curve bounds all
