@@ -131,20 +131,16 @@ object Catalog {
       meta: Map[String, String]): Long = {
     val dir = catDir(root)
     val version = listSnapshots(root).maxOption.getOrElse(0L) + 1L
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      } + "\""
-    val metaJson = meta.toSeq.sorted
-      .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }.mkString("{", ",", "}")
+    // the Publish marker rule at the catalog grain: the live
+    // snapshot's replay marker carries unless `meta` sets it
+    val marker =
+      if (meta.contains(Publish.ReplayMarker)) None
+      else currentMetaValue(root, Publish.ReplayMarker).map(Publish.ReplayMarker -> _)
     val pinsJson = pins.sortBy(_._1)
-      .map { case (t, v) => s"${jsonStr(t)}:$v" }.mkString("{", ",", "}")
+      .map { case (t, v) => s"${Publish.jsonStr(t)}:$v" }.mkString("{", ",", "}")
     val manifest =
       s"""{"version":$version,"committed_at":${System.currentTimeMillis()},""" +
-        s""""tables":$pinsJson,"meta":$metaJson}"""
+        s""""tables":$pinsJson,"meta":${Publish.metaJson(meta ++ marker)}}"""
     // manifest is durable BEFORE the pointer references it; the flip
     // is the only observable step (Publish's exact protocol, through
     // the same CommitStore seam — object stores map it onto the
@@ -170,15 +166,15 @@ object Catalog {
       tableVersions(root, version)
     else Map.empty
 
-  /** Caller meta recorded in the live snapshot's manifest. */
+  /** Caller meta recorded in the live snapshot's manifest (Publish's
+    * reader: the `meta` object, parsed with Jackson). */
   def currentMetaValue(root: String, key: String): Option[String] =
-    currentVersion(root).flatMap { v =>
-      val m = manifestText(root, v)
-      // same minimal extraction Publish uses: flat JSON authored here
-      val pat = ("\"" + java.util.regex.Pattern.quote(key) + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      pat.findFirstMatchIn(m).map(g =>
-        g.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-    }
+    currentVersion(root).flatMap(v => Publish.metaValueIn(manifestText(root, v), key))
+
+  /** The last micro-batch id committed to `root`'s catalog, if any —
+    * [[Publish.lastBatch]] at the catalog grain. */
+  def lastBatch(root: String): Option[Long] =
+    currentMetaValue(root, Publish.ReplayMarker).map(_.toLong)
 
   /** The newest snapshot committed ≤ `asOfMs`, if any — resolution
     * over the snapshot manifests still on disk, so the answerable

@@ -135,9 +135,9 @@ object Compact {
     * model: maintenance proportional to FRAGMENTATION, not table
     * size. Files already at-or-above `minBytes` (default half the
     * target — the bin-packer can never beat that) are carried into
-    * the new version BYTE-IDENTICALLY (a local-FS copy here; an
-    * object store hard-links or server-side-copies the same
-    * manifest entries — the protocol doesn't change); only the
+    * the new version BYTE-IDENTICALLY ([[Publish.carry]]: hard links
+    * here; an object store re-references the same manifest entries
+    * — the protocol doesn't change); only the
     * fragments below the threshold are read, re-binned, and
     * rewritten. On a 100 TB table where daily increments fragment
     * 0.1% of the bytes, the full rewrite scans 1000× more than this
@@ -150,16 +150,12 @@ object Compact {
       spark: SparkSession,
       root: String,
       targetBytes: Long,
-      minBytes: Long = -1L,
-      extraMeta: Map[String, String] = Map.empty): (Long, Int, Int) = {
+      minBytes: Long = -1L): (Long, Int, Int) = {
     val live = Publish.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"nothing published at $root"))
     val liveDir = Paths.get(root).resolve(s"v=$live")
     val threshold = if (minBytes > 0) minBytes else math.max(1L, targetBytes / 2)
     val (keep, frags) = listDataFiles(liveDir.toString).partition(_._2 >= threshold)
-    // extraMeta lets a streaming caller carry ITS commit markers (the
-    // micro-batch id) through a maintenance version — compaction must
-    // never reset the sink's replay-refusal state
     // CAS on the version this compaction DERIVED from: racing a
     // writer must conflict (Txn.retry re-derives), never be lost
     // post-evolution the live version mixes widths: rewritten
@@ -170,20 +166,16 @@ object Compact {
     val manifestSchema = Publish.liveManifestSchema(root)
     val version = Publish.publishStagedIf(spark, root,
       expectedLive = Some(live),
-      meta = Publish.carryReplayMarker(root, extraMeta) ++ extraMeta ++ Map(
+      meta = Map(
       "compacted_from" -> live.toString,
       "carried" -> keep.size.toString,
       "rewritten" -> frags.size.toString),
       mergeSchema = true) { staging =>
-      Files.createDirectories(Paths.get(staging))
-      keep.foreach { case (name, _) =>
-        Files.copy(liveDir.resolve(name), Paths.get(staging).resolve(name)): Unit
-      }
       // deletion vectors compose (the Merge posture): carried files
-      // keep their sidecar slice (bytes identical → positions valid);
-      // rewritten fragments FOLD their deletions in — compacting a
-      // DV-carrying table must never resurrect deleted rows
-      Deletes.carrySidecarSlice(spark, liveDir.toString, staging, keep.map(_._1))
+      // keep their sidecar slice; rewritten fragments FOLD their
+      // deletions in — compacting a DV-carrying table must never
+      // resurrect deleted rows
+      Publish.carry(spark, liveDir.toString, staging, keep.map(_._1))
       if (frags.nonEmpty)
         compactedFiles(spark, liveDir.toString, frags, targetBytes, manifestSchema)
           .write.mode("append").parquet(staging)

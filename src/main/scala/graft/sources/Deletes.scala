@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * Positions come from the parquet scanner's own row numbering
   * (`_metadata.row_index`, stable physical order within an immutable
   * file) keyed by file NAME — valid exactly as long as the file's
-  * bytes, which is what Publish/Compact's carry-by-copy contract
-  * preserves. The sidecar is parquet like everything else: (file,
-  * pos) rows, hidden from plain readers by the underscore convention.
+  * bytes, which [[Publish.carry]]'s hard links keep identical. The
+  * sidecar is parquet like everything else: (file, pos) rows, hidden
+  * from plain readers by the underscore convention.
   *
   * Read-time application is file-local and pruned: files with no
   * recorded deletes stream through UNTOUCHED (no join, no metadata
@@ -152,32 +152,10 @@ object Deletes {
       .unionByName(touchedDf)
   }
 
-  /** Carry `fromDir`'s deletion-vector rows for the named CARRIED
-    * files into `stagingDir`'s sidecar — the companion every
-    * carry-by-copy version derivation must call (Txn.append, the
-    * hard-link append sink, incremental compaction's kept files,
-    * MERGE's carried set): a carried file's bytes are identical, so
-    * its positions stay valid, and DROPPING the sidecar would
-    * silently resurrect deleted rows in the new version — deletes
-    * are semantics, and this is the bug the S26 change-feed spec
-    * caught (a DV delete followed by an append re-emitted the
-    * deleted key as an insert). No-op when `fromDir` has no sidecar
-    * or no carried file has entries. */
-  def carrySidecarSlice(
-      spark: SparkSession, fromDir: String, stagingDir: String,
-      carriedNames: Seq[String]): Unit = {
-    val dp = deletesPath(fromDir)
-    if (!Files.exists(Paths.get(dp)) || carriedNames.isEmpty) return
-    val slice = spark.read.parquet(dp)
-      .where(col("file").isin(carriedNames: _*))
-    if (slice.limit(1).count() > 0)
-      slice.write.parquet(deletesPath(stagingDir))
-  }
-
   /** Delete from the LIVE Publish version of `root` into a NEW
-    * version: data files carried byte-identically (the Compact carry
-    * contract — on an object store these are manifest references, not
-    * copies), prior sidecar carried, new positions merged — so the
+    * version: data files and their prior sidecar carried
+    * ([[Publish.carry]] — on an object store these are manifest
+    * references, not copies), new positions merged — so the
     * delete commits through the same atomic pointer flip as every
     * other change, old versions keep their own delete state for
     * time travel, and a crash mid-delete is invisible. Returns the
@@ -211,7 +189,7 @@ object Deletes {
       extraMeta: Map[String, String] = Map.empty): Long = {
     val live = Publish.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"nothing published at $root"))
-    val liveDir = Paths.get(root).resolve(s"v=$live")
+    val liveDir = Paths.get(root).resolve(s"v=$live").toString
     // CAS on the derived-from version (the Merge/Compact posture)
     // mergeSchema: every file carries byte-identically, so a
     // post-evolution mixed-width version must record the UNION schema
@@ -220,18 +198,9 @@ object Deletes {
     // so predicates on evolved columns resolve
     val version = Publish.publishStagedIf(spark, root,
       expectedLive = Some(live),
-      meta = Publish.carryReplayMarker(root, extraMeta) ++ extraMeta ++ Map(
-      "deleted_from" -> live.toString),
+      meta = extraMeta ++ Map("deleted_from" -> live.toString),
       mergeSchema = true) { staging =>
-      val stagingPath = Paths.get(staging)
-      Files.createDirectories(stagingPath)
-      Compact.listDataFiles(liveDir.toString).foreach { case (name, _) =>
-        Files.copy(liveDir.resolve(name), stagingPath.resolve(name)): Unit
-      }
-      val priorDels = deletesPath(liveDir.toString)
-      if (Files.exists(Paths.get(priorDels)))
-        spark.read.parquet(priorDels)
-          .write.parquet(deletesPath(staging))
+      Publish.carry(spark, liveDir, staging, Compact.listDataFiles(liveDir).map(_._1))
       deleteWhere(spark, staging, doomed, Publish.liveManifestSchema(root)): Unit
     }
     version
@@ -257,8 +226,7 @@ object Deletes {
     * join cost outweighs a rewrite of the touched subset — cost ∝
     * files-with-deletes, never table size. Returns (newVersion,
     * carried, rewritten). */
-  def materialize(spark: SparkSession, root: String,
-      extraMeta: Map[String, String] = Map.empty): (Long, Int, Int) = {
+  def materialize(spark: SparkSession, root: String): (Long, Int, Int) = {
     val live = Publish.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"nothing published at $root"))
     val liveDir = Paths.get(root).resolve(s"v=$live")
@@ -279,16 +247,12 @@ object Deletes {
     val manifestSchema = Publish.liveManifestSchema(root)
     val version = Publish.publishStagedIf(spark, root,
       expectedLive = Some(live),
-      meta = Publish.carryReplayMarker(root, extraMeta) ++ extraMeta ++ Map(
+      meta = Map(
       "materialized_from" -> live.toString,
       "carried" -> carried.size.toString,
       "rewritten" -> touched.size.toString),
       mergeSchema = true) { staging =>
-      val stagingPath = Paths.get(staging)
-      Files.createDirectories(stagingPath)
-      carried.foreach { name =>
-        Files.copy(liveDir.resolve(name), stagingPath.resolve(name)): Unit
-      }
+      Publish.carry(spark, liveDir.toString, staging, carried)
       if (touched.nonEmpty) {
         val full = manifestSchema.fold(spark.read)(spark.read.schema)
           .parquet(touched.map(n => s"$liveDir/$n"): _*)

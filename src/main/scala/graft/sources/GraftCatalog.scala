@@ -311,11 +311,11 @@ class GraftCatalog extends TableCatalog
     loadTable(ident)
   }
 
-  /** `ALTER TABLE … ADD COLUMNS` as a METADATA-ONLY commit: the new
-    * version carries every live data file (and its deletion-vector
-    * slice) byte-identically plus one empty wide-schema file, so the
-    * mergeSchema validation read records the WIDENED manifest schema
-    * — existing rows read the new columns as NULL through the
+  /** `ALTER TABLE … ADD COLUMNS` as a METADATA-ONLY commit: a
+    * [[Txn.append]] of one empty wide-schema file, so the new version
+    * carries every live data file (and its deletion-vector slice)
+    * byte-identically next to it, and the mergeSchema validation
+    * read records the WIDENED manifest schema — existing rows read the new columns as NULL through the
     * [[Publish.readConformed]] contract, and not a data byte moves.
     * Everything else (drop/rename/retype) is refused: those change
     * what carried bytes MEAN, which this layout expresses as a
@@ -334,31 +334,17 @@ class GraftCatalog extends TableCatalog
           "needs a rewrite — express it as MERGE/UPDATE through the commit protocol")
     }
     val spark = SparkSession.active
-    Txn.retry(tr) { live =>
-      val cur = Publish.manifestSchemaDdl(tr, live.getOrElse(noSuch(ident)))
-        .map(StructType.fromDDL).getOrElse(Publish.read(spark, tr).schema)
-      adds.foreach { a =>
-        if (cur.fieldNames.exists(_.equalsIgnoreCase(a.fieldNames()(0))))
-          throw new IllegalArgumentException(
-            s"column ${a.fieldNames()(0)} already exists")
-      }
-      val wide = StructType(cur.fields ++ adds.map(a =>
-        org.apache.spark.sql.types.StructField(
-          a.fieldNames()(0), a.dataType(), nullable = true)))
-      Publish.publishStagedIf(spark, tr, expectedLive = live,
-        meta = Publish.carryReplayMarker(tr, Map.empty),
-        mergeSchema = true) { staging =>
-        val stagingPath = Paths.get(staging)
-        Files.createDirectories(stagingPath)
-        val liveDir = Paths.get(tr).resolve(s"v=${live.get}")
-        val names = Compact.listDataFiles(liveDir.toString).map(_._1)
-        names.foreach(n => Files.copy(liveDir.resolve(n), stagingPath.resolve(n)): Unit)
-        Deletes.carrySidecarSlice(spark, liveDir.toString, staging, names)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), wide)
-          .repartition(1).write.mode("append").parquet(staging)
-      }
-    }: Unit
+    val cur = Publish.liveManifestSchema(tr).getOrElse(Publish.read(spark, tr).schema)
+    adds.foreach { a =>
+      if (cur.fieldNames.exists(_.equalsIgnoreCase(a.fieldNames()(0))))
+        throw new IllegalArgumentException(
+          s"column ${a.fieldNames()(0)} already exists")
+    }
+    val wide = StructType(cur.fields ++ adds.map(a =>
+      org.apache.spark.sql.types.StructField(
+        a.fieldNames()(0), a.dataType(), nullable = true)))
+    Txn.append(spark, tr, spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), wide).repartition(1)): Unit
     loadTable(ident)
   }
 
@@ -832,11 +818,7 @@ object GraftCatalog {
               override def insert(data: org.apache.spark.sql.DataFrame,
                   legacyOverwrite: Boolean): Unit = {
                 if (overwrite || legacyOverwrite)
-                  // carry the streaming replay marker (Txn.append does
-                  // the same): a SQL overwrite between micro-batches
-                  // must not reset a sink's replay refusal
-                  Publish.publish(data, tableRoot,
-                    meta = Publish.carryReplayMarker(tableRoot, Map.empty)): Unit
+                  Publish.publish(data, tableRoot): Unit
                 else
                   Txn.append(data.sparkSession, tableRoot, data): Unit
               }

@@ -219,7 +219,7 @@ object Merge {
     // Txn.retry to rebase by re-running the merge), never be lost
     val version = Publish.publishStagedIf(spark, root,
       expectedLive = Some(live),
-      meta = Publish.carryReplayMarker(root, extraMeta) ++ extraMeta ++ Map(
+      meta = extraMeta ++ Map(
       "merged_from" -> live.toString,
       "carried" -> carried.size.toString,
       "rewritten" -> touched.size.toString),
@@ -228,14 +228,9 @@ object Merge {
       // this merge carries again — so the manifest must always record
       // the UNION schema, never a sampled footer's
       mergeSchema = true) { staging =>
-      val stagingPath = Paths.get(staging)
-      Files.createDirectories(stagingPath)
-      carried.foreach { name =>
-        Files.copy(Paths.get(liveDir).resolve(name), stagingPath.resolve(name)): Unit
-      }
       // carried files keep their deletion-vector slice; rewritten
       // files fold theirs in below (readFiles applies it)
-      Deletes.carrySidecarSlice(spark, liveDir, staging, carried)
+      Publish.carry(spark, liveDir, staging, carried)
 
       if (touched.nonEmpty) {
         val tgt = Deletes.readFiles(spark, liveDir, touched, Some(targetSchema))

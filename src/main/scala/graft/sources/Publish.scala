@@ -80,8 +80,8 @@ object Publish {
     * @param meta caller key/values recorded in the manifest — rides
     *   the same atomic commit as the data, which is what lets a
     *   streaming sink make "was this batch already published?"
-    *   crash-safe ([[graft.streaming.PublishStream]] stores the
-    *   micro-batch id here) */
+    *   crash-safe (a sink stores its micro-batch id under
+    *   [[ReplayMarker]]; every other commit carries the live one) */
   def publish(df: DataFrame, root: String, meta: Map[String, String] = Map.empty): Long =
     publishStaged(df.sparkSession, root, meta) { staging =>
       df.write.parquet(staging)
@@ -90,7 +90,7 @@ object Publish {
   /** The staging→validate→promote protocol with a CALLER-POPULATED
     * staging directory — the lower-level form [[publish]] rides, and
     * what lets a version be assembled from mixed sources (e.g.
-    * [[Compact.compactPublishedIncremental]] byte-copies well-sized
+    * [[Compact.compactPublishedIncremental]] [[carry]]s well-sized
     * files and rewrites only fragments into the same version). The
     * caller's `stage(dir)` must leave ONLY the version's parquet data
     * files directly under `dir` (hidden `_`/`.` entries aside);
@@ -243,14 +243,17 @@ object Publish {
     val rows = counts.sum
     val files = visible.map(p => (p.getFileName.toString, Files.size(p)))
       .filter(_._1.endsWith(".parquet"))
-    val metaJson = meta.toSeq.sorted
-      .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }.mkString("{", ",", "}")
+    val root = rootPath.toString
+    val marker =
+      if (meta.contains(ReplayMarker)) None
+      else currentVersion(root).flatMap(metaValueAt(root, _, ReplayMarker))
+        .map(ReplayMarker -> _)
     val manifest =
       s"""{"version":$version,"rows":$rows,""" +
         s""""committed_at":${System.currentTimeMillis()},""" +
         s""""schema":${jsonStr(schema.toDDL)},""" +
         s""""total_bytes":${files.map(_._2).sum},""" +
-        s""""meta":$metaJson,""" +
+        s""""meta":${metaJson(meta ++ marker)},""" +
         s""""files":[${files.map { case (n, s) => s"""{"name":${jsonStr(n)},"bytes":$s}""" }.mkString(",")}]}"""
     Files.write(staging.resolve(Manifest), manifest.getBytes(StandardCharsets.UTF_8))
 
@@ -311,7 +314,7 @@ object Publish {
     else metaValueIn(new String(Files.readAllBytes(p), StandardCharsets.UTF_8), key)
   }
 
-  private def metaValueIn(manifest: String, key: String): Option[String] = {
+  private[sources] def metaValueIn(manifest: String, key: String): Option[String] = {
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(manifest)
     Option(node.get("meta")).flatMap(o => Option(o.get(key))).map(_.asText)
   }
@@ -334,8 +337,9 @@ object Publish {
   }
 
   /** The LIVE manifest's schema as a StructType — the width authority
-    * every derived-version transform (Compact, Txn.append, Deletes,
-    * Merge) must resolve BEFORE reading fragments: after a
+    * every transform that [[carry]]s files into a derived version
+    * (Compact, Txn.append, Deletes, Merge, Updates) must resolve
+    * BEFORE reading fragments: after a
     * schema-evolving merge the live version legitimately mixes file
     * widths, and a footer-sampled read would silently drop the
     * evolved columns from the rewrite. */
@@ -421,24 +425,46 @@ object Publish {
     victims
   }
 
-  /** The manifest key streaming sinks commit their micro-batch id
-    * under (AppendStream/CdcApplyStream/DeleteStream/PublishStream's
-    * replay refusal). Public so MAINTENANCE commits can preserve it. */
+  /** The manifest key a streaming sink commits its micro-batch id
+    * under — the replay refusal of every sink in
+    * [[graft.streaming]], read back through [[lastBatch]]. The commit
+    * itself keeps it: every version copies the live manifest's
+    * marker unless its own `meta` sets the key, so a derived version
+    * (compaction, MERGE, delete, fold, an external maintenance job
+    * that knows nothing about the stream) can never reset a sink's
+    * exactly-once refusal. Only the marker carries — operational meta
+    * ("carried", audit counts) describes its own version. */
   val ReplayMarker = "graft.batchId"
 
-  /** The replay marker to CARRY onto a derived version: the live
-    * manifest's, unless the caller's `extraMeta` overrides it. Every
-    * derived-version transform (Compact, Deletes, Merge) folds this
-    * in — without it, an EXTERNAL maintenance job (a nightly
-    * compactor that knows nothing about the stream writing the table)
-    * would publish a marker-less version and silently RESET a
-    * streaming sink's exactly-once refusal: the next replayed batch
-    * would re-commit. Only the marker is carried — operational meta
-    * ("carried", audit counts) describes its own version and must
-    * never leak forward. */
-  def carryReplayMarker(root: String, extraMeta: Map[String, String]): Map[String, String] =
-    if (extraMeta.contains(ReplayMarker)) Map.empty
-    else currentMetaValue(root, ReplayMarker).map(ReplayMarker -> _).toMap
+  /** The last micro-batch id committed at `root`, if any. */
+  def lastBatch(root: String): Option[Long] =
+    currentMetaValue(root, ReplayMarker).map(_.toLong)
+
+  /** Carry the named data files of the version directory `fromDir`
+    * into `staging`, with their deletion-vector slice — the one way a
+    * derived version reuses live data. Each file is HARD-LINKED: zero
+    * bytes move and the bytes are identical by construction (the
+    * local-FS stand-in for a manifest re-referencing the same
+    * objects), so the DV positions, keyed by file name and row index,
+    * stay valid. Sound because no version is ever written in place
+    * and vacuum only unlinks. The slice is the sidecar rows of the
+    * carried files; dropping it would silently resurrect deleted rows
+    * in the new version (deletes are semantics — the S26 change-feed
+    * spec caught a DV delete followed by an append re-emitting the
+    * deleted key as an insert). */
+  private[graft] def carry(spark: SparkSession, fromDir: String, staging: String,
+      names: Seq[String]): Unit = {
+    val to = Paths.get(staging)
+    Files.createDirectories(to)
+    names.foreach(n => Files.createLink(to.resolve(n), Paths.get(fromDir).resolve(n)): Unit)
+    val dp = Deletes.deletesPath(fromDir)
+    if (names.nonEmpty && Files.exists(Paths.get(dp))) {
+      val slice = spark.read.parquet(dp)
+        .where(org.apache.spark.sql.functions.col("file").isin(names: _*))
+      if (slice.limit(1).count() > 0)
+        slice.write.parquet(Deletes.deletesPath(staging))
+    }
+  }
 
   /** Drop every version except the live one and the newest `keep`
     * others. Returns the reaped version numbers. Old versions are what
@@ -483,7 +509,7 @@ object Publish {
     * `._COPYING_` copies). The stage contract is flat, so a visible
     * subdirectory fails the commit: a reader would take a `k=v` one
     * as a partition and skip any other, while the manifest's file list
-    * and every carry (AppendStream, Compact) see only the top level.
+    * and [[carry]] see only the top level.
     * A stage with no file to read fails too (no schema to record). */
   private def readerVisibleFiles(dir: Path): Seq[Path] = {
     val s = Files.list(dir)
@@ -506,7 +532,7 @@ object Publish {
   // full JSON string escape incl. control chars (Verify.oracleJson's
   // escaper): a newline or tab in a caller meta value must not
   // produce a manifest json.load rejects
-  private def jsonStr(s: String): String =
+  private[sources] def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -516,4 +542,11 @@ object Publish {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+
+  /** A manifest's `meta` object: sorted keys, [[jsonStr]]-escaped —
+    * the one encoding Publish and [[Catalog]] manifests share, read
+    * back by [[metaValueIn]]. */
+  private[sources] def metaJson(meta: Map[String, String]): String =
+    meta.toSeq.sorted
+      .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }.mkString("{", ",", "}")
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -56,38 +56,26 @@ object Txn {
     -1L // unreachable
   }
 
-  /** Concurrency-safe APPEND: carry the base version's data files
-    * byte-identically, add `rows` as fresh files, commit iff the base
-    * is still live (CAS), retry by re-deriving from the new live.
-    * The building block the q139 race runs on; also the batch face of
-    * [[graft.streaming.AppendStream]]'s hard-link append, made
-    * multi-writer-safe. */
+  /** Concurrency-safe APPEND: [[Publish.carry]] the base version's
+    * data files (hard links, with their deletion-vector slice), add
+    * `rows` as fresh files, commit iff the base is still live (CAS),
+    * retry by re-deriving from the new live. The building block the
+    * q139 race runs on, and the commit of
+    * [[graft.streaming.AppendStream]] (its micro-batch id rides
+    * `meta`; any other append keeps the live replay marker through
+    * the commit). mergeSchema: appended rows can sit next to carried
+    * files of a different width (post-evolution narrow carries, or a
+    * narrower insert); the manifest must record the union, never a
+    * sampled footer's width. */
   def append(spark: SparkSession, root: String, rows: DataFrame,
       meta: Map[String, String] = Map.empty,
       maxAttempts: Int = 5): Long =
     retry(root, maxAttempts) { live =>
-      // carry the live manifest's replay marker (unless the caller's
-      // meta overrides it): an API/SQL append between streaming
-      // micro-batches must not publish a marker-less version and
-      // reset the sinks' replay refusal — a replayed batch would
-      // re-commit. mergeSchema: appended rows can sit next to carried
-      // files of a different width (post-evolution narrow carries, or
-      // a narrower insert); the manifest must record the union, never
-      // a sampled footer's width.
       Publish.publishStagedIf(spark, root, expectedLive = live,
-        meta = Publish.carryReplayMarker(root, meta) ++ meta,
-        mergeSchema = true) { staging =>
-        val stagingPath = Paths.get(staging)
-        Files.createDirectories(stagingPath)
+        meta = meta, mergeSchema = true) { staging =>
         live.foreach { v =>
-          val liveDir = Paths.get(root).resolve(s"v=$v")
-          val names = Compact.listDataFiles(liveDir.toString).map(_._1)
-          names.foreach { name =>
-            Files.copy(liveDir.resolve(name), stagingPath.resolve(name)): Unit
-          }
-          // carried bytes keep their deletion-vector slice — dropping
-          // it would resurrect deleted rows in the appended version
-          Deletes.carrySidecarSlice(spark, liveDir.toString, staging, names)
+          val liveDir = Paths.get(root).resolve(s"v=$v").toString
+          Publish.carry(spark, liveDir, staging, Compact.listDataFiles(liveDir).map(_._1))
         }
         rows.write.mode("append").parquet(staging)
       }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,8 +45,7 @@ object Updates {
       spark: SparkSession,
       root: String,
       condition: Column,
-      set: Map[String, Column],
-      extraMeta: Map[String, String] = Map.empty): UpdateStats = {
+      set: Map[String, Column]): UpdateStats = {
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     val live = Publish.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"nothing published at $root"))
@@ -73,17 +72,12 @@ object Updates {
     var updated = 0L
     val version = Publish.publishStagedIf(spark, root,
       expectedLive = Some(live),
-      meta = Publish.carryReplayMarker(root, extraMeta) ++ extraMeta ++ Map(
+      meta = Map(
         "updated_from" -> live.toString,
         "carried" -> carried.size.toString,
         "rewritten" -> touched.size.toString),
       mergeSchema = true) { staging =>
-      val stagingPath = Paths.get(staging)
-      Files.createDirectories(stagingPath)
-      carried.foreach { name =>
-        Files.copy(Paths.get(liveDir).resolve(name), stagingPath.resolve(name)): Unit
-      }
-      Deletes.carrySidecarSlice(spark, liveDir, staging, carried)
+      Publish.carry(spark, liveDir, staging, carried)
       if (touched.nonEmpty) {
         // rewritten files fold their deletion vector in (readFiles
         // applies it) — a DV-hidden row is not live, so it neither
@@ -118,8 +112,7 @@ object Updates {
   def deleteRewritePublished(
       spark: SparkSession,
       root: String,
-      condition: Column,
-      extraMeta: Map[String, String] = Map.empty): (Long, Long, Int, Int) = {
+      condition: Column): (Long, Long, Int, Int) = {
     val live = Publish.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"nothing published at $root"))
     val liveDir = Paths.get(root).resolve(s"v=$live").toString
@@ -135,17 +128,12 @@ object Updates {
     var deleted = 0L
     val version = Publish.publishStagedIf(spark, root,
       expectedLive = Some(live),
-      meta = Publish.carryReplayMarker(root, extraMeta) ++ extraMeta ++ Map(
+      meta = Map(
         "deleted_from" -> live.toString,
         "carried" -> carried.size.toString,
         "rewritten" -> touched.size.toString),
       mergeSchema = true) { staging =>
-      val stagingPath = Paths.get(staging)
-      Files.createDirectories(stagingPath)
-      carried.foreach { name =>
-        Files.copy(Paths.get(liveDir).resolve(name), stagingPath.resolve(name)): Unit
-      }
-      Deletes.carrySidecarSlice(spark, liveDir, staging, carried)
+      Publish.carry(spark, liveDir, staging, carried)
       if (touched.nonEmpty) {
         val tgt = Deletes.readFiles(spark, liveDir, touched, schema)
         deleted = tgt.where(condition).count()

@@ -138,10 +138,8 @@ object Wap {
     val expectMeta = counts.map { case (n, c) => s"expect.$n" -> c.toString }
     val version = Txn.retry(root) { live =>
       Publish.publishStagedIf(spark, root, expectedLive = live,
-        meta = Publish.carryReplayMarker(root, meta) ++ meta ++ expectMeta,
+        meta = meta ++ expectMeta,
         mergeSchema = true) { staging =>
-        val stagingPath = java.nio.file.Paths.get(staging)
-        java.nio.file.Files.createDirectories(stagingPath)
         if (live.isEmpty)
           // first version: guarantee a schema-bearing data footer even
           // when EVERY row of the first batch drop-quarantines (rejects
@@ -153,13 +151,8 @@ object Wap {
             new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
             .repartition(1).write.mode("append").parquet(staging)
         live.foreach { v =>
-          val liveDir = java.nio.file.Paths.get(root).resolve(s"v=$v")
-          val carried = Compact.listDataFiles(liveDir.toString).map(_._1)
-          carried.foreach { n =>
-            java.nio.file.Files.copy(
-              liveDir.resolve(n), stagingPath.resolve(n)): Unit
-          }
-          Deletes.carrySidecarSlice(spark, liveDir.toString, staging, carried)
+          val liveDir = java.nio.file.Paths.get(root).resolve(s"v=$v").toString
+          Publish.carry(spark, liveDir, staging, Compact.listDataFiles(liveDir).map(_._1))
         }
         df.where(cleanPred).write.mode("append").parquet(staging)
         if (dropExp.nonEmpty) {

@@ -41,12 +41,6 @@ import graft.sources.Publish
   */
 object AggTableSink {
 
-  private val BatchKey = "graft.batchId"
-
-  /** The last micro-batch id committed at `root`, if any. */
-  def lastBatch(root: String): Option[Long] =
-    Publish.currentMetaValue(root, BatchKey).map(_.toLong)
-
   /** Group-level partials for one batch of facts. */
   def partials(
       facts: DataFrame,
@@ -68,7 +62,7 @@ object AggTableSink {
       groupCols: Seq[String],
       sumCols: Seq[String],
       countCol: String): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) false
+    if (Publish.lastBatch(root).exists(_ >= batchId)) false
     else {
       val delta = partials(batch, groupCols, sumCols, countCol)
       val merged =
@@ -83,7 +77,7 @@ object AggTableSink {
           summed.select(summed.columns.map(c =>
             col(c).cast(types.getOrElse(c, summed.schema(c).dataType)).as(c)): _*)
         }
-      Publish.publish(merged, root, Map(BatchKey -> batchId.toString))
+      Publish.publish(merged, root, Map(Publish.ReplayMarker -> batchId.toString))
       true
     }
   }

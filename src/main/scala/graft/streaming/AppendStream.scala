@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.{Compact, Publish}
+import graft.sources.{Compact, Publish, Txn}
 
 /** S20: append-only versioned ingest with the full table-service loop
   * — the streaming composition of the r8 storage-maintenance family.
@@ -15,10 +15,9 @@ import graft.sources.{Compact, Publish}
   * tables, wrong for an append-only fact table where each batch is a
   * sliver of the total. This sink makes append O(batch), the way a
   * real table format commits: a new version CARRIES the live
-  * version's data files as hard links (zero bytes moved, byte
-  * identity by construction — the local-FS stand-in for a manifest
-  * re-referencing the same objects) and writes ONLY the batch's rows
-  * as new files. Readers still resolve one atomic, footer-validated
+  * version's data files as hard links ([[graft.sources.Txn.append]]
+  * over [[Publish.carry]]) and writes ONLY the batch's rows as new
+  * files. Readers still resolve one atomic, footer-validated
   * snapshot per version. Scale note: the bytes moved are O(batch),
   * but validation still opens one footer per file of the version
   * (carried files included) on the driver, so commit cost grows with
@@ -30,9 +29,9 @@ import graft.sources.{Compact, Publish}
   * cadence: every `compactEvery` batches the sink runs
   * [[Compact.compactPublishedIncremental]] (well-sized files carried
   * byte-identically, fragments re-binned) and then vacuums versions
-  * past the retention window. Compaction passes the sink's batch-id
-  * marker through `extraMeta` — a maintenance version must never
-  * reset replay refusal.
+  * past the retention window. The compaction commit keeps the sink's
+  * batch-id marker like every commit does ([[Publish.ReplayMarker]]),
+  * so maintenance never resets replay refusal.
   *
   * Exactly-once is S18's commit-level argument: append is not
   * idempotent, so the micro-batch id rides the manifest inside the
@@ -42,12 +41,6 @@ import graft.sources.{Compact, Publish}
   * flip makes the replay a no-op.
   */
 object AppendStream {
-
-  private val BatchKey = "graft.batchId"
-
-  /** The last micro-batch id committed at `root`, if any. */
-  def lastBatch(root: String): Option[Long] =
-    Publish.currentMetaValue(root, BatchKey).map(_.toLong)
 
   /** Append one micro-batch as a new version (hard-linked carry +
     * batch files), then run the maintenance loop on cadence. Returns
@@ -76,39 +69,17 @@ object AppendStream {
       statsCols: Seq[String] = Nil,
       statsKeyCols: Seq[String] = Nil,
       extraMeta: Map[String, String] = Map.empty): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) false
+    if (Publish.lastBatch(root).exists(_ >= batchId)) false
     else {
       val spark = batch.sparkSession
-      // CAS + rebase (graft.sources.Txn): the carry list is derived
-      // from the live version, so a maintenance job (or any other
-      // writer) committing between derivation and flip must force a
+      // CAS + rebase: a maintenance job (or any other writer)
+      // committing between the carry and the flip forces a
       // re-derivation against ITS result — never lose the batch, and
       // never resurrect the pre-maintenance file set
-      graft.sources.Txn.retry(root) { live =>
-        // mergeSchema: a batch can legitimately differ in width from
-        // the carried files (a post-evolution table, or a feed that
-        // grew a column) — the new manifest must record the union,
-        // never a sampled footer's width
-        Publish.publishStagedIf(spark, root, expectedLive = live,
-          meta = extraMeta ++ Map(BatchKey -> batchId.toString),
-          mergeSchema = true) { staging =>
-          Files.createDirectories(Paths.get(staging)): Unit
-          live.foreach { v =>
-            val vDir = Paths.get(root).resolve(s"v=$v")
-            val names = Compact.listDataFiles(vDir.toString).map(_._1)
-            names.foreach { name =>
-              Files.createLink(Paths.get(staging).resolve(name), vDir.resolve(name)): Unit
-            }
-            // linked bytes keep their deletion-vector slice
-            graft.sources.Deletes.carrySidecarSlice(
-              batch.sparkSession, vDir.toString, staging, names)
-          }
-          batch.write.mode("append").parquet(staging)
-        }
-      }: Unit
+      Txn.append(spark, root, batch,
+        meta = extraMeta ++ Map(Publish.ReplayMarker -> batchId.toString)): Unit
       if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-        Compact.compactPublishedIncremental(spark, root, targetBytes,
-          extraMeta = Map(BatchKey -> batchId.toString)): Unit
+        Compact.compactPublishedIncremental(spark, root, targetBytes): Unit
         if (statsCols.nonEmpty || statsKeyCols.nonEmpty) {
           val newLive = Publish.currentVersion(root).get
           val newDir = Paths.get(root).resolve(s"v=$newLive").toString

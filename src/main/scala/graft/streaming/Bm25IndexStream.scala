@@ -62,7 +62,4 @@ object Bm25IndexStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(indexRoot: String): Option[Long] =
-    AppendStream.lastBatch(indexRoot)
 }

@@ -37,12 +37,6 @@ import graft.sources.{Catalog, Publish}
   */
 object CatalogStream {
 
-  private val BatchKey = "graft.batchId"
-
-  /** The last micro-batch id committed at `root`'s catalog, if any. */
-  def lastBatch(root: String): Option[Long] =
-    Catalog.currentMetaValue(root, BatchKey).map(_.toLong)
-
   /** Apply one micro-batch: derive every table, publish each, flip
     * the catalog once. Returns false (no writes at all) for an
     * already-committed batch id. */
@@ -51,7 +45,7 @@ object CatalogStream {
       batchId: Long,
       root: String,
       derive: Map[String, (Option[DataFrame], DataFrame) => DataFrame]): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) false
+    if (Catalog.lastBatch(root).exists(_ >= batchId)) false
     else {
       val spark = batch.sparkSession
       val live = Catalog.currentTableVersions(root)
@@ -63,7 +57,7 @@ object CatalogStream {
         name -> f(current, batch)
       }
       Catalog.publishAll(spark, root, tables,
-        Map(BatchKey -> batchId.toString)): Unit
+        Map(Publish.ReplayMarker -> batchId.toString)): Unit
       true
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.{Catalog, Wap}
+import graft.sources.{Catalog, Publish, Wap}
 
 /** S29: snapshot-grain write-audit-publish — expectations enforced on
   * a MULTI-TABLE micro-batch, in front of the single catalog flip.
@@ -36,7 +36,6 @@ import graft.sources.{Catalog, Wap}
   * refused before any derivation runs. */
 object CatalogWapStream {
 
-  private val BatchKey = "graft.batchId"
   val RejectsTable = "_rejects"
 
   /** A snapshot-grain referential expectation: every `factKeys` tuple
@@ -53,10 +52,6 @@ object CatalogWapStream {
       dim: String, dimKeys: Seq[String],
       severity: Wap.Severity.Value)
 
-  /** The last micro-batch id committed at `root`'s catalog, if any. */
-  def lastBatch(root: String): Option[Long] =
-    Catalog.currentMetaValue(root, BatchKey).map(_.toLong)
-
   /** Derive every table from the batch, audit the SET, publish the
     * survivors and the quarantine with one catalog flip. Returns
     * false (nothing at all written) for an already-committed batch;
@@ -69,7 +64,7 @@ object CatalogWapStream {
       derive: Map[String, (Option[DataFrame], DataFrame) => DataFrame],
       expectations: Map[String, Seq[Wap.Expectation]] = Map.empty,
       referential: Seq[Referential] = Nil): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) return false
+    if (Catalog.lastBatch(root).exists(_ >= batchId)) return false
     val spark = batch.sparkSession
     require(expectations.keySet.subsetOf(derive.keySet),
       s"expectations name underived tables: ${expectations.keySet -- derive.keySet}")
@@ -176,7 +171,7 @@ object CatalogWapStream {
     // the batch rejected nothing (an empty member must still publish)
     Catalog.publishAll(spark, root,
       cleaned + (RejectsTable -> rejects.repartition(1)),
-      Map(BatchKey -> batchId.toString) ++ expectMeta): Unit
+      Map(Publish.ReplayMarker -> batchId.toString) ++ expectMeta): Unit
     true
   }
 

@@ -32,13 +32,8 @@ import graft.sources.{Merge, Publish}
   */
 object CdcApplyStream {
 
-  private val BatchKey = "graft.batchId"
   val OpCol = "op"
   val DeleteOp = "delete"
-
-  /** The last micro-batch id committed at `root`, if any. */
-  def lastBatch(root: String): Option[Long] =
-    Publish.currentMetaValue(root, BatchKey).map(_.toLong)
 
   /** Apply one CDC micro-batch (rows = target columns + an `op`
     * column, "upsert" | "delete") to the published table at `root`.
@@ -51,7 +46,7 @@ object CdcApplyStream {
       keys: Seq[String],
       versionCols: Seq[Column],
       evolveSchema: Boolean = false): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(root).exists(_ >= batchId)) return false
     // newest op per key wins within the batch — a key upserted then
     // deleted in one batch must end deleted, and Merge (correctly)
     // refuses duplicate source keys
@@ -61,7 +56,7 @@ object CdcApplyStream {
       // bootstrap: nothing to match against — surviving upserts ARE the table
       Publish.publish(
         latest.where(col(OpCol) =!= DeleteOp).drop(OpCol),
-        root, Map(BatchKey -> batchId.toString)): Unit
+        root, Map(Publish.ReplayMarker -> batchId.toString)): Unit
     } else {
       // Merge commits CAS on its derived-from version; retry rebases
       // against any concurrent maintenance commit (the S20 posture)
@@ -71,7 +66,7 @@ object CdcApplyStream {
           set = dataCols.map(c => c -> Merge.s(c)).toMap,
           deleteWhen = Some(Merge.s(OpCol) === DeleteOp),
           insertWhen = Some(col(OpCol) =!= DeleteOp),
-          extraMeta = Map(BatchKey -> batchId.toString),
+          extraMeta = Map(Publish.ReplayMarker -> batchId.toString),
           // the q135 story through the stream: a change feed that
           // grew a column WIDENS the table mid-stream (upstream APIs
           // add fields; the feed should not have to stop); untouched

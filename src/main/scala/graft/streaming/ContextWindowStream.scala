@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.Publish
 import graft.text.Bpe
 
 /** S40: streaming CONTEXT-WINDOW assembly — the last hop of the
@@ -48,7 +49,7 @@ object ContextWindowStream {
       windowsRoot: String,
       shards: Int,
       budget: Long): Boolean = {
-    if (AppendStream.lastBatch(windowsRoot).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(windowsRoot).exists(_ >= batchId)) return false
     val spark = batch.sparkSession
     val mv = TokenizerStream.tokenizerVersion(tokRoot).getOrElse(
       throw new IllegalStateException(s"no published tokenizer at $tokRoot"))
@@ -83,7 +84,4 @@ object ContextWindowStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(windowsRoot: String): Option[Long] =
-    AppendStream.lastBatch(windowsRoot)
 }

@@ -27,12 +27,12 @@ import graft.sources.{Deletes, Publish}
   *
   * Exactly-once is the commit-layer argument (S15/S24): the
   * micro-batch id rides the version manifest of EVERY commit the
-  * batch makes — the delete version and, when the cadence fires, the
-  * materialize version too, so a crash between the two replays the
-  * batch into a refusal either way (materialization is idempotent to
-  * skip: the vector is already folded or still pending, and the next
-  * cadence hit folds it). A replayed tombstone batch after restart is
-  * refused before any version is written.
+  * batch makes — the delete version sets it and, when the cadence
+  * fires, the materialize commit keeps it, so a crash between the
+  * two replays the batch into a refusal either way (materialization
+  * is idempotent to skip: the vector is already folded or still
+  * pending, and the next cadence hit folds it). A replayed tombstone
+  * batch after restart is refused before any version is written.
   *
   * At 100 TB: a tombstone batch costs one broadcast semi-join over
   * the table's KEY column scan plus a sidecar rewrite (|deleted
@@ -41,12 +41,6 @@ import graft.sources.{Deletes, Publish}
   * carry deletes ([[Deletes.read]]'s pruned application).
   */
 object DeleteStream {
-
-  private val BatchKey = "graft.batchId"
-
-  /** The last micro-batch id committed at `root`, if any. */
-  def lastBatch(root: String): Option[Long] =
-    Publish.currentMetaValue(root, BatchKey).map(_.toLong)
 
   /** Apply one tombstone micro-batch (rows carry `keyCols`) to the
     * published table at `root`. Returns false (and writes nothing)
@@ -57,13 +51,13 @@ object DeleteStream {
       root: String,
       keyCols: Seq[String],
       materializeEvery: Int = 0): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(root).exists(_ >= batchId)) return false
     val spark = batch.sparkSession
     // Deletes commits CAS on its derived-from version; retry rebases
     // against any concurrent maintenance commit (the S20 posture)
     graft.sources.Txn.retry(root) { _ =>
       Deletes.deleteKeysFromPublished(spark, root, batch, keyCols,
-        extraMeta = Map(BatchKey -> batchId.toString))
+        extraMeta = Map(Publish.ReplayMarker -> batchId.toString))
     }: Unit
     if (materializeEvery > 0 && (batchId + 1) % materializeEvery == 0) {
       val liveDir = java.nio.file.Paths.get(root)
@@ -71,8 +65,7 @@ object DeleteStream {
       // an empty cadence window leaves no sidecar — nothing to fold
       if (java.nio.file.Files.exists(
           java.nio.file.Paths.get(Deletes.deletesPath(liveDir.toString))))
-        Deletes.materialize(spark, root,
-          extraMeta = Map(BatchKey -> batchId.toString)): Unit
+        Deletes.materialize(spark, root): Unit
     }
     true
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.Publish
+
 /** S45: drift-GATED admission — S44's feed-health verdict acting on
   * ingest instead of just reporting. Documents from a feed whose
   * cumulative mix has drifted past the alert threshold are routed to
@@ -54,9 +56,9 @@ object DriftAdmitStream {
       corpusRoot: String,
       quarantineRoot: String): Boolean = {
     val spark = batch.sparkSession
-    val statsDone = DriftStream.lastBatch(statsRoot).exists(_ >= batchId)
-    val corpusDone = AppendStream.lastBatch(corpusRoot).exists(_ >= batchId)
-    val quarDone = AppendStream.lastBatch(quarantineRoot).exists(_ >= batchId)
+    val statsDone = Publish.lastBatch(statsRoot).exists(_ >= batchId)
+    val corpusDone = Publish.lastBatch(corpusRoot).exists(_ >= batchId)
+    val quarDone = Publish.lastBatch(quarantineRoot).exists(_ >= batchId)
     if (statsDone && corpusDone && quarDone) return false
 
     // monitor FIRST: the verdict below must include this batch's own
@@ -100,7 +102,4 @@ object DriftAdmitStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(corpusRoot: String): Option[Long] =
-    AppendStream.lastBatch(corpusRoot)
 }

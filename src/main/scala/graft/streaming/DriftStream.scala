@@ -92,7 +92,7 @@ object DriftStream {
       refRoot: String,
       statsRoot: String,
       foldEvery: Int = 0): Boolean = {
-    if (AppendStream.lastBatch(statsRoot).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(statsRoot).exists(_ >= batchId)) return false
     val b = referenceBuckets(refRoot)
     // cutover guard: deltas hashed at different bucket counts can
     // never mix — a reference republished at a new count with old
@@ -119,14 +119,13 @@ object DriftStream {
       val folded = Publish.readVersion(spark, statsRoot,
         live.getOrElse(throw new IllegalStateException(s"nothing to fold at $statsRoot")))
         .groupBy("source", "bucket").agg(sum("n").as("n"))
-      // carry the bucket pin through maintenance alongside the replay
-      // marker — a fold must never un-pin the cutover guard
-      // (carryReplayMarker deliberately carries ONLY the marker, so
-      // the pin rides as this version's own meta)
+      // carry the bucket pin through maintenance — a fold must never
+      // un-pin the cutover guard (the commit carries ONLY the replay
+      // marker, so the pin rides as this version's own meta)
       val pin = Publish.currentMetaValue(statsRoot, BucketsPinKey)
         .map(BucketsPinKey -> _).toMap
       Publish.publishStagedIf(spark, statsRoot, expectedLive = live,
-        meta = Publish.carryReplayMarker(statsRoot, pin) ++ pin) { staging =>
+        meta = pin) { staging =>
         folded.write.parquet(staging)
       }
     }
@@ -189,7 +188,4 @@ object DriftStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(statsRoot: String): Option[Long] =
-    AppendStream.lastBatch(statsRoot)
 }

@@ -159,7 +159,7 @@ object DurableReplay {
     * end deterministic, which is exactly the claim under test.
     *
     * @param committedBatch the sink's committed-batch-id reader
-    *   (e.g. `CdcApplyStream.lastBatch(root)`) — the kill trigger */
+    *   (e.g. `Publish.lastBatch(root)`) — the kill trigger */
   def runForeachRestart(
       spark: SparkSession,
       firstParts: Seq[DataFrame],

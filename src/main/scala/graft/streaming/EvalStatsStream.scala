@@ -41,7 +41,7 @@ object EvalStatsStream {
       langCol: String,
       tokRoot: String,
       statsRoot: String): Boolean = {
-    if (AppendStream.lastBatch(statsRoot).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(statsRoot).exists(_ >= batchId)) return false
     val spark = batch.sparkSession
     val mv = TokenizerStream.tokenizerVersion(tokRoot).getOrElse(
       throw new IllegalStateException(s"no published tokenizer at $tokRoot"))
@@ -130,7 +130,4 @@ object EvalStatsStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(statsRoot: String): Option[Long] =
-    AppendStream.lastBatch(statsRoot)
 }

@@ -93,8 +93,8 @@ object ImportanceAdmitStream {
       rawRoot: String,
       corpusRoot: String): Boolean = {
     val spark = batch.sparkSession
-    val statsDone = AggTableSink.lastBatch(rawRoot).exists(_ >= batchId)
-    val corpusDone = AppendStream.lastBatch(corpusRoot).exists(_ >= batchId)
+    val statsDone = Publish.lastBatch(rawRoot).exists(_ >= batchId)
+    val corpusDone = Publish.lastBatch(corpusRoot).exists(_ >= batchId)
     if (statsDone && corpusDone) return false
 
     val grams = graft.CacheScope.persisted(

@@ -48,9 +48,6 @@ import graft.sources.Publish
   * (id, long) and grows by appends, never recomputes. */
 object MediaAdmitStream {
 
-  /** The last micro-batch id committed at `root`, if any. */
-  def lastBatch(root: String): Option[Long] = AppendStream.lastBatch(root)
-
   def applyBatch(
       batch: DataFrame,
       batchId: Long,
@@ -62,7 +59,7 @@ object MediaAdmitStream {
       hashCol: String = "dhash",
       maxHamming: Int = 2): Boolean = {
     val roots = Seq(corpusRoot, indexRoot) ++ quarantineRoot.toSeq
-    if (roots.forall(r => lastBatch(r).exists(_ >= batchId))) return false
+    if (roots.forall(r => Publish.lastBatch(r).exists(_ >= batchId))) return false
     if (batch.isEmpty) {
       // an empty tick: advance the gates of roots that exist (replay
       // hygiene), create nothing

@@ -47,9 +47,6 @@ import graft.sources.Publish
   * the same growth law as q166, now paid incrementally forever. */
 object NearDupAdmitStream {
 
-  /** The last micro-batch id committed at `root`, if any. */
-  def lastBatch(root: String): Option[Long] = AppendStream.lastBatch(root)
-
   def applyBatch(
       batch: DataFrame,
       batchId: Long,
@@ -62,7 +59,7 @@ object NearDupAdmitStream {
       bands: Int = 4,
       n: Int = 3): Boolean = {
     val roots = Seq(corpusRoot, indexRoot) ++ quarantineRoot.toSeq
-    if (roots.forall(r => lastBatch(r).exists(_ >= batchId))) return false
+    if (roots.forall(r => Publish.lastBatch(r).exists(_ >= batchId))) return false
     if (batch.isEmpty) {
       // an empty tick: advance the gates of roots that exist (replay
       // hygiene), create nothing

@@ -144,7 +144,7 @@ object PerplexityAdmitStream {
       maxCe: Double,
       modelRoot: String,
       corpusRoot: String): Boolean = {
-    if (AppendStream.lastBatch(corpusRoot).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(corpusRoot).exists(_ >= batchId)) return false
     val spark = batch.sparkSession
     val mv = modelVersion(modelRoot).getOrElse(
       throw new IllegalStateException(s"no published model at $modelRoot"))
@@ -173,7 +173,4 @@ object PerplexityAdmitStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(corpusRoot: String): Option[Long] =
-    AppendStream.lastBatch(corpusRoot)
 }

@@ -34,12 +34,8 @@ import graft.sources.{Ingest, Publish}
   */
 object PublishStream {
 
-  private val BatchKey = "graft.batchId"
-
   /** The last micro-batch id committed at `root`, if the live version
     * was written by this sink. */
-  def lastBatch(root: String): Option[Long] =
-    Publish.currentMetaValue(root, BatchKey).map(_.toLong)
 
   /** Fold one micro-batch into the live snapshot and publish the
     * result as a new version. Returns false (and does nothing) when
@@ -52,14 +48,14 @@ object PublishStream {
       root: String,
       keys: Seq[String],
       versionCols: Seq[Column]): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) false
+    if (Publish.lastBatch(root).exists(_ >= batchId)) false
     else {
       val current =
         if (Publish.currentVersion(root).isDefined)
           Publish.read(batch.sparkSession, root)
         else batch.limit(0)
       val next = Ingest.keepLatest(current, batch, keys, versionCols)
-      Publish.publish(next, root, Map(BatchKey -> batchId.toString))
+      Publish.publish(next, root, Map(Publish.ReplayMarker -> batchId.toString))
       true
     }
   }

@@ -56,8 +56,6 @@ object ReclusterStream {
         m("graft.recluster.predicted").toLong)
     }
 
-  def lastBatch(root: String): Option[Long] = AppendStream.lastBatch(root)
-
   /** Append one micro-batch (S20's hard-link append, replay refused),
     * then on cadence: stats refresh → measured verdict → conditional
     * rewrite. `dims` maps advisor dim name → physical column;
@@ -116,10 +114,10 @@ object ReclusterStream {
       val clustered = Publish.readConformed(spark, root)
         .repartitionByRange(numFiles, col(bestCol))
         .sortWithinPartitions(bestCol)
-      // the rewrite is an ordinary validated publish: the replay
-      // marker carries so maintenance never resets exactly-once
-      Publish.publish(clustered, root,
-        meta = Publish.carryReplayMarker(root, Map.empty) ++ verdict): Unit
+      // the rewrite is an ordinary validated publish: the commit
+      // keeps the replay marker, so maintenance never resets
+      // exactly-once
+      Publish.publish(clustered, root, meta = verdict): Unit
       FileStats.build(spark, liveDir, cols = statCols)
       Publish.vacuum(root, keep = retain): Unit
     }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -37,12 +37,6 @@ import graft.sources.{Compact, Deletes, Publish, Txn}
   */
 object Scd2ApplyStream {
 
-  private val BatchKey = "graft.batchId"
-
-  /** The last micro-batch id committed at `root`, if any. */
-  def lastBatch(root: String): Option[Long] =
-    Publish.currentMetaValue(root, BatchKey).map(_.toLong)
-
   /** Apply one change micro-batch (rows = keys ++ effectiveCol ++
     * attrCols) to the published SCD2 dimension at `root`. Returns
     * false (and does nothing) when `batchId` is already committed.
@@ -55,7 +49,7 @@ object Scd2ApplyStream {
       keys: Seq[String],
       effectiveCol: String,
       attrCols: Seq[String]): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(root).exists(_ >= batchId)) return false
     val spark = batch.sparkSession
     val changeCols = keys ++ (effectiveCol +: attrCols)
     val changes = batch.select(changeCols.map(col): _*)
@@ -64,7 +58,7 @@ object Scd2ApplyStream {
       Publish.publish(
         Scd.scd2History(changes, keys, effectiveCol, attrCols)
           .select(outCols(keys, attrCols).map(col): _*),
-        root, Map(BatchKey -> batchId.toString)): Unit
+        root, Map(Publish.ReplayMarker -> batchId.toString)): Unit
       return true
     }
     Txn.retry(root) { liveOpt =>
@@ -84,20 +78,13 @@ object Scd2ApplyStream {
       val carriedFiles = allFiles.filterNot(touchedSet)
       Publish.publishStagedIf(spark, root,
         expectedLive = Some(live),
-        meta = Publish.carryReplayMarker(root,
-          Map(BatchKey -> batchId.toString)) ++ Map(
-          BatchKey -> batchId.toString,
+        meta = Map(
+          Publish.ReplayMarker -> batchId.toString,
           "scd2_applied_from" -> live.toString,
           "carried" -> carriedFiles.size.toString,
           "rewritten" -> touched.size.toString),
         mergeSchema = true) { staging =>
-        val stagingPath = Paths.get(staging)
-        Files.createDirectories(stagingPath)
-        carriedFiles.foreach { name =>
-          Files.copy(Paths.get(liveDir).resolve(name),
-            stagingPath.resolve(name)): Unit
-        }
-        Deletes.carrySidecarSlice(spark, liveDir, staging, carriedFiles)
+        Publish.carry(spark, liveDir, staging, carriedFiles)
         // rewritten files fold their DV in (readFiles applies it);
         // scd2Apply carries their untouched-key rows verbatim and
         // rebuilds the touched keys' histories with the batch

@@ -36,7 +36,7 @@ object ScoreStream {
       idCol: String,
       textCol: String,
       scoresRoot: String): Boolean = {
-    if (AppendStream.lastBatch(scoresRoot).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(scoresRoot).exists(_ >= batchId)) return false
     val scored = TextOps.qualityScore(batch, idCol, textCol)
       .select(col(idCol), col("quality_score_ppm"))
     AppendStream.applyBatch(scored, batchId, scoresRoot)
@@ -68,7 +68,4 @@ object ScoreStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(scoresRoot: String): Option[Long] =
-    AppendStream.lastBatch(scoresRoot)
 }

@@ -64,17 +64,16 @@ object SegmentFreqStream {
     * version. Safe by the spec's identity (summed deltas ≡ re-count
     * — folding is just doing part of the read-side SUM early), and
     * replay-safe because the folded version CARRIES the sink's
-    * batch-id marker ([[Publish.carryReplayMarker]]) — a marker-less
-    * maintenance commit would silently reset exactly-once refusal
-    * (the S20 lesson). CAS-retried like any other writer on the
+    * batch-id marker (every commit keeps [[Publish.ReplayMarker]]) —
+    * a marker-less maintenance commit would silently reset
+    * exactly-once refusal (the S20 lesson). CAS-retried like any other writer on the
     * root. Returns the committed version. */
   def foldFrequencies(spark: SparkSession, freqRoot: String): Long =
     graft.sources.Txn.retry(freqRoot) { live =>
       val folded = Publish.readVersion(spark, freqRoot,
         live.getOrElse(throw new IllegalStateException(s"nothing to fold at $freqRoot")))
         .groupBy("seg").agg(sum("n").as("n"))
-      Publish.publishStagedIf(spark, freqRoot, expectedLive = live,
-        meta = Publish.carryReplayMarker(freqRoot, Map.empty)) { staging =>
+      Publish.publishStagedIf(spark, freqRoot, expectedLive = live) { staging =>
         folded.write.parquet(staging)
       }
     }
@@ -122,7 +121,4 @@ object SegmentFreqStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(corpusRoot: String): Option[Long] =
-    AppendStream.lastBatch(corpusRoot)
 }

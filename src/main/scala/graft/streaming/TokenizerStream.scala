@@ -153,7 +153,7 @@ object TokenizerStream {
       textCol: String,
       tokRoot: String,
       streamsRoot: String): Boolean = {
-    if (AppendStream.lastBatch(streamsRoot).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(streamsRoot).exists(_ >= batchId)) return false
     val mv = tokenizerVersion(tokRoot).getOrElse(
       throw new IllegalStateException(s"no published tokenizer at $tokRoot"))
     val encoded = encode(batch.sparkSession, batch, idCol, textCol,
@@ -176,9 +176,6 @@ object TokenizerStream {
       }
     checkpointLocation.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
-
-  def lastBatch(streamsRoot: String): Option[Long] =
-    AppendStream.lastBatch(streamsRoot)
 
   private def collectMerges(mergeTable: DataFrame): Seq[(String, String)] =
     mergeTable.orderBy("round").collect()

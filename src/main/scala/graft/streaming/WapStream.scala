@@ -33,12 +33,6 @@ import graft.sources.{Publish, Wap}
   * refused before any write. */
 object WapStream {
 
-  private val BatchKey = "graft.batchId"
-
-  /** The last micro-batch id committed at `root`, if any. */
-  def lastBatch(root: String): Option[Long] =
-    Publish.currentMetaValue(root, BatchKey).map(_.toLong)
-
   /** Audit-and-append one micro-batch. Returns false (nothing
     * written) when `batchId` is already committed — the replay path.
     * Throws [[Wap.AuditFailed]] (nothing written) on a fail-severity
@@ -48,9 +42,9 @@ object WapStream {
       batchId: Long,
       root: String,
       expectations: Seq[Wap.Expectation]): Boolean = {
-    if (lastBatch(root).exists(_ >= batchId)) return false
+    if (Publish.lastBatch(root).exists(_ >= batchId)) return false
     Wap.appendWithExpectations(batch.sparkSession, root, batch,
-      expectations, Map(BatchKey -> batchId.toString)): Unit
+      expectations, Map(Publish.ReplayMarker -> batchId.toString)): Unit
     true
   }
 

@@ -85,7 +85,7 @@ class AppendStreamSpec extends SparkSpec {
         "maintenance did not collapse the per-batch fragmentation")
       // the batch-id marker survived the compaction version — replay
       // of the last batch is still refused
-      assert(AppendStream.lastBatch(root).contains(5L))
+      assert(Publish.lastBatch(root).contains(5L))
       assert(!AppendStream.applyBatch(
         Seq((9999L, 1L)).toDF("k", "x"), 5L, root))
       // vacuum kept only live + retention window

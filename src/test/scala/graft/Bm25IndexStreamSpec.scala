@@ -56,7 +56,7 @@ class Bm25IndexStreamSpec extends SparkSpec {
     val v = Publish.currentVersion(root)
     assert(!Bm25IndexStream.applyBatch(b1, 1L, "doc_id", "text", root))
     assert(Publish.currentVersion(root) == v)
-    assert(Bm25IndexStream.lastBatch(root).contains(2L))
+    assert(Publish.lastBatch(root).contains(2L))
   }
 
   test("S37r: kill-and-restart resumes index maintenance exactly once") {

@@ -71,7 +71,7 @@ class CardStreamSpec extends SparkSpec {
     } finally query.stop()
 
     // replay: refused by the batch-id gate before any arithmetic
-    val lastId = graft.streaming.AggTableSink.lastBatch(root).get
+    val lastId = Publish.lastBatch(root).get
     val vLive = Publish.currentVersion(root)
     assert(!CardStream.applyBatch(Seq(all.head).toDF(),
       lastId, root, "doc_id", "text", "source", "lang"))
@@ -93,7 +93,7 @@ class CardStreamSpec extends SparkSpec {
       (stream, ckpt) => CardStream.start(stream, root,
         "doc_id", "text", "source", "lang",
         checkpointLocation = Some(ckpt)),
-      () => graft.streaming.AggTableSink.lastBatch(root))
+      () => Publish.lastBatch(root))
     assert(asCard(CardStream.card(spark, root, "source", "lang")) ==
       batchCard(all.toSeq.toDF()),
       "post-restart card diverges from the batch card")

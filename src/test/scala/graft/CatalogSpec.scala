@@ -28,8 +28,12 @@ class CatalogSpec extends SparkSpec {
   test("publishAll round-trips; a torn second publish is invisible until commit") {
     val root = Scratch.tempDir("graft_catalog")
     val a1 = df("x" -> 1L); val b1 = df("y" -> 10L)
-    val v1 = Catalog.publishAll(spark, root, Map("a" -> a1, "b" -> b1))
+    // a meta value with a newline, a tab and a quote reads back as is
+    val note = "a\nb\t\"c"
+    val v1 = Catalog.publishAll(spark, root, Map("a" -> a1, "b" -> b1), Map("note" -> note))
     assert(v1 == 1L)
+    assert(Catalog.currentMetaValue(root, "note").contains(note),
+      s"catalog meta read back as ${Catalog.currentMetaValue(root, "note")}")
     assert(rows(Catalog.read(spark, root, "a")) == rows(a1))
     assert(rows(Catalog.read(spark, root, "b")) == rows(b1))
 
@@ -144,5 +148,12 @@ class CatalogSpec extends SparkSpec {
       .agg(sum("total")).collect()(0).getDecimal(0)
     assert(su.compareTo(st) == 0 &&
       Catalog.read(spark, root, "by_type").where(col("t") === "c").count() == 1)
+
+    // a publishAll from outside the stream (no meta) keeps the marker
+    Catalog.publishAll(spark, root, Map("by_user" -> Catalog.read(spark, root, "by_user")))
+    assert(Catalog.lastBatch(root).contains(3L),
+      s"catalog replay marker reset: ${Catalog.lastBatch(root)}")
+    assert(!graft.streaming.CatalogStream.applyBatch(extra, 3L, root, derive),
+      "replayed batch was not refused after an outside publishAll")
   }
 }

@@ -81,7 +81,7 @@ class CatalogWapStreamSpec extends SparkSpec {
         assert(Catalog.readAsOf(spark, root, CatalogWapStream.RejectsTable,
           Catalog.snapshotTimeMs(root, 1L)).count() == 2)
       } finally query.stop()
-      assert(CatalogWapStream.lastBatch(root).contains(1L))
+      assert(Catalog.lastBatch(root).contains(1L))
       // replay refused before any derivation
       val before = Catalog.currentVersion(root)
       assert(!CatalogWapStream.applyBatch(
@@ -111,7 +111,7 @@ class CatalogWapStreamSpec extends SparkSpec {
       // versions staged (the clean dims must not have published)
       assert(Catalog.currentVersion(root) == snapBefore)
       assert(memberVersions(root, "facts") == factsVersions)
-      assert(CatalogWapStream.lastBatch(root).contains(0L))
+      assert(Catalog.lastBatch(root).contains(0L))
     } finally graft.sources.Sinks.deleteRecursively(Paths.get(root))
   }
 
@@ -242,7 +242,7 @@ class CatalogWapStreamSpec extends SparkSpec {
       // (member version dirs staged by the dead writer are invisible
       // garbage — readers resolve pins, never directory listings)
       assert(Catalog.currentVersion(root) == snapBefore)
-      assert(CatalogWapStream.lastBatch(root).contains(0L))
+      assert(Catalog.lastBatch(root).contains(0L))
       assert(Catalog.read(spark, root, "facts")
         .select("order_id").as[Long].collect().toSet == factsBefore)
 
@@ -252,7 +252,7 @@ class CatalogWapStreamSpec extends SparkSpec {
         Seq(StarRow(2, 11, 50, 1)).toDF(), 1L, root, derivations, exps, refs))
       assert(Catalog.read(spark, root, "facts")
         .select("order_id").as[Long].collect().toSet == Set(1L, 2L))
-      assert(CatalogWapStream.lastBatch(root).contains(1L))
+      assert(Catalog.lastBatch(root).contains(1L))
       // and the referenced-set vacuum reaps the dead writer's orphan
       // member versions without touching any pinned one
       Catalog.expireSnapshots(root, keepLast = 2): Unit
@@ -277,14 +277,14 @@ class CatalogWapStreamSpec extends SparkSpec {
         (stream, ckpt) => CatalogWapStream.start(
           stream, root, derivations, exps, refs,
           checkpointLocation = Some(ckpt)),
-        () => CatalogWapStream.lastBatch(root))
+        () => Catalog.lastBatch(root))
       // batch-sequential outcome whatever the kill interrupted: 2
       // dropped (amount), 4 dropped (no dim), 1/3/5 admitted
       assert(Catalog.read(spark, root, "facts")
         .select("order_id").as[Long].collect().toSet == Set(1L, 3L, 5L))
       assert(Catalog.read(spark, root, "dims")
         .select("cust").as[Long].collect().toSet == Set(10L, 11L, 12L))
-      assert(CatalogWapStream.lastBatch(root).contains(3L))
+      assert(Catalog.lastBatch(root).contains(3L))
       // one snapshot per batch — a replayed batch would inflate
       assert(Catalog.currentVersion(root).contains(4L))
     } finally graft.sources.Sinks.deleteRecursively(Paths.get(root))

@@ -43,7 +43,7 @@ class CdcApplySpec extends SparkSpec {
       val vBefore = Publish.currentVersion(root)
       assert(!CdcApplyStream.applyBatch(b1, 1L, root, Seq("id"), Seq(col("seq"))))
       assert(Publish.currentVersion(root) == vBefore)
-      assert(CdcApplyStream.lastBatch(root).contains(1L))
+      assert(Publish.lastBatch(root).contains(1L))
     } finally {
       graft.sources.Sinks.deleteRecursively(Paths.get(root))
     }
@@ -121,7 +121,7 @@ class CdcApplySpec extends SparkSpec {
         (stream, ckpt) => CdcApplyStream.start(
           stream, root, Seq("id"), Seq(col("seq")),
           checkpointLocation = Some(ckpt)),
-        () => CdcApplyStream.lastBatch(root))
+        () => Publish.lastBatch(root))
 
       val expect = ((6L to 9L) ++ (11L to 20L)).map(i => (i, i * 10)).toSet ++
         Set((10L, 2000L), (30L, 300L))
@@ -131,7 +131,7 @@ class CdcApplySpec extends SparkSpec {
       // exactly-once accounting: bootstrap + one merge per batch 1–4,
       // whatever the kill interrupted — a replayed batch that
       // re-committed would inflate the version count
-      assert(CdcApplyStream.lastBatch(root).contains(4L))
+      assert(Publish.lastBatch(root).contains(4L))
       assert(Publish.listVersions(Paths.get(root)).sorted == (1L to 5L),
         s"versions=${Publish.listVersions(Paths.get(root)).sorted}")
     } finally {
@@ -168,7 +168,7 @@ class CdcApplySpec extends SparkSpec {
         .as[(Long, Long)].collect().toSet
       assert(got == expect, s"missing=${expect -- got} extra=${got -- expect}")
       // versions committed one per non-empty batch, ids recorded
-      assert(CdcApplyStream.lastBatch(root).contains(2L))
+      assert(Publish.lastBatch(root).contains(2L))
       // deletes landed copy-on-write: no DV sidecar on the live version
       val live = Publish.currentVersion(root).get
       assert(!Files.exists(Paths.get(

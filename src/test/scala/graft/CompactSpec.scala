@@ -118,6 +118,10 @@ class CompactSpec extends SparkSpec {
       bigHashes.foreach { case (name, h) =>
         assert(sha(v2Dir.resolve(name)) == h, s"carried file $name rewritten")
       }
+      // ...because they are the same files: the carry hard-links
+      val linked = bigFiles.head._1
+      assert(Files.isSameFile(v1Dir.resolve(linked), v2Dir.resolve(linked)),
+        s"carried file $linked is a copy, not a link")
       // fragments collapsed: total files = 2 carried + ~1 bin
       val v2Files = Compact.listDataFiles(v2Dir.toString)
       assert(v2Files.size < v1Files.size / 2,

@@ -69,7 +69,7 @@ class ContextWindowStreamSpec extends SparkSpec {
     assert(!ContextWindowStream.applyBatch(b1, 1L, "doc_id", "text",
       tokRoot, winRoot, shards = 1, budget = 3L))
     assert(Publish.currentVersion(winRoot) == v)
-    assert(ContextWindowStream.lastBatch(winRoot).contains(1L))
+    assert(Publish.lastBatch(winRoot).contains(1L))
   }
 
   test("cutover: later batches assemble under the new tokenizer version, per-row pinned") {

@@ -56,7 +56,7 @@ class DeleteStreamSpec extends SparkSpec {
       assert(!DeleteStream.applyBatch(
         Seq(Tomb(3)).toDF(), 0L, root, Seq("id")))
       assert(Publish.currentVersion(root) == vBefore)
-      assert(DeleteStream.lastBatch(root).contains(0L))
+      assert(Publish.lastBatch(root).contains(0L))
     } finally graft.sources.Sinks.deleteRecursively(Paths.get(root))
   }
 
@@ -77,7 +77,7 @@ class DeleteStreamSpec extends SparkSpec {
       // still serves exactly the surviving rows
       assert(!Files.exists(Paths.get(Deletes.deletesPath(liveDir))))
       assert(served(root) == (1L to 60L).toSet -- (1L to 5L) -- (21L to 25L))
-      assert(DeleteStream.lastBatch(root).contains(1L))
+      assert(Publish.lastBatch(root).contains(1L))
     } finally graft.sources.Sinks.deleteRecursively(Paths.get(root))
   }
 
@@ -104,11 +104,11 @@ class DeleteStreamSpec extends SparkSpec {
         (stream, ckpt) => DeleteStream.start(
           stream, root, Seq("id"), materializeEvery = 2,
           checkpointLocation = Some(ckpt)),
-        () => DeleteStream.lastBatch(root))
+        () => Publish.lastBatch(root))
 
       assert(served(root) == (51L to 100L).toSet,
         s"unexpected survivors: ${served(root) -- (51L to 100L).toSet}")
-      assert(DeleteStream.lastBatch(root).contains(4L))
+      assert(Publish.lastBatch(root).contains(4L))
       // exactly-once accounting: seed + 5 DV commits + 2 materialize
       // commits = versions 1..8 — UNLESS the kill landed between
       // batch 1's DV commit and its materialize, where the replayed
@@ -154,7 +154,7 @@ class DeleteStreamSpec extends SparkSpec {
       assert(served(root) == expect)
       // plain Publish.read without DV application would OVER-serve
       // only if a sidecar is pending; after the cadence the two agree
-      assert(DeleteStream.lastBatch(root).contains(2L))
+      assert(Publish.lastBatch(root).contains(2L))
     } finally graft.sources.Sinks.deleteRecursively(Paths.get(root))
   }
 }

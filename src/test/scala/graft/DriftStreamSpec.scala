@@ -56,7 +56,7 @@ class DriftStreamSpec extends SparkSpec {
       "maintained drift view diverged from the one-shot monitor")
 
     // replay: refused untouched
-    val lastId = DriftStream.lastBatch(statsRoot).get
+    val lastId = Publish.lastBatch(statsRoot).get
     val v = Publish.currentVersion(statsRoot)
     assert(!DriftStream.applyBatch(
       Seq((1L, "alpha", "srcX")).toDF("doc_id", "text", "source"),
@@ -172,7 +172,7 @@ class DriftStreamSpec extends SparkSpec {
       parts.take(2), parts.drop(2),
       (stream, ckpt) => DriftStream.start(stream, "text", "source",
         refRoot, statsRoot, checkpointLocation = Some(ckpt)),
-      () => DriftStream.lastBatch(statsRoot))
+      () => Publish.lastBatch(statsRoot))
     val want = SparkEntry.q208SourceDrift(spark, SfDir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
     assert(view(statsRoot, refRoot) == want,

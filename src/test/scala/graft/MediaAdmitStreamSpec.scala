@@ -85,7 +85,7 @@ class MediaAdmitStreamSpec extends SparkSpec {
       "no cross-batch quarantine — the planted clusters never crossed a batch?")
 
     // replay: every root refuses, no version moves
-    val lastId = MediaAdmitStream.lastBatch(corpusRoot).get
+    val lastId = Publish.lastBatch(corpusRoot).get
     val vs = Seq(corpusRoot, indexRoot, quarRoot).map(Publish.currentVersion)
     assert(!MediaAdmitStream.applyBatch(
       all.takeRight(5).toSeq.toDF("doc_id", "media_type", "payload"), lastId,
@@ -109,7 +109,7 @@ class MediaAdmitStreamSpec extends SparkSpec {
       parts.take(2), parts.drop(2),
       (stream, ckpt) => MediaAdmitStream.start(stream, corpusRoot, indexRoot,
         quarantineRoot = Some(quarRoot), checkpointLocation = Some(ckpt)),
-      () => MediaAdmitStream.lastBatch(corpusRoot))
+      () => Publish.lastBatch(corpusRoot))
     checkInvariants(corpusRoot, indexRoot, quarRoot, all)
     // exactly-once at the row grain: nothing admitted or quarantined twice
     val corpusN = Publish.read(spark, corpusRoot).count()

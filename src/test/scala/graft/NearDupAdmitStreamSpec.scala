@@ -84,7 +84,7 @@ class NearDupAdmitStreamSpec extends SparkSpec {
       "no cross-batch quarantine — the split has no planted near-dups?")
 
     // replay: every root refuses, no version moves
-    val lastId = NearDupAdmitStream.lastBatch(corpusRoot).get
+    val lastId = Publish.lastBatch(corpusRoot).get
     val vs = Seq(corpusRoot, indexRoot, quarRoot).map(Publish.currentVersion)
     assert(!NearDupAdmitStream.applyBatch(
       all.takeRight(5).toSeq.toDF("doc_id", "text"), lastId,
@@ -108,7 +108,7 @@ class NearDupAdmitStreamSpec extends SparkSpec {
       parts.take(2), parts.drop(2),
       (stream, ckpt) => NearDupAdmitStream.start(stream, corpusRoot, indexRoot,
         quarantineRoot = Some(quarRoot), checkpointLocation = Some(ckpt)),
-      () => NearDupAdmitStream.lastBatch(corpusRoot))
+      () => Publish.lastBatch(corpusRoot))
     checkInvariants(corpusRoot, indexRoot, quarRoot, all)
     // exactly-once at the row grain: nothing admitted or quarantined twice
     val corpusN = Publish.read(spark, corpusRoot).count()

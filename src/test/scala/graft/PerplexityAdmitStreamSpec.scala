@@ -69,7 +69,7 @@ class PerplexityAdmitStreamSpec extends SparkSpec {
     assert(!PerplexityAdmitStream.applyBatch(b2, 2L, "doc_id", "text",
       MaxCe, modelRoot, corpRoot))
     assert(Publish.currentVersion(corpRoot) == corpV)
-    assert(PerplexityAdmitStream.lastBatch(corpRoot).contains(2L))
+    assert(Publish.lastBatch(corpRoot).contains(2L))
   }
 
   test("torn model setup (vocab published, crash before bigrams) completes on retry") {

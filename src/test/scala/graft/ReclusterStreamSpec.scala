@@ -79,7 +79,7 @@ class ReclusterStreamSpec extends SparkSpec {
     } finally query.stop()
 
     // replay refused before any write, maintenance marker intact
-    assert(ReclusterStream.lastBatch(root).contains(5L))
+    assert(Publish.lastBatch(root).contains(5L))
     val before = Publish.currentVersion(root)
     assert(!ReclusterStream.applyBatch(
       Seq(ReclRow(1, 1)).toDF(), 5L, root, 3, dims, workload(), layouts, 2L))
@@ -101,11 +101,11 @@ class ReclusterStreamSpec extends SparkSpec {
         stream.repartition(1), root, adviseEvery = 3, dims, workload(),
         layouts, amortizeRuns = 2L, numFiles = 4,
         checkpointLocation = Some(ckpt)),
-      () => ReclusterStream.lastBatch(root))
+      () => Publish.lastBatch(root))
     // batch-sequential outcome whatever the kill interrupted: the
     // recluster tick fired once (batch 2), the second tick kept, and
     // every row of all six batches survives exactly once
-    assert(ReclusterStream.lastBatch(root).contains(5L))
+    assert(Publish.lastBatch(root).contains(5L))
     val v = ReclusterStream.lastVerdict(root).get
     assert(v._1 == "keep", s"post-restart fixed point must hold: $v")
     // the rewrite's manifest verdict survives the restart (the live

@@ -91,7 +91,7 @@ class Scd2ApplyStreamSpec extends SparkSpec {
       assert(!Scd2ApplyStream.applyBatch(
         b1.toDF(), 1L, root, Seq("wallet"), "day", Seq("tier")))
       assert(Publish.currentVersion(root) == vBefore)
-      assert(Scd2ApplyStream.lastBatch(root).contains(1L))
+      assert(Publish.lastBatch(root).contains(1L))
     } finally {
       graft.sources.Sinks.deleteRecursively(Paths.get(root))
     }
@@ -119,7 +119,7 @@ class Scd2ApplyStreamSpec extends SparkSpec {
       assert(dimSet(root) == recompute(b0 ++ b1 ++ b2))
       // one version per micro-batch
       assert(Publish.currentVersion(root).contains(3L))
-      assert(Scd2ApplyStream.lastBatch(root).contains(2L))
+      assert(Publish.lastBatch(root).contains(2L))
       // wallet 1: low → high → mid, three open/closed versions
       assert(Publish.read(spark, root)
         .where(col("wallet") === 1).count() == 3)

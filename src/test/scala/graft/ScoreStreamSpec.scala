@@ -44,7 +44,7 @@ class ScoreStreamSpec extends SparkSpec {
       "maintained plan diverged from one-shot phaseOrder")
 
     // replay: refused before any write, version pinned
-    val lastId = ScoreStream.lastBatch(scoresRoot).get
+    val lastId = Publish.lastBatch(scoresRoot).get
     val v = Publish.currentVersion(scoresRoot)
     assert(!ScoreStream.applyBatch(
       all.take(3).toDF("doc_id", "text"), lastId, "doc_id", "text", scoresRoot))
@@ -62,7 +62,7 @@ class ScoreStreamSpec extends SparkSpec {
       parts.take(2), parts.drop(2),
       (stream, ckpt) => ScoreStream.start(stream, "doc_id", "text",
         scoresRoot, checkpointLocation = Some(ckpt)),
-      () => ScoreStream.lastBatch(scoresRoot))
+      () => Publish.lastBatch(scoresRoot))
     // exactly-once at the row grain and the plan identity end to end
     assert(Publish.read(spark, scoresRoot).count() == all.length.toLong,
       "row-grain duplication after restart")

@@ -241,8 +241,8 @@ class StreamingSpec extends SparkSpec {
       // batch id riding the manifest's atomic flip
       assert(v1.isDefined && Publish.currentVersion(root).exists(_ > v1.get),
         "second batch must publish a new version")
-      assert(PublishStream.lastBatch(root).contains(1L),
-        s"live manifest must record the last batch id, got ${PublishStream.lastBatch(root)}")
+      assert(Publish.lastBatch(root).contains(1L),
+        s"live manifest must record the last batch id, got ${Publish.lastBatch(root)}")
       assert(afterFirst <= Publish.read(spark, root).count(),
         "snapshot shrank across batches")
     } finally query.stop()
@@ -388,7 +388,7 @@ class StreamingSpec extends SparkSpec {
     // replay: addition is NOT idempotent, so exactly-once must come
     // from the commit layer — the replayed id is refused before any
     // arithmetic, and the table (and version pointer) do not move
-    val lastId = AggTableSink.lastBatch(root).get
+    val lastId = Publish.lastBatch(root).get
     val vLive = Publish.currentVersion(root).get
     val replay = withDecimal(chunks.last
       .map(e => (e.event_id, e.event_type, e.user_id, e.ts, e.value))

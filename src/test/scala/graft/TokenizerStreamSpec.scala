@@ -77,7 +77,7 @@ class TokenizerStreamSpec extends SparkSpec {
     assert(!TokenizerStream.applyBatch(b1, 1L, "doc_id", "text",
       tokRoot, streamsRoot))
     assert(Publish.currentVersion(streamsRoot) == v)
-    assert(TokenizerStream.lastBatch(streamsRoot).contains(1L))
+    assert(Publish.lastBatch(streamsRoot).contains(1L))
   }
 
   test("torn tokenizer setup (vocab published, crash before merges) completes on retry") {

@@ -113,8 +113,8 @@ class TxnSpec extends SparkSpec {
       def batch(i: Long) = ((i * 100 + 1) to (i * 100 + 20)).map(j => (j, j)).toDF("id", "n")
       assert(AppendStream.applyBatch(batch(0), 0L, root))
       val start = new CountDownLatch(1)
-      // the maintainer knows NOTHING about the stream — no extraMeta:
-      // the replay marker must survive through carryReplayMarker
+      // the maintainer knows NOTHING about the stream — no meta: the
+      // replay marker must survive because the commit carries it
       val maintainer = new Thread(() => {
         start.await()
         (1 to 3).foreach { _ =>
@@ -135,9 +135,16 @@ class TxnSpec extends SparkSpec {
       val expect = (0L to 5L).flatMap(i => (i * 100 + 1) to (i * 100 + 20)).toSet
       assert(got == expect, s"lost rows: missing=${expect -- got} extra=${got -- expect}")
       // the marker survived three marker-less maintenance commits
-      assert(AppendStream.lastBatch(root).contains(5L),
-        s"replay marker reset by maintenance: ${AppendStream.lastBatch(root)}")
+      assert(Publish.lastBatch(root).contains(5L),
+        s"replay marker reset by maintenance: ${Publish.lastBatch(root)}")
       assert(!AppendStream.applyBatch(batch(3), 3L, root), "replay must refuse")
+
+      // a FULL compaction from outside the stream keeps the marker too
+      Compact.compactPublished(spark, root, targetBytes = 1L << 20): Unit
+      assert(Publish.lastBatch(root).contains(5L),
+        s"replay marker reset by a full compaction: ${Publish.lastBatch(root)}")
+      assert(!AppendStream.applyBatch(batch(3), 3L, root),
+        "replay must refuse after a full compaction")
     } finally graft.sources.Sinks.deleteRecursively(Paths.get(root))
   }
 

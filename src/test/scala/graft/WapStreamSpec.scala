@@ -58,7 +58,7 @@ class WapStreamSpec extends SparkSpec {
             Paths.get(root).resolve("v=1").toString))
           .select("id").as[Long].collect().toSeq == Seq(2L))
       } finally query.stop()
-      assert(WapStream.lastBatch(root).contains(1L))
+      assert(Publish.lastBatch(root).contains(1L))
       // replay refused before any write
       val vBefore = Publish.currentVersion(root)
       assert(!WapStream.applyBatch(
@@ -83,7 +83,7 @@ class WapStreamSpec extends SparkSpec {
       // restart REPLAYS the batch into the same audit — a gate, not
       // a skip
       assert(Publish.currentVersion(root) == vBefore)
-      assert(WapStream.lastBatch(root).contains(0L))
+      assert(Publish.lastBatch(root).contains(0L))
       assert(Publish.read(spark, root).count() == 1L)
     } finally graft.sources.Sinks.deleteRecursively(Paths.get(root))
   }
@@ -102,14 +102,14 @@ class WapStreamSpec extends SparkSpec {
       graft.streaming.DurableReplay.runForeachRestart(spark, first, second,
         (stream, ckpt) => WapStream.start(
           stream, root, exps, checkpointLocation = Some(ckpt)),
-        () => WapStream.lastBatch(root))
+        () => Publish.lastBatch(root))
       // whatever the kill interrupted: clean rows all present, every
       // violation quarantined in its own batch's version, one version
       // per batch
       assert(Publish.read(spark, root).select("id").as[Long]
         .collect().toSet == Set(1L, 3L, 5L, 7L))
       assert(Publish.listVersions(Paths.get(root)).sorted == (1L to 4L))
-      assert(WapStream.lastBatch(root).contains(3L))
+      assert(Publish.lastBatch(root).contains(3L))
       assert(Wap.rejects(spark, root).select("id").as[Long]
         .collect().toSeq == Seq(6L))
     } finally graft.sources.Sinks.deleteRecursively(Paths.get(root))
